@@ -99,7 +99,9 @@ def main():
 
     if not os.path.isfile(LIBRARY_MARKER):
         fail("library sources not found next to the benchmark; run from a full checkout")
-    env = dict(os.environ, SPARK_HOME=spark_home())
+    # MALLOC_ARENA_MAX bounds the native allocator's per-thread arenas, so
+    # that peak RSS does not depend on which threads happened to allocate.
+    env = dict(os.environ, SPARK_HOME=spark_home(), MALLOC_ARENA_MAX="2")
     build(env)
     with open(CLASSPATH_FILE) as f:
         classpath = f.read().strip()
@@ -110,8 +112,15 @@ def main():
     os.makedirs(tmp, exist_ok=True)
     trace_out = os.path.join(TARGET, "traces", f"{a.workload}-seed{a.seed}.json")
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get("JAVA_HOME") else "java"
+    # JVM settings that keep runs steady (README, "JVM settings"): C1 only,
+    # so that background JIT compilation does not dominate CPU time; a fixed
+    # heap touched at start, so that peak RSS does not follow the collector's
+    # timing; two processors (Spark local[2]), so that task threads, driver,
+    # compiler and collector do not contend for the cores; Parallel GC, which
+    # has no concurrent threads.
     cmd = [java] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
-        "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
+        "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch", "-XX:TieredStopAtLevel=1",
+        "-XX:ActiveProcessorCount=2", "-XX:+UseParallelGC", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
         f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",
         "-cp", classpath, "perfbench.Main",
         "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),

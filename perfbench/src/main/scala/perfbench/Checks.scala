@@ -24,6 +24,13 @@ object Checks {
       case (m, n) if n > limit => s"mention '$m' returned $n rows, limit $limit"
     }
 
+  /** The `links` stage against the links the benchmark's copy of the
+    * pipeline linker config gives, both as `digest`s of (mention, entity). */
+  def linkerConfigDrift(stage: (Long, Long), probe: (Long, Long)): Seq[String] =
+    if (stage == probe) Nil
+    else Seq(s"links stage has ${stage._1} rows, a re-run with Configs.pipeline gives " +
+      s"${probe._1} (or other rows): Configs.pipeline no longer matches Pipeline.run's default")
+
   /** Order-insensitive digest of a table: (rows, XOR of row hashes). Map
     * columns are hashed as their sorted entries, since map equality does
     * not depend on entry order. */

@@ -65,6 +65,9 @@ final case class Result(lines: Seq[String], json: String)
 /** Spark work of one traced request. */
 final case class ReqTrace(jobs: Long, tasks: Long, shuffleMb: Double)
 
+/** One measured request; `trace` is set when it ran traced. */
+final case class Req(r: Request, trace: Option[ReqTrace])
+
 /** Listener groups and dump-scan rows of one traced `Pipeline.run`. */
 final case class StageSnapshot(groups: Map[String, GroupAgg], wall: Double, dumpScanRows: Long)
 
@@ -114,8 +117,10 @@ final class Runner(spark: SparkSession, a: Args) {
   // ------------------------------------------------------------ pipeline
 
   /** pipeline: `Pipeline.run` operations in the window (a batch job pays
-    * its JVM's cold start on every run, so there is no warm-up), then
-    * lookup requests against the index the last operation built. */
+    * its JVM's cold start on every run, so there is no warm-up), then one
+    * lookup request against the index the last operation built: the first
+    * answer after a build. `Pipeline.run` has just run the linker, so it
+    * needs no warm-up request. */
   private def pipelineRun(): Unit = {
     val setups = (0 until Main.Setups).map { i =>
       val t0 = now
@@ -143,7 +148,8 @@ final class Runner(spark: SparkSession, a: Args) {
     val last = ops.last._1
     val idx = w.index(last)
     progress("index derived")
-    val reqs = requests(idx, w.sizes.probeRequests, byTime = false)
+    // a traced run warms up too, so that its overhead pairs are both warm
+    val reqs = requests(idx, warmup = a.trace, least = 1, byTime = false)
     progress("requests done")
 
     val walls = ops.map(_._1.wall).toSeq
@@ -152,15 +158,20 @@ final class Runner(spark: SparkSession, a: Args) {
     e2e("ingest_entities_per_s") = (Stats.median(walls.map(w.dumpRows / _)), "entities/s")
     e2e("link_precision") = (Stats.median(ops.map(_._2).toSeq), "ratio")
     e2e("link_recall") = (Stats.median(ops.map(_._3).toSeq), "ratio")
-    lookupE2e(reqs)
+    lookupE2e(reqs, warmedUp = a.trace)
     e2e("cpu_s") = (Stats.median(ops.map(_._1.cpu).toSeq), "s")
     e2e("stored_mb") = (Stats.median(ops.map(_._4).toSeq), "MB")
     e2e("peak_rss_mb") = (Jvm.peakRssMb, "MB")
     notes += f"window: ${ops.size} operations of ${w.sizes.pages} pages and ${w.dumpRows} dump entities " +
       f"(${walls.map(x => f"$x%.2f").mkString(", ")} s)"
 
-    if (a.trace)
-      perLayer(stages.get, w.traced(true)(w.linksProbe(last.out.mentions, idx.tables, lookupMode = false)), reqs)
+    if (a.trace) {
+      val (links, probeLinks) =
+        w.traced(true)(w.linksProbe(last.out.mentions, idx.tables, lookupMode = false))
+      w.checked(Checks.linkerConfigDrift(
+        Checks.digest(last.out.links.select("mention_norm", "qid")), probeLinks.get))
+      perLayer(stages.get, links, reqs)
+    }
   }
 
   // -------------------------------------------------------------- lookup
@@ -184,7 +195,7 @@ final class Runner(spark: SparkSession, a: Args) {
     notes += "table digests (rows/xor of row hashes): " +
       digests.toSeq.sortBy(_._1).map { case (t, (n, x)) => f"$t=$n/$x%016x" }.mkString(" ")
     progress("checked")
-    val reqs = requests(idx, Int.MaxValue, byTime = true)
+    val reqs = requests(idx, warmup = true, least = 1, byTime = true)
     progress("requests done")
 
     e2e("setup_s") = (setup, "s")
@@ -192,8 +203,8 @@ final class Runner(spark: SparkSession, a: Args) {
     e2e("ingest_entities_per_s") = (w.dumpRows / op.wall, "entities/s")
     e2e("link_precision") = (p, "ratio")
     e2e("link_recall") = (r, "ratio")
-    lookupE2e(reqs)
-    e2e("cpu_s") = (Stats.median(reqs.map(_._1.cpu)), "s")
+    lookupE2e(reqs, warmedUp = true)
+    e2e("cpu_s") = (Stats.median(reqs.map(_.r.cpu)), "s")
     e2e("stored_mb") = (mb(bytesUnder(op.dir)), "MB")
     e2e("peak_rss_mb") = (Jvm.peakRssMb, "MB")
 
@@ -201,46 +212,54 @@ final class Runner(spark: SparkSession, a: Args) {
       import spark.implicits._
       val mentions = new w.MentionStream(a.seed).batch(w.sizes.batch).map(_.surface)
         .toDF("surface").select(graft.core.Text.cleanStr($"surface").as("mention_norm"))
-      perLayer(stages.get, w.traced(true)(w.linksProbe(mentions, idx.tables, lookupMode = true)), reqs)
+      perLayer(stages.get, w.traced(true)(w.linksProbe(mentions, idx.tables, lookupMode = true))._1, reqs)
     }
   }
 
   // ------------------------------------------------------------ requests
 
-  /** `n` requests, or with `byTime` requests until the window closes and
-    * at least two. Traced runs alternate plain and traced requests. */
-  private def requests(idx: Index, n: Int, byTime: Boolean): Seq[(Request, Boolean, Option[ReqTrace])] = {
+  /** With `warmup`, one untimed request of a full batch first (the first
+    * request in a JVM compiles the lookup path and runs slower). Then the measured
+    * requests. Untraced: `least` requests, or with `byTime` requests
+    * until the window closes and at least `least`. Traced: two plain/traced pairs in alternating order, so that
+    * a warm-up trend falls on both sides of the overhead figure. */
+  private def requests(idx: Index, warmup: Boolean, least: Int, byTime: Boolean): Seq[Req] = {
     val stream = new w.MentionStream(a.seed)
-    val out = mutable.ArrayBuffer.empty[(Request, Boolean, Option[ReqTrace])]
-    // a traced run needs a plain and a traced request after the cold one
-    val least = if (a.trace) 3 else if (byTime) 2 else n
-    val t0 = now
-    while (out.size < least || (byTime && since(t0) < a.seconds)) {
-      val traced = a.trace && out.size % 2 == 1
+    if (warmup) {
+      val warm = w.request(idx, stream.batch(w.sizes.batch))
+      progress(f"warm-up request took ${warm.wall}%.2f s")
+    }
+    def one(traced: Boolean): Req = {
       if (traced) w.recorder.reset()
       val r = w.traced(traced)(w.request(idx, stream.batch(w.sizes.batch)))
-      progress(f"request ${out.size} took ${r.wall}%.2f s")
-      val t = if (traced) Some(ReqTrace(w.recorder.jobs, w.recorder.tasks, w.recorder.shuffleMb)) else None
-      out += ((r, traced, t))
+      progress(f"request took ${r.wall}%.2f s, ${r.cpu}%.2f cpu-s${if (traced) " (traced)" else ""}")
+      Req(r, if (traced) Some(ReqTrace(w.recorder.jobs, w.recorder.tasks, w.recorder.shuffleMb)) else None)
     }
-    out.toSeq
+    if (a.trace) Seq(false, true, true, false).map(one)
+    else {
+      val out = mutable.ArrayBuffer.empty[Req]
+      val t0 = now
+      while (out.size < least || (byTime && since(t0) < a.seconds)) out += one(traced = false)
+      out.toSeq
+    }
   }
 
-  private def lookupE2e(reqs: Seq[(Request, Boolean, Option[ReqTrace])]): Unit = {
-    val ms = reqs.map(_._1.wall * 1e3)
+  private def lookupE2e(reqs: Seq[Req], warmedUp: Boolean): Unit = {
+    val ms = reqs.map(_.r.wall * 1e3)
     val (pct, tail) = Stats.tail(ms)
     e2e("lookup_p50_ms") = (Stats.median(ms), "ms")
     e2e("lookup_tail_ms") = (tail, "ms")
-    e2e("lookup_hit_at_1") = (reqs.map(_._1.hits).sum.toDouble / reqs.map(_._1.golds).sum, "ratio")
-    notes += f"lookup_tail_ms is p$pct of ${ms.size} requests of ${w.sizes.batch} mentions"
+    e2e("lookup_hit_at_1") = (reqs.map(_.r.hits).sum.toDouble / reqs.map(_.r.golds).sum, "ratio")
+    notes += f"lookup_tail_ms is p$pct of ${ms.size} requests of ${w.sizes.batch} mentions" +
+      (if (warmedUp) ", after a warm-up request" else "")
   }
 
-  /** Traced against plain requests, after the cold first one. */
-  private def overheadPct(reqs: Seq[(Request, Boolean, Option[ReqTrace])]): Double = {
-    val warm = reqs.tail
-    (Stats.median(warm.filter(_._2).map(_._1.wall)) /
-      Stats.median(warm.filter(!_._2).map(_._1.wall)) - 1) * 100
-  }
+  /** Median over the plain/traced pairs of traced ÷ plain request time. */
+  private def overheadPct(reqs: Seq[Req]): Double =
+    (Stats.median(reqs.grouped(2).toSeq.map { pair =>
+      val (traced, plain) = pair.partition(_.trace.isDefined)
+      traced.head.r.wall / plain.head.r.wall
+    }) - 1) * 100
 
   // ----------------------------------------------------------- per layer
 
@@ -250,7 +269,7 @@ final class Runner(spark: SparkSession, a: Args) {
     "postings3g", "postings_pair", "mentions", "links", "canon", "page_links", "triples")
 
   private def perLayer(st: StageSnapshot, links: Map[String, Double],
-                       reqs: Seq[(Request, Boolean, Option[ReqTrace])]): Unit = {
+                       reqs: Seq[Req]): Unit = {
     val empty = new GroupAgg
     StageTags.foreach { s =>
       val g = st.groups.getOrElse(s"graft-stage:$s", empty)
@@ -268,15 +287,15 @@ final class Runner(spark: SparkSession, a: Args) {
     links.foreach { case (k, v) =>
       layer(k) = (v, if (k.endsWith("wall_s")) "s" else if (k.endsWith("per_link")) "ratio" else "count")
     }
-    val traced = reqs.filter(_._2)
-    val rt = traced.flatMap(_._3)
+    val traced = reqs.filter(_.trace.isDefined)
+    val rt = traced.flatMap(_.trace)
     layer("lookup.linker.wall_s") = (Stats.median(Spans.named("lookup.linker").map(_.seconds)), "s")
     layer("lookup.retrieval.wall_s") = (Stats.median(Spans.named("lookup.retrieval").map(_.seconds)), "s")
     layer("lookup.jobs_per_request") = (Stats.median(rt.map(_.jobs.toDouble)), "count")
     layer("lookup.tasks_per_request") = (Stats.median(rt.map(_.tasks.toDouble)), "count")
     layer("lookup.shuffle_mb_per_request") = (Stats.median(rt.map(_.shuffleMb)), "MB")
     layer("lookup.candidates_per_mention") =
-      (traced.map(_._1.rows).sum.toDouble / traced.map(_._1.mentions).sum, "ratio")
+      (traced.map(_.r.rows).sum.toDouble / traced.map(_.r.mentions).sum, "ratio")
     layer("jvm.gc_s") = (Jvm.gcSeconds, "s")
     layer("jvm.jit_s") = (Jvm.jitSeconds, "s")
     layer("spark.jobs") = (w.recorder.runJobs.toDouble, "count")

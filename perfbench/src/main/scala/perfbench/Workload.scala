@@ -6,25 +6,31 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Input sizes of one workload. Both workloads feed `Pipeline.run` some
-  * pages, so link quality is defined on each. */
-final case class Sizes(pages: Int, entities: Int, poolPages: Int, batch: Int,
-                       probeRequests: Int)
+  * pages, so link quality is defined on each. `batch` is the mentions per
+  * lookup request. */
+final case class Sizes(pages: Int, entities: Int, batch: Int)
 
 object Sizes {
   def of(workload: String, scale: String): Sizes = (workload, scale) match {
-    // document -> triples: 6 pages per entity
-    case ("pipeline", "full") => Sizes(1200, 200, 300, 16, 2)
-    // small mention batches against a 12x larger index, built from a
-    // large dump and one page per 64 entities
-    case ("lookup", "full") => Sizes(2400 / 64, 2400, 300, 48, 0)
-    case ("pipeline", "tiny") => Sizes(400, 600, 200, 8, 1)
-    case ("lookup", "tiny") => Sizes(10, 600, 200, 8, 0)
+    // document -> triples: 6 pages per entity, as in the reference probe
+    // (24k pages, 4k entities), at a quarter of its size to fit the run
+    // budget
+    case ("pipeline", "full") => Sizes(6000, 1000, 256)
+    // the index build: one page per 32 entities, the ratio of the
+    // reference probe of linking cost (2k pages, 64k entities); 256-mention
+    // batches, as in the reference lookup probe
+    case ("lookup", "full") => Sizes(2400 / 32, 2400, 256)
+    case ("pipeline", "tiny") => Sizes(400, 600, 8)
+    case ("lookup", "tiny") => Sizes(10, 600, 8)
     case other => sys.error(s"unknown workload/scale $other")
   }
 }
 
 /** The linker settings `Pipeline.run` uses by default, and lamAPI's
-  * reference-parity lookup settings (popularity cut, ambiguity features). */
+  * reference-parity lookup settings (popularity cut, ambiguity features).
+  * A traced `pipeline` run checks that `Configs.pipeline` still
+  * reproduces the `links` stage, so a change of the library default fails
+  * the run. */
 object Configs {
   val pipeline: LinkerConfig = LinkerConfig(limit = 32, fuzzy = true,
     cutByRelevance = true, computeAmbiguity = false, minShouldMatch = true)
@@ -191,15 +197,14 @@ final class Workload(spark: SparkSession, args: Args) {
   // ------------------------------------------------------------ lookups
 
   /** Gold surfaces (label, alias, abbreviation, misspelling) of the seed's
-    * pages, plus decoys, each with its normalized form. */
+    * pages, plus 64 decoys that name no entity, each with its normalized
+    * form. */
   lazy val mentionPool: (IndexedSeq[Mention], IndexedSeq[Mention]) = {
     tag("mentions")
-    val goldSurfaces = Fixtures.gold(spark, sizes.poolPages, sizes.entities, args.seed)
-      .select("surface", "qid").distinct()
     val rng = new scala.util.Random(args.seed * 7919L + 17)
     val decoys = (0 until 64).map(i => ("Zq" + "aeiou" (rng.nextInt(5)) + "x" + (1000 + i), null: String))
       .toDF("surface", "qid")
-    val all = goldSurfaces.unionByName(decoys)
+    val all = gold.select("surface", "qid").distinct().unionByName(decoys)
       .select(col("surface"), graft.core.Text.cleanStr(col("surface")).as("norm"), col("qid"))
       .orderBy("surface", "qid").as[(String, String, String)].collect()
       .map { case (s, n, q) => Mention(s, n, Option(q)) }
@@ -248,7 +253,9 @@ final class Workload(spark: SparkSession, args: Args) {
     checked(Checks.overLimit(byMention.map { case (m, rs) => m -> rs.length }, Configs.lookup.limit))
     val top = byMention.map { case (m, rs) => m -> topCandidate(rs.toSeq) }
     val canon = (q: String) => idx.canon.getOrElse(q, q)
-    val golds = batch.filter(_.qid.isDefined)
+    // distinct, so that the hit rate weighs each gold mention once, not by
+    // how often the skewed draw repeated it
+    val golds = batch.filter(_.qid.isDefined).distinct
     val hits = golds.count(m => top.get(m.norm).exists(id => canon(id) == canon(m.qid.get)))
     Request(wall, cpu, rows.length, batch.map(_.norm).distinct.size, golds.size, hits)
   }
@@ -264,8 +271,11 @@ final class Workload(spark: SparkSession, args: Args) {
 
   // ----------------------------------------------------------- links probe
 
-  /** Linking sub-stages on `mentions`, timed one by one. */
-  def linksProbe(mentions: DataFrame, idx: NameIndexTables, lookupMode: Boolean): Map[String, Double] =
+  /** Linking sub-stages on `mentions`, timed one by one. Also returns the
+    * digest of the scored links on the `pipeline` side, which must equal
+    * the `links` stage's. */
+  def linksProbe(mentions: DataFrame, idx: NameIndexTables,
+                 lookupMode: Boolean): (Map[String, Double], Option[(Long, Long)]) =
     Spans("links") {
       tag("links")
       val cfg = if (lookupMode) Configs.lookup else Configs.pipeline
@@ -291,16 +301,20 @@ final class Workload(spark: SparkSession, args: Args) {
       val idf = tokenStats.select(col("token"),
         log(lit(1.0) + lit(nRows.toDouble) / col("df")).as("idf"))
       val candidates = Linker.candidateRows(exact, idx.names, idf).count()
-      val (linksOut, scoreS) = timed("links.score") {
-        if (lookupMode) Linker.lookup(spark, mentions, idx, cfg).count()
-        else Linker.linkTop1(spark, mentions, idx, cfg, Configs.pipelineMinScore).count()
+      val ((linksOut, linkDigest), scoreS) = timed("links.score") {
+        if (lookupMode) (Linker.lookup(spark, mentions, idx, cfg).count(), None)
+        else {
+          val d = Checks.digest(Linker.linkTop1(spark, mentions, idx, cfg, Configs.pipelineMinScore)
+            .select("mention_norm", "qid"))
+          (d._1, Some(d))
+        }
       }
-      Map("links.exact_pairs" -> exactPairs.toDouble,
+      (Map("links.exact_pairs" -> exactPairs.toDouble,
         "links.fuzzy_expansions" -> expansions.toDouble,
         "links.candidates" -> candidates.toDouble,
         "links.links_out" -> linksOut.toDouble,
         "links.candidates_per_link" -> (if (linksOut == 0) 0.0 else candidates.toDouble / linksOut),
         "links.exact.wall_s" -> exactS, "links.fuzzy.wall_s" -> fuzzyS,
-        "links.score.wall_s" -> scoreS)
+        "links.score.wall_s" -> scoreS), linkDigest)
     }
 }

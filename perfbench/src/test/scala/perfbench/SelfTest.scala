@@ -65,6 +65,11 @@ class SelfTest extends AnyFunSuite {
 
     assert(Checks.overLimit(Map("alden" -> 3), limit = 3).isEmpty)
     assert(Checks.overLimit(Map("alden" -> 4), limit = 3).nonEmpty)
+
+    val links = Checks.digest(op.out.links.select("mention_norm", "qid"))
+    assert(Checks.linkerConfigDrift(links, links).isEmpty)
+    assert(Checks.linkerConfigDrift(links, Checks.digest(op.out.links.select("mention_norm", "qid")
+      .limit(links._1.toInt - 1))).nonEmpty)
     Main.deleteTree(Paths.get(a.work))
   }
 
