@@ -21,7 +21,6 @@ case class LinkerConfig(
     softFiltering: Boolean = false,
     saltShards: Int = 8,
     hotTokenDf: Long = 100000L,
-    maxGramDf: Long = 500000L,
     /** Candidate-generation blocking (Lucene common-terms /
       * minimum_should_match analog): a token whose posting list exceeds
       * this df does NOT generate candidates for a mention that also has a
@@ -61,31 +60,7 @@ case class LinkerConfig(
       * denormalized (popularity_norm × index max popularity — requires
       * NameIndexTables.maxPopularity) and es_score is the raw lexical
       * score, not divided by the per-mention max. */
-    normalizeScore: Boolean = true,
-    /** Two-pass retrieval for the linking path (minShouldMatch only):
-      * fuzzy expansion runs ONLY for mentions whose exact/pair candidate
-      * generation came up empty. On clean corpora (anchor-text mentions)
-      * this removes ~all fuzzy-expansion volume; a typo mention has no
-      * exact candidates and still gets the full fuzzy pass. OFF for
-      * lookup parity — the reference's ES query always scores fuzzy
-      * clauses alongside exact ones. */
-    fuzzyFallbackOnly: Boolean = false,
-    /** ES `max_expansions` (default 50): how many closest index terms a
-      * mention token may fuzzy-expand to. Linking runs can use a much
-      * tighter cap — the expansion join volume is linear in it, and terms
-      * beyond the first few nearest ones never win the composite. */
-    maxFuzzyExpansions: Int = 50,
-    /** Linking-branch fuzzy candidate generation. false (default) =
-      * single-token posting expansion with common-token blocking — the
-      * cheaper shape when posting lists are well-blocked (measured 2×
-      * less work on the bench corpus). true = through the PAIR-posting
-      * table (fuzzy-corrected token × other mention token): candidates
-      * that could never clear minimum-should-match die at the pair join —
-      * the right shape when even blocked single-token posting lists fan
-      * out too far (very large corpora with long tail-token postings);
-      * drops all-tokens-typo'd candidates (documented). Both produce the
-      * same links on the bench corpus (A/B in tools/ProfileLinks2). */
-    fuzzyPairGen: Boolean = false)
+    normalizeScore: Boolean = true)
 
 /** Stages 7-9 — candidate generation, scoring, top-k: the distributed
   * re-realization of the reference's lookup
@@ -131,6 +106,18 @@ object Linker {
     * mention_norm, so only the mention side moves. */
   val BroadcastMentionsMaxRows: Long = 1000000L
 
+  /** ES `max_expansions` (its default): how many closest index terms a
+    * mention token may fuzzy-expand to. */
+  private val MaxFuzzyExpansions = 50
+
+  /** 3-grams whose vocabulary posting list is longer than this are pruned
+    * from the distributed fuzzy gram join (bounded fan-out). */
+  private val MaxGramDf = 500000L
+
+  /** Largest index vocabulary whose fuzzy term-dictionary expansion runs
+    * in the driver (see `expandTokens`). */
+  private val VocabDriverMax = 20000L
+
   /** ES AUTO fuzziness: max edits allowed for a token of given length. */
   def autoFuzzEdits(len: Column): Column =
     when(len < 3, 0).when(len < 6, 1).otherwise(2)
@@ -144,11 +131,6 @@ object Linker {
       .withColumn("mention_tokens", Text.tokenSet(col("mention_norm")))
       .withColumn("mention_grams", Text.ngramSet(col("mention_norm"), 3))
 
-  /** Exact token matches: (mention_norm, name_row_id, token), salted on
-    * hot tokens so one mega-posting token cannot pin a shuffle partition,
-    * with common-token blocking (see LinkerConfig.commonTokenDf).
-    * @param postings (token, name_row_id)
-    * @param tokenDf  (token, df) posting-list lengths */
   /** The generation-eligible (mention, token) pairs after common-token
     * blocking: common tokens are kept ONLY for mentions with no rarer
     * token. Shared by candidate generation and the minimum_should_match
@@ -166,6 +148,11 @@ object Linker {
       .select(col("mention_norm"), col("token"))
   }
 
+  /** Exact token matches: (mention_norm, name_row_id, token), salted on
+    * hot tokens so one mega-posting token cannot pin a shuffle partition,
+    * with common-token blocking (see LinkerConfig.commonTokenDf).
+    * @param postings (token, name_row_id)
+    * @param tokenDf  (token, df) posting-list lengths */
   def exactTokenMatches(spark: SparkSession, mentionsD: DataFrame,
                         postings: DataFrame, tokenDf: DataFrame,
                         commonDf: Long, cfg: LinkerConfig,
@@ -217,30 +204,6 @@ object Linker {
     array_distinct(keys)
   }
 
-  /** Fuzzy token matches — ES's two-phase fuzzy-query model:
-    *
-    *  phase 1 (TERM DICTIONARY, vocabulary × vocabulary): the DISTINCT
-    *  mention tokens are expanded to index tokens within AUTO edit
-    *  distance, via two complementary blockings:
-    *   (a) the 3-gram vocab join with the shared-gram lower-bound prune —
-    *       complete whenever max(|a|,|b|) − 2 − 3·d ≥ 1;
-    *   (b) a SymSpell delete-neighborhood join for SHORT pairs
-    *       (max(|a|,|b|) ≤ 2+3·d, i.e. ≤5 chars at 1 edit / ≤8 at 2),
-    *       where a legal fuzzy pair can share zero 3-grams ('abc'→'axc')
-    *       and the gram join would silently drop it;
-    *  then the exact levenshtein check and the ES `max_expansions`-style
-    *  cap (50 closest terms per mention token, deterministic order);
-    *
-    *  phase 2 (POSTINGS): only the accepted (mtok → token) expansions are
-    *  joined against the posting lists.
-    *
-    * Doing both blocking joins at vocabulary scale is what keeps fuzzy
-    * matching linear — joining grams against per-name-row postings would
-    * multiply the candidate volume by posting-list length.
-    * @param postings   (token, name_row_id)
-    * @param postings3g (gram, token) vocabulary grams
-    * @param tokenDf    (token, df); expansion targets with df > commonDf
-    *                   are blocked (same policy as the exact path) */
   /** Plain Levenshtein distance (driver-side verification). */
   private def lev(a: String, b: String): Int = {
     val dp = Array.tabulate(b.length + 1)(identity)
@@ -265,20 +228,52 @@ object Linker {
     all
   }
 
-  def fuzzyTokenMatches(mentionsD: DataFrame, postings: DataFrame,
-                        postings3g: DataFrame, tokenDf: DataFrame,
-                        commonDf: Long, cfg: LinkerConfig,
-                        vocabDriverMax: Long = 20000L,
-                        dedupTriples: Boolean = true): DataFrame = {
-    val expansions = fuzzyExpansions(mentionsD, postings3g, tokenDf, cfg,
-      vocabDriverMax)
-    fuzzyPhase2(mentionsD, postings, tokenDf, commonDf, expansions, dedupTriples)
+  /** Fuzzy token matches — ES's two-phase fuzzy-query model:
+    *
+    *  phase 1 (TERM DICTIONARY, vocabulary × vocabulary): the DISTINCT
+    *  mention tokens are expanded to index tokens within AUTO edit
+    *  distance, via two complementary blockings:
+    *   (a) the 3-gram vocab join with the shared-gram lower-bound prune —
+    *       complete whenever max(|a|,|b|) − 2 − 3·d ≥ 1;
+    *   (b) a SymSpell delete-neighborhood join for SHORT pairs
+    *       (max(|a|,|b|) ≤ 2+3·d, i.e. ≤5 chars at 1 edit / ≤8 at 2),
+    *       where a legal fuzzy pair can share zero 3-grams ('abc'→'axc')
+    *       and the gram join would silently drop it;
+    *  then the exact levenshtein check and the ES `max_expansions`-style
+    *  cap (50 closest terms per mention token, deterministic order);
+    *
+    *  phase 2 (POSTINGS): only the accepted (mtok → token) expansions are
+    *  joined against the posting lists.
+    *
+    * Doing both blocking joins at vocabulary scale is what keeps fuzzy
+    * matching linear — joining grams against per-name-row postings would
+    * multiply the candidate volume by posting-list length.
+    * @param postings   (token, name_row_id)
+    * @param postings3g (gram, token) vocabulary grams
+    * @param tokenDf    (token, df); expansion targets with df > commonDf
+    *                   are blocked (same policy as the exact path) */
+  private def fuzzyTokenMatches(mentionsD: DataFrame, postings: DataFrame,
+                                postings3g: DataFrame, tokenDf: DataFrame,
+                                commonDf: Long): DataFrame = {
+    // the driver-built expansion table is small, so phase 2 broadcasts it;
+    // the hint sits on the join that consumes it
+    val (exps, inDriver) = expandTokens(mentionsD, postings3g, tokenDf, VocabDriverMax)
+    fuzzyPhase2(mentionsD, postings, tokenDf, commonDf,
+      if (inDriver) broadcast(exps) else exps)
   }
 
-  /** Phase 1 only: the accepted (mtok → index token) fuzzy expansions. */
+  /** Phase 1 only: the accepted (mtok → index token) fuzzy expansions.
+    * The expansion caps are fixed (`MaxFuzzyExpansions`, `MaxGramDf`), so
+    * `cfg` is not read. */
   def fuzzyExpansions(mentionsD: DataFrame, postings3g: DataFrame,
                       tokenDf: DataFrame, cfg: LinkerConfig,
-                      vocabDriverMax: Long = 20000L): DataFrame = {
+                      vocabDriverMax: Long = VocabDriverMax): DataFrame =
+    expandTokens(mentionsD, postings3g, tokenDf, vocabDriverMax)._1
+
+  /** Phase 1 and where it ran: (expansions, built in the driver). */
+  private def expandTokens(mentionsD: DataFrame, postings3g: DataFrame,
+                           tokenDf: DataFrame,
+                           vocabDriverMax: Long): (DataFrame, Boolean) = {
     val spark = mentionsD.sparkSession
     // distinct mention tokens (the query-side vocabulary)
     val mvocab = mentionsD
@@ -313,7 +308,7 @@ object Linker {
             .map(t => (t, lev(m, t)))
             .filter { case (_, l) => l >= 1 && l <= d }
             .sortBy { case (t, l) => (l, t) }
-            .take(cfg.maxFuzzyExpansions)
+            .take(MaxFuzzyExpansions)
             .map { case (t, _) => (m, t) }
         }
       }
@@ -322,8 +317,8 @@ object Linker {
       val rdd = spark.sparkContext
         .parallelize(rows.map(r => org.apache.spark.sql.Row(r._1, r._2)),
           math.max(1, rows.size / 100000 + 1))
-      return broadcast(spark.createDataFrame(rdd,
-        org.apache.spark.sql.types.StructType.fromDDL("mtok string, token string")))
+      return (spark.createDataFrame(rdd,
+        org.apache.spark.sql.types.StructType.fromDDL("mtok string, token string")), true)
     }
 
     // POSITIONAL grams on the mention side (no distinct): the q-gram lower
@@ -339,7 +334,7 @@ object Linker {
 
     // prune ultra-common grams (bounded fan-out; documented cap)
     val gramDf = postings3g.groupBy("gram").count()
-    val p3 = postings3g.join(gramDf.filter(col("count") <= cfg.maxGramDf), Seq("gram"))
+    val p3 = postings3g.join(gramDf.filter(col("count") <= MaxGramDf), Seq("gram"))
       .select("gram", "token")
 
     val d = autoFuzzEdits(length(col("mtok")))
@@ -374,98 +369,44 @@ object Linker {
       // here would re-derive every exact match through the gram join
       .filter(col("lev") <= autoFuzzEdits(length(col("mtok"))) && col("lev") >= 1)
 
-    // ES max_expansions: keep the cfg.maxFuzzyExpansions closest index
+    // ES max_expansions: keep the MaxFuzzyExpansions closest index
     // terms per mention token, deterministic (lev asc, token asc)
     val wExp = Window.partitionBy(col("mtok")).orderBy(col("lev").asc, col("token").asc)
-    verified
+    (verified
       .withColumn("exp_rank", row_number().over(wExp))
-      .filter(col("exp_rank") <= cfg.maxFuzzyExpansions)
-      .select(col("mtok"), col("token"))
+      .filter(col("exp_rank") <= MaxFuzzyExpansions)
+      .select(col("mtok"), col("token")), false)
   }
 
   /** phase 2: expansions (minus common targets) → mentions → postings. */
   private def fuzzyPhase2(mentionsD: DataFrame, postings: DataFrame,
                           tokenDf: DataFrame, commonDf: Long,
-                          expansions: DataFrame,
-                          dedupTriples: Boolean = true): DataFrame = {
+                          expansions: DataFrame): DataFrame = {
     val rareExpansions = expansions
       .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
     val mentionTok = mentionsD
       .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
-    val raw = mentionTok.join(rareExpansions, Seq("mtok"))
+    mentionTok.join(rareExpansions, Seq("mtok"))
       .join(postings, Seq("token"))
       .select(col("mention_norm"), col("name_row_id"), col("token"))
-    // a consumer that immediately re-aggregates can skip the dedup shuffle
-    if (dedupTriples) raw.distinct() else raw
+      .distinct()
   }
 
-  /** (mention_norm, name_row_id, fuzzy-token, idf) rows → the aggregated
-    * (n_f, idf_f) stats over DISTINCT fuzzy tokens not already in the
-    * mention's token set — one shuffle, no triple-level distinct. */
-  private def fuzzyAggregate(hits: DataFrame): DataFrame =
-    hits
-      .groupBy(col("mention_norm"), col("name_row_id"))
-      .agg(collect_set(when(!array_contains(col("mention_tokens"), col("token")),
-        struct(col("token"), coalesce(col("idf"), lit(0.0)).as("idf")))).as("fs"))
-      .select(col("mention_norm"), col("name_row_id"),
-        size(col("fs")).cast("long").as("n_f"),
-        aggregate(col("fs"), lit(0.0), (acc, x) => acc + x.getField("idf")).as("idf_f"))
-
-  /** Fuzzy candidates for MULTI-token mentions in the linking branch,
-    * generated through the PAIR-POSTING table: a fuzzy-corrected token is
-    * paired with each OTHER mention token and joined against the
-    * candidate-blocking pair index — a fuzzy candidate that cannot also
-    * match a second mention token (and so could never clear
-    * minimum_should_match) dies at the pair join instead of fanning out
-    * through the single-token posting lists (8M+ rows at bench scale).
-    * Documented recall cut vs the OR path: a multi-token mention with ALL
-    * matched tokens fuzzy (every token typo'd) is not generated. */
-  private def fuzzyPairAgg(mdMulti: DataFrame, expansions: DataFrame,
-                           pairTable: DataFrame, pairDf: DataFrame,
-                           commonDf: Long, idf: DataFrame): DataFrame = {
-    val mentionTok = mdMulti.select(col("mention_norm"), col("mention_tokens"),
-      explode(col("mention_tokens")).as("mtok"))
-    val exp = mentionTok.join(expansions, Seq("mtok"))
-      .select(col("mention_norm"), col("mention_tokens"), col("mtok"),
-        col("token").as("ftok"))
-    val pairs = exp
-      .select(col("mention_norm"), col("mention_tokens"), col("ftok"),
-        explode(array_remove(col("mention_tokens"), col("mtok"))).as("otok"))
-      .filter(col("ftok") =!= col("otok"))
-      .withColumn("pair", when(col("ftok") < col("otok"),
-        concat(col("ftok"), lit("|"), col("otok")))
-        .otherwise(concat(col("otok"), lit("|"), col("ftok"))))
-      // the same common-pair blocking as the exact pair path: a hot pair
-      // ("city|of"-class) would fan a single fuzzy token out to thousands
-      // of name rows that minimum-should-match semantics never needed
-      .join(pairDf.filter(col("df") <= commonDf).select("pair"), Seq("pair"),
-        "left_semi")
-    val hits = pairs.join(pairTable, Seq("pair"))
-      .select(col("mention_norm"), col("mention_tokens"), col("name_row_id"),
-        col("ftok").as("token"))
-      .join(idf, Seq("token"), "left")
-    fuzzyAggregate(hits)
-  }
-
-  /** Fuzzy candidates for SINGLE-token mentions (they only need one
-    * match): the plain expansion → posting join, aggregated. */
-  private def fuzzySingleAgg(md1: DataFrame, expansions: DataFrame,
-                             postings: DataFrame, tokenDf: DataFrame,
-                             commonDf: Long, idf: DataFrame): DataFrame = {
+  /** Fuzzy candidates of the minimum_should_match branch: the expansion →
+    * posting join, aggregated to per-(mention, name row) stats (n_f, idf_f)
+    * over the distinct fuzzy tokens not in the mention's own token set. */
+  private def fuzzyStats(mentionsD: DataFrame, expansions: DataFrame,
+                         postings: DataFrame, tokenDf: DataFrame,
+                         commonDf: Long, idf: DataFrame): DataFrame = {
     // Dedup + self-token filtering run at the (mention, target-token)
     // level — a table that is tiny BEFORE the posting join (tens of
     // thousands of rows) — instead of on the millions of post-join
     // triples: postings are unique per (token, name_row), so distinct
     // (m, token) targets yield (m, n, token) triples with NO duplicates
     // and the per-candidate stats reduce to a plain codegen count/sum.
-    // The old shape joined the mention-token array onto every triple and
-    // collect_set-deduped per candidate (an ObjectHashAggregate over ~8M
-    // struct rows at the 384k-page bench — half the fuzzy chain's cost).
-    // Semantics identical to fuzzyAggregate: distinct fuzzy tokens not in
-    // the mention's own token set, with their idf mass.
     val rareExpansions = expansions
       .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
-    val mentionTok = md1
+    val mentionTok = mentionsD
       .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
     val targets = mentionTok.join(rareExpansions, Seq("mtok"))
       .select(col("mention_norm"), col("token")).distinct()
@@ -605,10 +546,15 @@ object Linker {
       .drop("mid")
   }
 
-  /** One-shot pipeline linking: the scored-candidate core + a SINGLE
-    * top-1-per-mention window on the linking composite (the A7 variant
-    * dedup is subsumed — the argmax row is the same entity either way),
-    * saving two full exchange+sort passes vs lookup→linkBest.
+  /** Stage-9 linking decision: best accepted entity per mention, from the
+    * scored-candidate core + a SINGLE top-1-per-mention window (the A7
+    * variant dedup is subsumed — the argmax row is the same entity either
+    * way). Composite (engine-defined, documented): ed+jaccard+ngram (the
+    * reference's own dedup/ranking signal A7 extended with the fuzzy
+    * feature) + 0.5·es_score — the lexical term separates candidates whose
+    * string features tie because a short alias/abbreviation row mimics the
+    * mention while matching fewer index tokens. Popularity as prior
+    * tie-break; threshold to abstain.
     * Output: (mention_norm, qid, link_score). */
   def linkTop1(spark: SparkSession, mentions: DataFrame, index: NameIndexTables,
                cfg: LinkerConfig, minScore: Double): DataFrame = {
@@ -643,33 +589,18 @@ object Linker {
 
   /** Deterministic memo key for a linking configuration + index content —
     * results are only reusable under the SAME filters/limits/scoring
-    * switches AND the same index. Fields are enumerated explicitly (not
-    * `cfg.toString`): a future field with identity toString (e.g. an
-    * Array) would silently make a toString key non-deterministic and the
-    * memo would never hit again. */
+    * switches AND the same index. Derived from the case class's own fields,
+    * so a field added to LinkerConfig joins the key without an edit here.
+    * Seq values render by content, not by collection class (`List(a)` and
+    * `Vector(a)` are the same filter); a field type whose toString is
+    * identity-based (an Array) would need its own case. */
   private[kg] def memoKey(cfg: LinkerConfig, minScore: Double,
                           indexFp: Long): String = {
-    val parts = Seq(
-      "limit=" + cfg.limit, "fuzzy=" + cfg.fuzzy, "kind=" + cfg.kind,
-      "nerTypes=" + cfg.nerTypes.mkString("[", ",", "]"),
-      "types=" + cfg.types.mkString("[", ",", "]"),
-      "extendedTypes=" + cfg.extendedTypes.mkString("[", ",", "]"),
-      "language=" + cfg.language,
-      "softFiltering=" + cfg.softFiltering,
-      "saltShards=" + cfg.saltShards,
-      "hotTokenDf=" + cfg.hotTokenDf,
-      "maxGramDf=" + cfg.maxGramDf,
-      "commonTokenDf=" + cfg.commonTokenDf,
-      "minShouldMatch=" + cfg.minShouldMatch,
-      "cutByRelevance=" + cfg.cutByRelevance,
-      "computeAmbiguity=" + cfg.computeAmbiguity,
-      "ids=" + cfg.ids.mkString("[", ",", "]"),
-      "normalizeScore=" + cfg.normalizeScore,
-      "fuzzyFallbackOnly=" + cfg.fuzzyFallbackOnly,
-      "maxFuzzyExpansions=" + cfg.maxFuzzyExpansions,
-      "fuzzyPairGen=" + cfg.fuzzyPairGen,
-      "minScore=" + minScore,
-      "indexFp=" + indexFp)
+    val fields = cfg.productElementNames.zip(cfg.productIterator).map {
+      case (name, s: Seq[_]) => s"$name=${s.mkString("[", ",", "]")}"
+      case (name, v) => s"$name=$v"
+    }
+    val parts = fields.toSeq ++ Seq("minScore=" + minScore, "indexFp=" + indexFp)
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(parts.mkString("|").getBytes("UTF-8"))
       .map(b => f"${b & 0xff}%02x").mkString
@@ -771,8 +702,8 @@ object Linker {
   }
 
   /** Shared core of lookup/linkTop1: candidate generation + filters +
-    * cut + per-mention normalization + similarity features. */
-  /** Returns (features, mentionsD) — the distinct-mention table rides
+    * cut + per-mention normalization + similarity features.
+    * Returns (features, mentionsD) — the distinct-mention table rides
     * along so callers (the forced-ids path) reuse the SAME frozen `mid`
     * assignment instead of re-deriving mentions. */
   private def scoredFeatures(spark: SparkSession, mentions: DataFrame,
@@ -806,18 +737,6 @@ object Linker {
       if (cfg.commonTokenDf > 0) cfg.commonTokenDf
       else math.max(64L, (nRows * 0.005).toLong)
 
-    val emptyTriples = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "mention_norm string, name_row_id bigint, token string"))
-    // two consumers downstream (candidate union + fuzzy stats) — the
-    // checkpoint materializes the vocab-join DAG once, not twice
-    def fuzzyFor(md: DataFrame): DataFrame =
-      if (cfg.fuzzy)
-        fuzzyTokenMatches(md, index.postings, index.postings3g,
-          tokenDf, commonDf, cfg).localCheckpoint(eager = false)
-      else emptyTriples
-
     val statsF: DataFrame =
       if (!cfg.minShouldMatch) {
         // ---- reference-parity OR generation: every (eligible) token's
@@ -826,7 +745,10 @@ object Linker {
         // reached both ways counts twice there too)
         val exact = exactTokenMatches(spark, mentionsD, index.postings,
           tokenDf, commonDf, cfg, index.hotTokens)
-        val matches = if (cfg.fuzzy) exact.union(fuzzyFor(mentionsD)) else exact
+        val matches =
+          if (!cfg.fuzzy) exact
+          else exact.union(fuzzyTokenMatches(mentionsD, index.postings,
+            index.postings3g, tokenDf, commonDf).localCheckpoint(eager = false))
         matches
           .join(idf, Seq("token"), "left")
           .join(mentionsB(midMap), Seq("mention_norm")) // map-side: str → mid
@@ -870,8 +792,6 @@ object Linker {
           tokenDf, commonDf, cfg, index.hotTokens)
           .select(col("mention_norm"), col("name_row_id"))
 
-        // two-pass retrieval (cfg.fuzzyFallbackOnly): the fuzzy expansion
-        // only runs for mentions whose exact/pair generation found nothing
         val baseCands = pairCands.union(singleCands)
         val emptyAgg = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -880,19 +800,9 @@ object Linker {
         val fuzzAgg =
           (if (!cfg.fuzzy) emptyAgg
            else {
-             val mdF =
-               if (!cfg.fuzzyFallbackOnly) mentionsD
-               else mentionsD.join(baseCands.select("mention_norm").distinct(),
-                 Seq("mention_norm"), "left_anti")
-             val exps = fuzzyExpansions(mdF, index.postings3g, tokenDf, cfg)
-               .localCheckpoint(eager = false) // shared by both shapes
-             if (cfg.fuzzyPairGen)
-               fuzzyPairAgg(mdF.filter(size(col("mention_tokens")) >= 2),
-                   exps, pairTable, pairDf, commonDf, idf)
-                 .unionByName(fuzzySingleAgg(
-                   mdF.filter(size(col("mention_tokens")) === 1),
-                   exps, index.postings, tokenDf, commonDf, idf))
-             else fuzzySingleAgg(mdF, exps, index.postings, tokenDf, commonDf, idf)
+             val exps = fuzzyExpansions(mentionsD, index.postings3g, tokenDf, cfg)
+               .localCheckpoint(eager = false)
+             fuzzyStats(mentionsD, exps, index.postings, tokenDf, commonDf, idf)
            }).localCheckpoint(eager = false) // overlaps the exact-gen chain
 
         // ONE exchange for the entire scoring chain: the candidate stream
@@ -1084,30 +994,6 @@ object Linker {
       else feat.withColumn("ambiguity_mention", lit(null).cast("double"))
         .withColumn("corrects_tokens", lit(null).cast("double"))
     (out, mentionsD)
-  }
-
-  /** Stage-9 linking decision: best accepted entity per mention.
-    * Composite (engine-defined, documented): ed+jaccard+ngram (the
-    * reference's own dedup/ranking signal A7 extended with the fuzzy
-    * feature) + 0.5·es_score — the lexical term separates candidates whose
-    * string features tie because a short alias/abbreviation row mimics the
-    * mention while matching fewer index tokens. Popularity as prior
-    * tie-break; threshold to abstain. */
-  def linkBest(candidates: DataFrame, minScore: Double = 1.8): DataFrame = {
-    val composite = col("ed_score") + col("jaccard_score") +
-      col("jaccardNgram_score") + lit(0.5) * col("es_score")
-    // candidate tables straight from scoredFeatures carry `mid` (the same
-    // per-mention grouping, already the partitioning key — no exchange);
-    // external candidate tables (e.g. lookup output) group by the string
-    val pkey =
-      if (candidates.columns.contains("mid")) col("mid") else col("mention_norm")
-    val w = Window.partitionBy(pkey)
-      .orderBy(composite.desc, col("popularity").desc, col("id").asc)
-    candidates
-      .withColumn("link_score", composite)
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") === 1 && col("link_score") >= minScore)
-      .drop("r")
   }
 }
 

@@ -48,13 +48,6 @@ object Pipeline {
           workDir: String,
           cfg: LinkerConfig = LinkerConfig(limit = 32, fuzzy = true,
             cutByRelevance = true, computeAmbiguity = false,
-            // fuzzyFallbackOnly stays OFF here: it reads as a saving but
-            // SERIALIZES the fuzzy vocabulary chain behind exact candidate
-            // generation (the anti-join needs baseCands first), while the
-            // always-on shape lets the two chains run concurrently —
-            // measured 45% slower at both 1 and 4 cores on the bench
-            // corpus. It remains the right mode when fuzzy volume, not
-            // DAG latency, dominates (very large vocabularies).
             minShouldMatch = true),
           minLinkScore: Double = 1.2,
           /** optional cross-run lookup memo table (Linker.linkTop1Memoized):

@@ -157,6 +157,59 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  /** HintErrorLogger WARN messages logged while `body` runs. */
+  private def hintWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    spark.sparkContext // a starting session reconfigures log4j, dropping the appender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    val prevLevel = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(prevLevel)
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("linking leaves no broadcast hint outside a join (no HintErrorLogger WARN)") {
+    assert(hintWarnings(broadcast(spark.range(3)).count()).nonEmpty,
+      "the capture must see a stray hint")
+    val dump = Fixtures.dumpLines(spark, 200)
+    val parsed = ParseEntities.parse(dump)
+    val objects = ParseEntities.objects(ParseEntities.claims(parsed))
+    val closure = graft.graph.TypeClosure.closure(
+      objects.filter(col("pred") === "P279")
+        .select(col("subj").as("child"), col("obj").as("parent")))
+    val items = ParseEntities.items(parsed, closure,
+      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure))
+    val names = NameIndex.names(items).localCheckpoint(eager = true)
+    val idx = NameIndexTables(names, NameIndex.postings(names),
+      NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))
+    val mentions = Seq("borelis indusries", "alderton").toDF("mention_norm")
+    // Pipeline.run's default linker config
+    val cfg = LinkerConfig(limit = 32, fuzzy = true, cutByRelevance = true,
+      computeAmbiguity = false, minShouldMatch = true)
+    val warnings = hintWarnings {
+      Linker.linkTop1(spark, mentions, idx, cfg, 1.2).collect()
+      Linker.fuzzyExpansions(Linker.distinctMentions(mentions), idx.postings3g,
+        NameIndex.tokenStats(idx.postings), cfg).count()
+    }
+    assert(warnings.isEmpty, s"stray hints:\n${warnings.mkString("\n")}")
+  }
+
   test("triple extraction plan: endpoint semi-joins guard the pair product") {
     val links = Seq(("p1", "Q1"), ("p1", "Q2"), ("p1", "Q9"))
       .toDF("url", "qid")

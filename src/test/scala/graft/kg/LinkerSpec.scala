@@ -343,6 +343,47 @@ class LinkerSpec extends SparkSpec {
     assert(after.contains("alderton"))
   }
 
+  test("pipeline linking: a two-token mention with one edit in EVERY token links") {
+    // Pipeline.run's default linker config: minimum_should_match counts a
+    // fuzzy expansion as a match, so a candidate reached only through
+    // misspelled tokens still clears the two-token bound
+    val cfg = LinkerConfig(limit = 32, fuzzy = true, cutByRelevance = true,
+      computeAmbiguity = false, minShouldMatch = true)
+    val withPairs = index.copy(postingsPair = Some(NameIndex.postingsPair(index.names)))
+    val label = items.filter(col("entity") === "Q100173")
+      .select(col("labels")("en")).first().getString(0)
+    assert(label == "Borealis Industries", s"fixture drifted: $label")
+    val links = Linker.linkTop1(spark, mentionsOf("Borelis Indusries"), withPairs,
+      cfg, 1.2).collect()
+    assert(links.map(_.getString(1)).toSeq == Seq("Q100173"), s"got: ${links.mkString(",")}")
+  }
+
+  test("memo key: changing any one LinkerConfig field changes it; Seqs by content") {
+    val base = LinkerConfig()
+    val variants = Seq(
+      base.copy(limit = 7), base.copy(fuzzy = true), base.copy(kind = Some("entity")),
+      base.copy(nerTypes = Seq("PERS")), base.copy(types = Seq("Q5")),
+      base.copy(extendedTypes = Seq("Q5")), base.copy(language = Some("en")),
+      base.copy(softFiltering = true), base.copy(saltShards = 3),
+      base.copy(hotTokenDf = 5L), base.copy(commonTokenDf = 9L),
+      base.copy(minShouldMatch = true), base.copy(cutByRelevance = true),
+      base.copy(computeAmbiguity = false), base.copy(ids = Seq("Q1")),
+      base.copy(normalizeScore = false))
+    // variant i changes field i alone, and the variants cover every field:
+    // a field added to LinkerConfig fails here until it gets a variant
+    def changed(c: LinkerConfig): Seq[Int] =
+      c.productIterator.zip(base.productIterator).zipWithIndex
+        .collect { case ((a, b), i) if a != b => i }.toSeq
+    assert(variants.map(changed) == (0 until base.productArity).map(Seq(_)))
+    val key = Linker.memoKey(base, 1.2, 7L)
+    variants.zip(base.productElementNames.toSeq).foreach { case (v, field) =>
+      assert(Linker.memoKey(v, 1.2, 7L) != key, s"changing $field kept the key")
+    }
+    assert(Linker.memoKey(base, 1.3, 7L) != key && Linker.memoKey(base, 1.2, 8L) != key)
+    assert(Linker.memoKey(base.copy(ids = List("Q1", "Q2")), 1.2, 7L) ==
+      Linker.memoKey(base.copy(ids = Vector("Q1", "Q2")), 1.2, 7L))
+  }
+
   test("salting path yields identical candidates to the unsalted join") {
     val base = Linker.lookup(spark, mentionsOf("Alderton", "Springfield"), index,
       LinkerConfig(limit = 100, hotTokenDf = Long.MaxValue))
