@@ -4,71 +4,50 @@ import org.apache.spark.sql.SparkSession
 
 /** One pipeline leg of the scaling benchmark, run in its OWN JVM (forked
   * by [[Bench]], pinned with `taskset` to exactly `cores` CPUs and
-  * started with `-XX:ActiveProcessorCount=cores`).
+  * started with `-XX:ActiveProcessorCount=cores`) — the sandbox stand-in
+  * for "spark-submit at N and 4N executors": an N-executor cluster has N
+  * cores TOTAL for GC, JIT and Spark's auxiliary threads, whereas a
+  * local[1] leg in a shared many-core JVM free-rides the idle cores; and a
+  * long-lived JVM carries codegen classes and old-gen pressure from
+  * earlier work into whichever leg runs later.
   *
-  * Why a fresh pinned JVM per leg — this is the faithful sandbox stand-in
-  * for the north rule's "spark-submit at N and 4N executors":
-  *  - an N-executor cluster has N cores TOTAL: GC, JIT and Spark's
-  *    auxiliary threads compete for them. In a shared 32-core JVM the
-  *    local[1] leg free-rides ~31 idle cores for GC/JIT, understating
-  *    its true 1-core cost and deflating the measured efficiency;
-  *  - a long-lived bench JVM accumulates codegen classes, metaspace and
-  *    old-gen pressure from earlier queries, inflating whichever leg
-  *    runs later (the r2 driver run's local[4] leg was 2× the same
-  *    config in a fresh JVM).
-  *
-  * args: pagesPath dumpPath workDir cores. env SPARK_GRAFT_LEG_WARMUP
-  * (full|short|skip, set by the parent from its remaining deadline)
-  * sizes the JIT warmup; SPARK_GRAFT_LEG_PASSES (default 1) runs the
-  * measured job that many times in THIS JVM and reports the fastest
-  * pass. Multi-pass is a DIAGNOSTIC, not the protocol: a second pass
-  * was measured NOT to run warm — Spark generates fresh whole-stage-
-  * codegen classes every run, so each pass re-JITs them from scratch
-  * (24k 1-core: pass 1 94.3 s wall / 83.9 s jit, pass 2 110.5 s /
-  * 80.9 s jit with 3× the GC from pass-1 localCheckpoint blocks). The
-  * ~50-110 s of in-window compiler time per pipeline run is an
-  * irreducible per-run cost at both core counts, not cold-JVM residue.
-  * Prints ONE JSON contract line parsed by Bench:
+  * args: pagesPath dumpPath workDir cores. Runs a JIT warmup, drains the
+  * compile queue ([[settleJit]]), then times ONE Pipeline.run + triples
+  * count: a second pass in the same JVM does not run warm (Spark generates
+  * fresh whole-stage-codegen classes each run and re-JITs them), so
+  * fresh-JVM min-of-k is the protocol. Prints ONE contract line:
   * {"cores":N,"sec":S,"triples":T,"task_sec":A,"gc_sec":G,"jit_sec":J,
-  *  "warmup":"full|short|skip","warmup_sec":W[,"cold_sec":C]}
-  * (warmup_sec includes the post-warmup JIT-settle idle — see settleJit;
-  * cold_sec, present when passes>1, discloses the cold pass-1 wall)
-  * where sec (wall for Pipeline.run + triples count, after the session
-  * is up — cluster-size comparisons should not include JVM/session
-  * boot) is the measurement and the rest is regime evidence: task_sec
-  * near-parity across legs shows the job does the same work at both
-  * cluster sizes, gc/jit attribute any wall residue.
+  *  "warmup_sec":W}
+  * sec (after session boot) is the measurement; task_sec near-parity
+  * across legs shows the same work at both sizes, gc/jit attribute any
+  * wall residue, and warmup_sec includes the JIT settle.
   */
 object BenchLeg {
 
-  /** RAM-backed scratch root for bench corpora, stage workdirs and Spark
-    * local dirs (shuffle files, spills, localCheckpoint disk tier).
-    *
-    * Why not /tmp: on a real N-executor cluster every executor brings its
-    * own local NVMe — scratch bandwidth SCALES with cluster size. This
-    * sandbox has one shared virtio disk whose measured throughput is both
-    * slower than tmpfs (~0.4-0.7 vs ~2.5 GB/s) and drifts ~1.7× between
-    * consecutive identical writes; leaving scratch on it makes the leg
-    * comparison measure the disk's minute-to-minute mood, not the job
-    * (measured: the identical pinned 4-core leg 145-295 s on disk vs
-    * 117 s on tmpfs, with task-seconds inflating in step). RAM-backed
-    * scratch restores the per-executor-scaling property the N-vs-4N
-    * comparison assumes. tmpfs is typically capped at 50% RAM and must
-    * hold the 2× corpus plus shuffle/spill, so /dev/shm is only chosen
-    * when it has comfortable headroom (ENOSPC mid-leg on a tight box
-    * would be worse than the disk's drift). Override with
-    * SPARK_GRAFT_BENCH_SCRATCH. */
+  /** RAM-backed scratch root for the corpus, stage workdirs and Spark
+    * local dirs. On a cluster every executor brings its own local disk, so
+    * scratch bandwidth scales with cluster size; this box's one shared
+    * virtio disk drifts ~1.7× between identical writes (the identical
+    * pinned 4-core leg measured 145-295 s on disk vs 117 s on tmpfs).
+    * /dev/shm is RAM, so it is only chosen with [[ShmHeadroomBytes]]
+    * usable (ENOSPC mid-leg would be worse than the disk's drift).
+    * Override with SPARK_GRAFT_BENCH_SCRATCH. */
   private[graft] lazy val scratchRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_SCRATCH", {
       val shm = new java.io.File("/dev/shm")
-      val needBytes = 16L << 30 // 768k-page corpus ~2 GB + shuffle/spill headroom
       val root =
-        if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= needBytes)
+        if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= ShmHeadroomBytes)
           "/dev/shm"
         else System.getProperty("java.io.tmpdir", "/tmp")
       System.err.println(s"[bench] scratch root: $root")
       root
     })
+
+  /** A full 24k-page run peaked at 35.5 MB of /dev/shm (corpus 7.1 MB, a
+    * leg's stage, warmup and spark.local dirs, the gate session's local
+    * dir; 1 s df sampling). 2 GiB is ~60× that peak, room for other
+    * tenants of /dev/shm to grow during the run. */
+  private[graft] val ShmHeadroomBytes: Long = 2L << 30
 
   /** Delete scratch left by a SIGKILLed prior run (shutdown hooks don't
     * fire on SIGKILL, and stale tmpfs dirs pin RAM until reboot). Called
@@ -79,8 +58,7 @@ object BenchLeg {
     val fs = Option(new java.io.File(scratchRoot).listFiles()).getOrElse(Array.empty)
     fs.foreach { f =>
       val n = f.getName
-      if ((n.startsWith("graft-bench-") || n.startsWith("graft-leg-local-"))
-          && !n.endsWith(self)) {
+      if (n.startsWith("graft-bench-") && !n.endsWith(self)) {
         System.err.println(s"[bench] sweeping stale scratch ${f.getPath}")
         try scala.reflect.io.Directory(f).deleteRecursively()
         catch { case _: Exception => }
@@ -88,44 +66,23 @@ object BenchLeg {
     }
   }
 
-  /** Pipeline-tuned session (shared with Bench's in-process fallback):
-    * FIXED shuffle partitioning (default 16 = 4× the high leg's cores,
-    * override via SPARK_GRAFT_BENCH_SHUFFLE_PARTS) with AQE
-    * partition-coalescing OFF — AQE otherwise coalesces the pipeline's
-    * mid-size shuffles down to 1-2 post-shuffle partitions and
-    * serializes whole stages. The partition count deliberately does NOT
-    * scale with the leg's cores: a cluster job's shuffle.partitions is a
-    * job property, not a cluster-size property (Spark's own default is a
-    * static 200), and per-leg partition counts would make the two legs
-    * run different task layouts — the N-core leg must execute the SAME
-    * job with less parallelism, not a cheaper job. 8 MB splits so a
-    * few-hundred-MB corpus still scans with `cores` tasks. */
-  def pipelineSession(cores: Int): SparkSession = {
-    val parts = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE_PARTS", "16").toInt
-    // RAM-backed shuffle/spill dir (see scratchRoot); honor an explicit
-    // -Dspark.local.dir (forked legs get a per-run dir from Bench), else
-    // a per-pid dir cleaned on JVM exit
-    val localDir = sys.props.getOrElse("spark.local.dir", {
-      val d = s"$scratchRoot/graft-leg-local-${ProcessHandle.current().pid()}"
-      // hook registration throws if the JVM is ALREADY shutting down —
-      // exactly the in-process-fallback-after-SIGTERM path; a missed
-      // cleanup beats the r4 crash (IllegalStateException at this line
-      // was the uncaught exception in the BENCH_r04 tail)
-      try Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()))
-      catch { case _: IllegalStateException => () }
-      d
-    })
+  /** Pipeline-tuned session with AQE partition-coalescing OFF — AQE
+    * otherwise coalesces the pipeline's mid-size shuffles down to 1-2
+    * post-shuffle partitions and serializes whole stages. 8 MB splits so
+    * a tens-of-MB corpus still scans with `cores` tasks. spark.local.dir
+    * comes from the -D property Bench sets per leg (RAM-backed). */
+  private def pipelineSession(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-leg-$cores")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", parts)
+      // 4× the high leg's cores and NOT scaled per leg: shuffle.partitions
+      // is a job property, not a cluster-size property — the N-core leg
+      // must run the SAME task layout with less parallelism
+      .config("spark.sql.shuffle.partitions", 16)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .getOrCreate()
@@ -133,19 +90,12 @@ object BenchLeg {
     s
   }
 
-  def runLeg(spark: SparkSession, pagesPath: String, dumpPath: String,
-             workDir: String): (Long, Double) = {
-    val t0 = System.nanoTime()
-    val out = graft.kg.Pipeline.run(spark,
-      spark.read.parquet(pagesPath), spark.read.parquet(dumpPath), workDir)
-    val nTriples = out.triples.count()
-    (nTriples, (System.nanoTime() - t0) / 1e9)
-  }
+  private def runPipeline(spark: SparkSession, pages: org.apache.spark.sql.DataFrame,
+                          dump: org.apache.spark.sql.DataFrame, workDir: String): Long =
+    graft.kg.Pipeline.run(spark, pages, dump, workDir).triples.count()
 
   /** Leg-level diagnostics: where did the wall go — mutator task time,
-    * GC, or JIT compilation still running inside the timed window? The
-    * task/gc/jit figures ride the JSON contract line (object header
-    * above) as regime evidence; per-phase breakdowns also go to stderr.
+    * GC, or JIT compilation still running inside the timed window?
     * Counter windows are made exact by draining the async listener bus
     * at both edges (GraftListenerBridge). */
   private final class Diag(spark: SparkSession) {
@@ -166,12 +116,12 @@ object BenchLeg {
       taskSec = 0.0; gcSec = 0.0; jit0 = totalJitMs
     }
     def jitSinceMark: Double = (totalJitMs - jit0) / 1e3
-    def settle(): Unit =
+    /** Drains the bus first, so the counters include every finished stage. */
+    def report(tag: String, wall: Double): Unit = {
       org.apache.spark.GraftListenerBridge.drainListeners(spark.sparkContext)
-    def report(tag: String, wall: Double): Unit =
-      System.err.println(
-        f"[bench-leg] $tag wall=$wall%.1f taskSec=$taskSec%.1f " +
-          f"gcSec=$gcSec%.1f jitSec=$jitSinceMark%.1f")
+      System.err.println(f"[bench-leg] $tag wall=$wall%.1f taskSec=$taskSec%.1f " +
+        f"gcSec=$gcSec%.1f jitSec=$jitSinceMark%.1f")
+    }
   }
 
   private def totalJitMs: Long =
@@ -179,21 +129,12 @@ object BenchLeg {
       .getTotalCompilationTime
 
   /** Drain the JIT compile queue OUTSIDE the timed window: idle the
-    * mutator in 3 s slices until the compiler threads go quiet (<0.8 s
-    * of compiler time per slice) or `capSec` elapses. Rationale: a
-    * warmup pass triggers the compilations, but the background compiler
-    * queue keeps burning CPU after the pass returns — on a pinned
-    * 1-core leg those threads then steal the core from the mutator
-    * INSIDE the measured window. Measured (dress 3, throttled host
-    * hour): 126 s of in-window compiler time on the 1-core 24k leg
-    * after a completed full warmup (wall 133.8 s vs 84-91 s in quiet
-    * hours), and the 4-core leg's [75, 28] s run spread was entirely
-    * in-window JIT. While the mutator sleeps the compiler has the
-    * pinned core to itself, so the queue drains at full speed; both
-    * legs run the same settle, and a real cluster's long-running warm
-    * executors have no in-window JIT at all. Returns the settle wall;
-    * the cost is charged to the leg's overhead (forkWall − sec) like
-    * the rest of warmup. */
+    * mutator in 3 s slices until the compiler goes quiet (<0.8 s of
+    * compiler time per slice) or `capSec` elapses. The queue a warmup
+    * leaves keeps burning CPU, and on a pinned 1-core leg it steals the
+    * core INSIDE the window (measured: 126 s of in-window JIT, wall
+    * 133.8 s vs 84-91 s quiet). Both legs run the same settle; the cap is
+    * a safety valve well above every observed settle (one slice). */
   private def settleJit(capSec: Double): Double = {
     val t0 = System.nanoTime()
     var last = totalJitMs
@@ -207,106 +148,47 @@ object BenchLeg {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** JIT/classload warmup: one pipeline pass over a tiny slice of the
-    * same inputs (same code paths, negligible data). A fresh JVM
-    * otherwise spends ~30-60 s compiling the Spark stack + generated
-    * code INSIDE the timed window — a fixed cost that lands in the
-    * parallelism-independent floor and corrupts the N-vs-4N comparison
-    * (executors on a real cluster are warm long-running JVMs). Sizing is
-    * deadline-aware via the parent-chosen mode: "full" (800 pages) when
-    * time is comfortable, "short" (200) when thin, "skip" when a cold
-    * leg with ~40-90 s of in-window JIT beats having no leg at all —
-    * the mode rides the contract line so the caveat stays visible. */
-  private def warmup(spark: SparkSession, pagesPath: String,
-                     dumpPath: String, workDir: String, mode: String): Unit = {
-    val (defPages, defLines) = if (mode == "short") (200, 80) else (800, 300)
-    val pages = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PAGES", defPages.toString).toInt
-    val lines = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_LINES", defLines.toString).toInt
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PASSES", "1").toInt
-    (1 to passes).foreach { p =>
-      val dir = s"$workDir-warmup$p"
-      try {
-        val out = graft.kg.Pipeline.run(spark,
-          spark.read.parquet(pagesPath).limit(pages),
-          spark.read.parquet(dumpPath).limit(lines), dir)
-        out.triples.count()
-      } catch { case e: Exception =>
-        System.err.println(s"[bench-leg] warmup failed (non-fatal): $e")
-      } finally {
-        scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = try {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val Array(pagesPath, dumpPath, workDir, coresStr) = args
     val cores = coresStr.toInt
-    val mode = sys.env.getOrElse("SPARK_GRAFT_LEG_WARMUP", "full")
     val spark = pipelineSession(cores)
     val diag = new Diag(spark)
-    val wWall =
-      if (mode == "skip") 0.0
-      else {
-        val t0 = System.nanoTime()
-        warmup(spark, pagesPath, dumpPath, workDir, mode)
-        // cap is a safety valve, not a budget: every observed settle across
-        // the dress/stress runs finished quiet in one 3 s slice, and a
-        // capped-out settle would leave residual JIT asymmetrically inside
-        // the 1-core window — so the cap sits well above any observed need
-        val settle = settleJit(if (mode == "full") 150.0 else 45.0)
-        System.err.println(f"[bench-leg] jit settle wall=$settle%.1f")
-        (System.nanoTime() - t0) / 1e9
-      }
+    val w0 = System.nanoTime()
+    // JIT/classload warmup over a slice of the same inputs (same code
+    // paths, negligible data): a fresh JVM otherwise spends ~30-60 s
+    // compiling the Spark stack + generated code INSIDE the timed window,
+    // while a real cluster's executors are warm long-running JVMs
+    val warm = s"$workDir-warmup"
+    try runPipeline(spark, spark.read.parquet(pagesPath).limit(800),
+      spark.read.parquet(dumpPath).limit(300), warm)
+    catch { case e: Exception =>
+      System.err.println(s"[bench-leg] warmup failed (non-fatal): $e")
+    } finally scala.reflect.io.Directory(new java.io.File(warm)).deleteRecursively()
+    val settle = settleJit(150.0)
+    System.err.println(f"[bench-leg] jit settle wall=$settle%.1f")
+    val wWall = (System.nanoTime() - w0) / 1e9
     diag.report("warmup", wWall)
-    val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_LEG_PASSES", "1").toInt)
-    // (sec, triples, taskSec, gcSec, jitSec) per pass; each pass gets a
-    // fresh stage dir so the pipeline's _COMMITTED resume markers cannot
-    // leak work between passes (and no .cache()/.persist() exists in the
-    // pipeline for CacheManager to match across passes — verified)
-    val runs = (1 to passes).flatMap { p =>
-      try {
-        if (p > 1) {
-          val s = settleJit(30.0)
-          System.err.println(f"[bench-leg] inter-pass jit settle wall=$s%.1f")
-        }
-        diag.mark()
-        val (nTriples, sec) = runLeg(spark, pagesPath, dumpPath, s"$workDir/p$p")
-        diag.settle()
-        diag.report(s"main p$p", sec)
-        Some((sec, nTriples, diag.taskSec, diag.gcSec, diag.jitSinceMark))
-      } catch {
-        // a failed LATER pass must not discard the banked earlier passes
-        // (e.g. transient scratch ENOSPC on pass 2 of a diagnostic run):
-        // report the min over completed passes. Pass 1 has nothing banked,
-        // so its failure stays fatal.
-        case e: Throwable if p > 1 =>
-          System.err.println(s"[bench-leg] pass $p failed (keeping " +
-            s"${p - 1} completed pass(es)): $e")
-          None
-      }
-    }
-    if (runs.map(_._2).distinct.size > 1)
-      System.err.println(s"[bench-leg] WARNING: triples differ across passes: " +
-        runs.map(_._2).mkString(","))
-    val (sec, nTriples, taskSec, gcSec, jitSec) = runs.minBy(_._1)
-    val cold = if (passes > 1) f""","cold_sec":${runs.head._1}%.1f""" else ""
+
+    diag.mark()
+    val t0 = System.nanoTime()
+    val nTriples = runPipeline(spark, spark.read.parquet(pagesPath),
+      spark.read.parquet(dumpPath), s"$workDir/stages")
+    val sec = (System.nanoTime() - t0) / 1e9
+    diag.report("main", sec)
+    val (taskSec, gcSec, jitSec) = (diag.taskSec, diag.gcSec, diag.jitSinceMark)
     spark.stop()
-    // contract line (see object header): sec+triples are the measurement;
-    // task/gc/jit/warmup are the regime evidence the artifact carries so
-    // a sub-1.0 efficiency is attributable (near-equal task_sec across
-    // legs = same work at both cluster sizes; the residual wall-ratio gap
-    // is shared single-box memory bandwidth, not poor parallelism)
-    println(f"""{"cores":$cores,"sec":$sec%.3f,"triples":$nTriples,"task_sec":$taskSec%.1f,"gc_sec":$gcSec%.1f,"jit_sec":$jitSec%.1f,"warmup":"$mode","warmup_sec":$wWall%.1f$cold}""")
+    // contract line (see object header)
+    println(f"""{"cores":$cores,"sec":$sec%.3f,"triples":$nTriples,"task_sec":$taskSec%.1f,"gc_sec":$gcSec%.1f,"jit_sec":$jitSec%.1f,"warmup_sec":$wWall%.1f}""")
   } catch {
     case e: Throwable =>
       // a SIGTERM'd leg runs its shutdown hooks (which stop the
       // SparkContext) while main is still mid-pipeline; the resulting
       // "stopped SparkContext" throw is teardown noise, not a failure —
-      // keep the parent's inherited stderr (and the driver's recorded
-      // tail window) free of stack traces. The JVM's signal handler owns
-      // the exit code (143), so the parent still classifies the kill.
-      // A genuine failure with NO shutdown in progress rethrows loudly.
+      // keep the inherited stderr (and the driver's recorded tail window)
+      // free of stack traces. The JVM's signal handler owns the exit code
+      // (143), so the parent still classifies the kill. A genuine failure
+      // with NO shutdown in progress rethrows loudly.
       val shuttingDown =
         try {
           val probe = new Thread(() => ())
