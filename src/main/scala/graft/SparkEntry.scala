@@ -568,7 +568,7 @@ object SparkEntry {
     }),
 
     // ---- flagship: PRODUCTION candidate-gen path — token-pair posting
-    //      lists + common-pair blocking (Linker.blockedMentionTokens /
+    //      lists + common-pair blocking (Linker.blockedKeys /
     //      NameIndex.tokenPairs+postingsPair) + min-should-match + scoring
     //      + top-k. The naive unblocked token join this replaces was a
     //      skewed mega-posting join (TPC-H part names draw 5 tokens from a
@@ -634,7 +634,7 @@ object SparkEntry {
 
   /** PRODUCTION candidate generation: pair-posting index
     * (NameIndex.postingsPair) + common-pair blocking
-    * (Linker.blockedMentionTokens) + min-should-match + ed/jaccard
+    * (Linker.blockedKeys) + min-should-match + ed/jaccard
     * features + per-mention top-3 window. */
   private def gateLookupRanked(s: SparkSession, dir: String): DataFrame = {
     val parts = gateParts(s, dir)
@@ -644,11 +644,9 @@ object SparkEntry {
     val pairDf = pairTable.groupBy("pair").agg(count(lit(1)).as("df"))
     // production blocking rule over PAIRS: a common pair generates no
     // candidates unless every pair of the mention is common
-    val mentionPairs = mentions.select(col("mention").as("mention_norm"),
-      graft.kg.NameIndex.tokenPairs(col("mention_tokens")).as("mention_tokens"))
-    val kept = graft.kg.Linker.blockedMentionTokens(mentionPairs,
-      pairDf.withColumnRenamed("pair", "token"), GateCommonDf)
-    val cands = kept.withColumnRenamed("token", "pair")
+    val cands = graft.kg.Linker.blockedKeys(
+        mentions.select(col("mention").as("mention_norm"), col("mention_tokens")),
+        graft.kg.NameIndex.tokenPairs(col("mention_tokens")), "pair", pairDf, GateCommonDf)
       .join(pairTable, Seq("pair"))
       .select(col("mention_norm").as("mention"), col("name_row_id").as("p_partkey"))
       .distinct()

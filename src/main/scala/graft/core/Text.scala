@@ -102,7 +102,7 @@ object Text {
     array_sort(array_distinct(array_except(alnum, lit(EnglishStopwords.toArray))))
   }
 
-  /** `ntoken` / `length` index-time features (`scripts/indexing.py:330-336`). */
+  /** `ntoken` index-time feature (`scripts/indexing.py:330-336`); its
+    * `length` sibling is Spark's own `length`. */
   def ntoken(c: Column): Column = size(tokens(c))
-  def strlen(c: Column): Column = length(c)
 }

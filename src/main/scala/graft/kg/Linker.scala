@@ -7,8 +7,8 @@ import graft.core.{Similarity, Text}
 
 /** Lookup / linking configuration — the parameter surface of
   * `LookupRetriever.search` (`lamapi/retrievers/lookup_retriever.py:13-29`).
-  * `saltShards` / `hotTokenDf` are our scale knobs (north rule: salted
-  * shuffle joins for skewed tokens).
+  * `hotTokenDf` is our scale knob (north rule: salted shuffle joins for
+  * skewed tokens; the shard count is `Linker`'s fixed `SaltShards`).
   */
 case class LinkerConfig(
     limit: Int = 1000,
@@ -19,7 +19,6 @@ case class LinkerConfig(
     extendedTypes: Seq[String] = Nil,
     language: Option[String] = None,
     softFiltering: Boolean = false,
-    saltShards: Int = 8,
     hotTokenDf: Long = 100000L,
     /** Candidate-generation blocking (Lucene common-terms /
       * minimum_should_match analog): a token whose posting list exceeds
@@ -118,6 +117,10 @@ object Linker {
     * in the driver (see `expandTokens`). */
   private val VocabDriverMax = 20000L
 
+  /** Shards a hot token's posting list is replicated into by the salted
+    * exact-match join. */
+  private val SaltShards = 8
+
   /** ES AUTO fuzziness: max edits allowed for a token of given length. */
   def autoFuzzEdits(len: Column): Column =
     when(len < 3, 0).when(len < 6, 1).otherwise(2)
@@ -131,21 +134,24 @@ object Linker {
       .withColumn("mention_tokens", Text.tokenSet(col("mention_norm")))
       .withColumn("mention_grams", Text.ngramSet(col("mention_norm"), 3))
 
-  /** The generation-eligible (mention, token) pairs after common-token
-    * blocking: common tokens are kept ONLY for mentions with no rarer
-    * token. Shared by candidate generation and the minimum_should_match
-    * bound (which must not demand more matches than eligible tokens). */
-  def blockedMentionTokens(mentionsD: DataFrame, tokenDf: DataFrame,
-                           commonDf: Long): DataFrame = {
-    val mtokAll = mentionsD
-      .select(col("mention_norm"), explode(col("mention_tokens")).as("token"))
-      .join(tokenDf, Seq("token"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
+  /** Common-key blocking (see LinkerConfig.commonTokenDf): the
+    * generation-eligible (mention_norm, key) rows, where a key whose df
+    * exceeds `commonDf` is kept ONLY for mentions with no rarer key. One
+    * rule for single tokens, for token pairs, and for the flagship gates.
+    * @param mentions (mention_norm, …)
+    * @param keys     each mention's key array, over `mentions`' columns
+    * @param key      name of the key column, in `keyDf` and the output
+    * @param keyDf    (key, df) posting-list lengths */
+  def blockedKeys(mentions: DataFrame, keys: Column, key: String,
+                  keyDf: DataFrame, commonDf: Long): DataFrame = {
     val wMent = Window.partitionBy(col("mention_norm"))
-    mtokAll
+    mentions
+      .select(col("mention_norm"), explode(keys).as(key))
+      .join(keyDf, Seq(key), "left")
+      .withColumn("df", coalesce(col("df"), lit(0L)))
       .withColumn("min_df", min(col("df")).over(wMent))
       .filter(col("df") <= commonDf || col("min_df") > commonDf)
-      .select(col("mention_norm"), col("token"))
+      .select(col("mention_norm"), col(key))
   }
 
   /** Exact token matches: (mention_norm, name_row_id, token), salted on
@@ -157,22 +163,19 @@ object Linker {
                         postings: DataFrame, tokenDf: DataFrame,
                         commonDf: Long, cfg: LinkerConfig,
                         hotTokens: Option[Set[String]] = None): DataFrame = {
-    import spark.implicits._
-    val mtok = blockedMentionTokens(mentionsD, tokenDf, commonDf)
+    val mtok = blockedKeys(mentionsD, col("mention_tokens"), "token", tokenDf, commonDf)
 
     // hot tokens: precomputed at index-build time when available (skips a
     // mid-DAG collect job), else from the df table (tiny result)
-    val hot = hotTokens.getOrElse(tokenDf.filter(col("df") >= cfg.hotTokenDf)
-      .select("token").as[String].collect().toSet)
+    val hot = hotTokens.getOrElse(NameIndex.hotTokens(tokenDf, cfg.hotTokenDf))
 
     if (hot.isEmpty) {
       mtok.join(postings, Seq("token"))
         .select(col("mention_norm"), col("name_row_id"), col("token"))
     } else {
       val hotArr = typedLit(hot.toSeq.sorted)
-      val s = cfg.saltShards
-      val salts = spark.range(s).select(col("id").cast("int").as("salt"))
-      // posting side: hot tokens replicated into s shards, cold salt=0
+      val salts = spark.range(SaltShards).select(col("id").cast("int").as("salt"))
+      // posting side: hot tokens replicated into SaltShards shards, cold salt=0
       val pCold = postings.filter(!array_contains(hotArr, col("token")))
         .withColumn("salt", lit(0))
       val pHot = postings.filter(array_contains(hotArr, col("token")))
@@ -180,7 +183,7 @@ object Linker {
       // mention side: deterministic shard by mention hash
       val m = mtok.withColumn("salt",
         when(array_contains(hotArr, col("token")),
-          pmod(xxhash64(col("mention_norm")), lit(s)).cast("int")).otherwise(lit(0)))
+          pmod(xxhash64(col("mention_norm")), lit(SaltShards)).cast("int")).otherwise(lit(0)))
       m.join(pCold.unionByName(pHot), Seq("token", "salt"))
         .select(col("mention_norm"), col("name_row_id"), col("token"))
     }
@@ -258,8 +261,23 @@ object Linker {
     // the driver-built expansion table is small, so phase 2 broadcasts it;
     // the hint sits on the join that consumes it
     val (exps, inDriver) = expandTokens(mentionsD, postings3g, tokenDf, VocabDriverMax)
-    fuzzyPhase2(mentionsD, postings, tokenDf, commonDf,
-      if (inDriver) broadcast(exps) else exps)
+    fuzzyTargets(mentionsD, if (inDriver) broadcast(exps) else exps, tokenDf, commonDf)
+      .join(postings, Seq("token"))
+      .select(col("mention_norm"), col("name_row_id"), col("token"))
+      .distinct()
+  }
+
+  /** Phase 2's (mention_norm, token) targets: every accepted expansion of
+    * each mention token, minus common targets (df > commonDf, the exact
+    * path's blocking policy). Not distinct. */
+  private def fuzzyTargets(mentionsD: DataFrame, expansions: DataFrame,
+                           tokenDf: DataFrame, commonDf: Long): DataFrame = {
+    val rareExpansions = expansions
+      .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
+    mentionsD
+      .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
+      .join(rareExpansions, Seq("mtok"))
+      .select(col("mention_norm"), col("token"))
   }
 
   /** Phase 1 only: the accepted (mtok → index token) fuzzy expansions.
@@ -378,20 +396,6 @@ object Linker {
       .select(col("mtok"), col("token")), false)
   }
 
-  /** phase 2: expansions (minus common targets) → mentions → postings. */
-  private def fuzzyPhase2(mentionsD: DataFrame, postings: DataFrame,
-                          tokenDf: DataFrame, commonDf: Long,
-                          expansions: DataFrame): DataFrame = {
-    val rareExpansions = expansions
-      .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
-    val mentionTok = mentionsD
-      .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
-    mentionTok.join(rareExpansions, Seq("mtok"))
-      .join(postings, Seq("token"))
-      .select(col("mention_norm"), col("name_row_id"), col("token"))
-      .distinct()
-  }
-
   /** Fuzzy candidates of the minimum_should_match branch: the expansion →
     * posting join, aggregated to per-(mention, name row) stats (n_f, idf_f)
     * over the distinct fuzzy tokens not in the mention's own token set. */
@@ -404,13 +408,9 @@ object Linker {
     // triples: postings are unique per (token, name_row), so distinct
     // (m, token) targets yield (m, n, token) triples with NO duplicates
     // and the per-candidate stats reduce to a plain codegen count/sum.
-    val rareExpansions = expansions
-      .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
-    val mentionTok = mentionsD
-      .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
-    val targets = mentionTok.join(rareExpansions, Seq("mtok"))
-      .select(col("mention_norm"), col("token")).distinct()
-      .join(mentionTok.select(col("mention_norm"), col("mtok").as("token")),
+    val targets = fuzzyTargets(mentionsD, expansions, tokenDf, commonDf).distinct()
+      .join(mentionsD.select(col("mention_norm"),
+          explode(col("mention_tokens")).as("token")),
         Seq("mention_norm", "token"), "left_anti")
     targets
       .join(idf, Seq("token"), "left")
@@ -454,23 +454,26 @@ object Linker {
     //      first in result order (pos asc) ----
     val wEnt = Window.partitionBy(col("mid"), col("id"))
       .orderBy((col("ed_score") + col("jaccard_score")).desc, col("pos").asc)
-    val main = feat2
+    // the reference candidate object in output order, plus mid and rank
+    def candidateOutput(df: DataFrame): DataFrame = df.select(
+      col("mid"), col("mention_norm"), col("id"), col("name"), col("description"),
+      col("types_text"),
+      col("kind"), col("ner_type").as("NERtype"),
+      col("explicit_types"), col("extended_types"),
+      col("ambiguity_mention"), col("corrects_tokens"),
+      Text.ntoken(col("mention_norm")).as("ntoken_mention"),
+      col("ntoken").as("ntoken_entity"),
+      length(col("mention_norm")).as("length_mention"),
+      col("length").as("length_entity"),
+      popularity.as("popularity"),
+      col("pos_score"), col("es_score"), col("ed_score"),
+      col("jaccard_score"), col("jaccardNgram_score"),
+      col("rank"))
+
+    val main = candidateOutput(feat2
       .withColumn("variant_rank", row_number().over(wEnt))
       .filter(col("variant_rank") === 1)
-      .select(
-        col("mid"), col("mention_norm"), col("id"), col("name"), col("description"),
-        col("types_text"),
-        col("kind"), col("ner_type").as("NERtype"),
-        col("explicit_types"), col("extended_types"),
-        col("ambiguity_mention"), col("corrects_tokens"),
-        Text.ntoken(col("mention_norm")).as("ntoken_mention"),
-        col("ntoken").as("ntoken_entity"),
-        length(col("mention_norm")).as("length_mention"),
-        col("length").as("length_entity"),
-        popularity.as("popularity"),
-        col("pos_score"), col("es_score"), col("ed_score"),
-        col("jaccard_score"), col("jaccardNgram_score"),
-        col("pos").as("rank"))
+      .withColumnRenamed("pos", "rank"))
 
     val full = if (cfg.ids.isEmpty) main else {
       import spark.implicits._
@@ -488,37 +491,19 @@ object Linker {
         .withColumn("rn", row_number().over(w1)).filter(col("rn") === 1)
 
       val perMention = main.groupBy(col("mid")).agg(
-        first(col("ambiguity_mention")).as("amb_m"),
-        first(col("corrects_tokens")).as("cor_m"),
+        first(col("ambiguity_mention")).as("ambiguity_mention"),
+        first(col("corrects_tokens")).as("corrects_tokens"),
         max(col("rank")).as("max_rank"))
       val missing = mentionsDM.crossJoin(forcedIds)
         .join(main.select("mid", "id"), Seq("mid", "id"), "left_anti")
 
       val wForced = Window.partitionBy(col("mid")).orderBy(col("req_pos"))
-      val fetched = missing.join(oneRow, Seq("id"))
+      val fetched = candidateOutput(missing.join(oneRow, Seq("id"))
         .join(perMention, Seq("mid"), "left")
-        .select(
-          col("mid"), col("mention_norm"), col("id"), col("name"), col("description"),
-          col("types_text"),
-          col("kind"), col("ner_type").as("NERtype"),
-          col("explicit_types"), col("extended_types"),
-          col("amb_m").as("ambiguity_mention"),
-          col("cor_m").as("corrects_tokens"),
-          Text.ntoken(col("mention_norm")).as("ntoken_mention"),
-          col("ntoken").as("ntoken_entity"),
-          length(col("mention_norm")).as("length_mention"),
-          col("length").as("length_entity"),
-          popularity.as("popularity"),
-          // a 1-hit ES response: pos_score = (0+1)/1, es_score = s/s = 1
-          lit(1.0).as("pos_score"), lit(1.0).as("es_score"),
-          Similarity.editDistanceScore(col("name_clean"), col("mention_norm"))
-            .as("ed_score"),
-          Similarity.setOverlapScore(col("name_tokens"), col("mention_tokens"))
-            .as("jaccard_score"),
-          Similarity.setOverlapScore(col("name_grams"), col("mention_grams"))
-            .as("jaccardNgram_score"),
-          (coalesce(col("max_rank"), lit(0)) + row_number().over(wForced))
-            .as("rank"))
+        .select(col("*") +: similarityFeatures: _*)
+        // a 1-hit ES response: pos_score = (0+1)/1, es_score = s/s = 1
+        .withColumn("pos_score", lit(1.0)).withColumn("es_score", lit(1.0))
+        .withColumn("rank", coalesce(col("max_rank"), lit(0)) + row_number().over(wForced)))
       main.unionByName(fetched)
     }
 
@@ -578,14 +563,13 @@ object Linker {
     * the scoring-relevant columns); precompute at index-build time via
     * [[NameIndexTables.fingerprint]] to keep even that scan off the
     * linking critical path. */
-  def indexFingerprint(index: NameIndexTables): Long =
-    index.fingerprint.getOrElse {
-      val r = index.names.agg(
-        count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("name_row_id"), col("popularity_norm"),
-          col("kind"))), lit(0L)).as("x")).head()
-      (r.getLong(0) * 0x9E3779B97F4A7C15L) ^ r.getLong(1)
-    }
+  def indexFingerprint(names: DataFrame): Long = {
+    val r = names.agg(
+      count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(col("name_row_id"), col("popularity_norm"),
+        col("kind"))), lit(0L)).as("x")).head()
+    (r.getLong(0) * 0x9E3779B97F4A7C15L) ^ r.getLong(1)
+  }
 
   /** Deterministic memo key for a linking configuration + index content —
     * results are only reusable under the SAME filters/limits/scoring
@@ -630,7 +614,8 @@ object Linker {
   def linkTop1Memoized(spark: SparkSession, mentions: DataFrame,
                        index: NameIndexTables, cfg: LinkerConfig,
                        minScore: Double, memoDir: String): DataFrame = {
-    val key = memoKey(cfg, minScore, indexFingerprint(index))
+    val key = memoKey(cfg, minScore,
+      index.fingerprint.getOrElse(indexFingerprint(index.names)))
     val memoRaw = readMemo(spark, memoDir)
     val mentionsD = mentions.select(col("mention_norm"))
       .filter(col("mention_norm") =!= "").distinct()
@@ -701,6 +686,34 @@ object Linker {
     spark.read.parquet(memoDir).count()
   }
 
+  /** One lookup filter (P3-P7, `create_query`:535-610): the names column
+    * it reads, its hard predicate, and — when it has one — the
+    * should-boost and the miss penalty it becomes under soft filtering. */
+  private case class NameFilter(column: String, pred: Column,
+                                boost: Option[Double] = None,
+                                penalty: Option[Double] = None)
+
+  /** The filters `cfg` sets, in boost-term order. */
+  private def nameFilters(cfg: LinkerConfig): Seq[NameFilter] = Seq(
+    cfg.kind.map(k => NameFilter("kind", col("kind") === k)),
+    Option.when(cfg.nerTypes.nonEmpty)(NameFilter("ner_type",
+      col("ner_type").isin(cfg.nerTypes: _*), boost = Some(2.0))),
+    Option.when(cfg.types.nonEmpty)(NameFilter("explicit_types",
+      arrays_overlap(col("explicit_types"), typedLit(cfg.types)),
+      boost = Some(1.5), penalty = Some(0.1))),
+    Option.when(cfg.extendedTypes.nonEmpty)(NameFilter("extended_types",
+      arrays_overlap(col("extended_types"), typedLit(cfg.extendedTypes)),
+      boost = Some(1.2), penalty = Some(0.2))),
+    cfg.language.map(l => NameFilter("languages", array_contains(col("languages"), l)))
+  ).flatten
+
+  /** Similarity features F2-F4 over the pre-built name and mention sets. */
+  private def similarityFeatures: Seq[Column] = Seq(
+    Similarity.editDistanceScore(col("name_clean"), col("mention_norm")).as("ed_score"),
+    Similarity.setOverlapScore(col("name_tokens"), col("mention_tokens")).as("jaccard_score"),
+    Similarity.setOverlapScore(col("name_grams"), col("mention_grams"))
+      .as("jaccardNgram_score"))
+
   /** Shared core of lookup/linkTop1: candidate generation + filters +
     * cut + per-mention normalization + similarity features.
     * Returns (features, mentionsD) — the distinct-mention table rides
@@ -728,11 +741,10 @@ object Linker {
 
     // index-side stats: precomputed tables when the caller built them at
     // index time (Pipeline does), else derived here
-    val nRows = index.nameRowCount.getOrElse(index.names.count()).toDouble
+    val nRows = index.nameRowCount.getOrElse(index.names.count())
     val tokenDf = index.tokenStats.getOrElse(
       NameIndex.tokenStats(index.postings).localCheckpoint(eager = false))
-    val idf = tokenDf
-      .select(col("token"), log(lit(1.0) + lit(nRows) / col("df")).as("idf"))
+    val idf = NameIndex.idf(tokenDf, nRows)
     val commonDf =
       if (cfg.commonTokenDf > 0) cfg.commonTokenDf
       else math.max(64L, (nRows * 0.005).toLong)
@@ -769,22 +781,14 @@ object Linker {
         val pairTable = index.postingsPair.getOrElse(sys.error(
           "minShouldMatch generation needs NameIndexTables.postingsPair"))
 
-        val mN = mentionsD.filter(size(col("mention_tokens")) >= 2)
-        val mentionPairs = mN.select(col("mention_norm"),
-          explode(NameIndex.tokenPairs(col("mention_tokens"))).as("pair"))
         // pair-df blocking with the same all-common fallback as tokens;
         // precomputed at index time when available (NameIndex.pairStats) —
         // re-aggregating the pair table (the LARGEST index table) here
         // would put a full index-side shuffle on every linking run
         val pairDf = index.pairStats.getOrElse(NameIndex.pairStats(pairTable))
-        val wM = Window.partitionBy(col("mention_norm"))
-        val mpKept = mentionPairs
-          .join(pairDf, Seq("pair"), "left")
-          .withColumn("df", coalesce(col("df"), lit(0L)))
-          .withColumn("min_df", min(col("df")).over(wM))
-          .filter(col("df") <= commonDf || col("min_df") > commonDf)
-          .select(col("mention_norm"), col("pair"))
-        val pairCands = mpKept.join(pairTable, Seq("pair"))
+        val pairCands = blockedKeys(mentionsD.filter(size(col("mention_tokens")) >= 2),
+            NameIndex.tokenPairs(col("mention_tokens")), "pair", pairDf, commonDf)
+          .join(pairTable, Seq("pair"))
           .select(col("mention_norm"), col("name_row_id"))
 
         val m1 = mentionsD.filter(size(col("mention_tokens")) === 1)
@@ -854,7 +858,7 @@ object Linker {
         // never rides a candidate exchange, because the scalars project
         // out within the join stage.
         val namesIdf = index.idfMaps.getOrElse(
-          NameIndex.idfMaps(index.names, tokenDf, nRows.toLong))
+          NameIndex.idfMaps(index.names, tokenDf, nRows))
         val namesIdfJ =
           if (nRows <= BroadcastIdfMapsMaxRows) broadcast(namesIdf) else namesIdf
         candStats
@@ -883,12 +887,8 @@ object Linker {
     //      of dead payload); every other column — output taxonomy + fat
     //      name/description/sets — joins AFTER the top-k cut, touching
     //      only the ≤limit survivors per mention ----
-    val filterCols = Seq(
-      cfg.kind.map(_ => "kind"),
-      if (cfg.nerTypes.nonEmpty) Some("ner_type") else None,
-      if (cfg.types.nonEmpty) Some("explicit_types") else None,
-      if (cfg.extendedTypes.nonEmpty) Some("extended_types") else None,
-      cfg.language.map(_ => "languages")).flatten
+    val filters = nameFilters(cfg)
+    val filterCols = filters.map(_.column)
     val namesRank = index.names.select((Seq("name_row_id", "id", "name_clean",
       "popularity_norm") ++ filterCols).map(col): _*)
     // languages is filter-only (never in any output); the taxonomy columns
@@ -905,30 +905,13 @@ object Linker {
     val exactBoost =
       if (cfg.fuzzy) lit(1.0) // old form folded to 1.0 via && !lit(true)
       else when(col("name_clean") === col("mention_norm"), 2.0).otherwise(1.0)
-    val softBoost =
-      if (!cfg.softFiltering) lit(0.0)
-      else {
-        val ner = if (cfg.nerTypes.nonEmpty)
-          when(col("ner_type").isin(cfg.nerTypes: _*), 2.0).otherwise(0.0) else lit(0.0)
-        val expl = if (cfg.types.nonEmpty)
-          when(arrays_overlap(col("explicit_types"), typedLit(cfg.types)), 1.5)
-            .otherwise(0.0) else lit(0.0)
-        val ext = if (cfg.extendedTypes.nonEmpty)
-          when(arrays_overlap(col("extended_types"), typedLit(cfg.extendedTypes)), 1.2)
-            .otherwise(0.0) else lit(0.0)
-        ner + expl + ext
-      }
-    val penalty =
-      if (!cfg.softFiltering) lit(1.0)
-      else {
-        val p1 = if (cfg.types.nonEmpty)
-          when(!arrays_overlap(col("explicit_types"), typedLit(cfg.types)), 0.1)
-            .otherwise(1.0) else lit(1.0)
-        val p2 = if (cfg.extendedTypes.nonEmpty)
-          when(!arrays_overlap(col("extended_types"), typedLit(cfg.extendedTypes)), 0.2)
-            .otherwise(1.0) else lit(1.0)
-        p1 * p2
-      }
+    // soft filtering turns every filter with a should-boost into boost +
+    // penalty terms (in declaration order); the rest stay hard
+    val (soft, hard) = filters.partition(f => cfg.softFiltering && f.boost.isDefined)
+    val softBoost = soft.map(f => when(f.pred, f.boost.get).otherwise(0.0))
+      .reduceOption(_ + _).getOrElse(lit(0.0))
+    val penalty = soft.flatMap(f => f.penalty.map(p => when(!f.pred, p).otherwise(1.0)))
+      .reduceOption(_ * _).getOrElse(lit(1.0))
     val scored0 = cand.withColumn("es_raw",
       (col("idf_sum") * exactBoost + softBoost) * penalty)
 
@@ -951,16 +934,7 @@ object Linker {
     }
 
     // ---- hard filters (P3-P7) ----
-    val filtered0 = Seq[Option[Column]](
-      cfg.kind.map(k => col("kind") === k),
-      if (!cfg.softFiltering && cfg.nerTypes.nonEmpty)
-        Some(col("ner_type").isin(cfg.nerTypes: _*)) else None,
-      if (!cfg.softFiltering && cfg.types.nonEmpty)
-        Some(arrays_overlap(col("explicit_types"), typedLit(cfg.types))) else None,
-      if (!cfg.softFiltering && cfg.extendedTypes.nonEmpty)
-        Some(arrays_overlap(col("extended_types"), typedLit(cfg.extendedTypes))) else None,
-      cfg.language.map(l => array_contains(col("languages"), l))
-    ).flatten.foldLeft(scored0)((df, p) => df.filter(p))
+    val filtered0 = hard.foldLeft(scored0)((df, f) => df.filter(f.pred))
 
     // ---- popularity-sorted cut + pos/es normalization (O1/O2, F5/F6) ----
     val wPop = Window.partitionBy(col("mid"))
@@ -981,14 +955,7 @@ object Linker {
       .join(namesFat, Seq("name_row_id"))
       .join(mentionsB(mentionsD), Seq("mid", "mention_norm"))
 
-    // ---- similarity features (F2-F4) over the PRE-BUILT sets ----
-    val feat = cut
-      .withColumn("ed_score",
-        Similarity.editDistanceScore(col("name_clean"), col("mention_norm")))
-      .withColumn("jaccard_score",
-        Similarity.setOverlapScore(col("name_tokens"), col("mention_tokens")))
-      .withColumn("jaccardNgram_score",
-        Similarity.setOverlapScore(col("name_grams"), col("mention_grams")))
+    val feat = cut.select(col("*") +: similarityFeatures: _*)
     val out =
       if (cfg.computeAmbiguity) feat.join(ambiguity, Seq("mid"), "left")
       else feat.withColumn("ambiguity_mention", lit(null).cast("double"))

@@ -60,10 +60,6 @@ object NameIndex {
     when(n >= 2, options).otherwise(array().cast("array<string>"))
   }
 
-  /** items → names table.
-    * Columns: id, name, name_clean, languages, is_alias, kind, ner_type,
-    * explicit_types, extended_types, types_text, description,
-    * popularity_norm, ntoken, length. */
   /** A1 global max popularity — defensive: empty input → 0, any numeric
     * popularity type accepted (cast to double before the read). */
   def maxPopularity(items: DataFrame): Double = {
@@ -71,6 +67,11 @@ object NameIndex {
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
   }
 
+  /** items → names table.
+    * Columns: id, name, name_clean, languages, is_alias, kind, ner_type,
+    * explicit_types, extended_types, types_text, description,
+    * popularity_norm, ntoken, length, name_tokens, name_grams,
+    * name_row_id. */
   def names(items: DataFrame): DataFrame = {
     val maxPop = maxPopularity(items)
 
@@ -166,22 +167,33 @@ object NameIndex {
   def tokenStats(postingsDf: DataFrame): DataFrame =
     postingsDf.groupBy("token").agg(count(lit(1)).as("df"))
 
+  /** Token idf (token, idf): idf(t) = ln(1 + N/df(t)), N = name-row count.
+    * @param tokenStatsDf (token, df) — [[tokenStats]] */
+  def idf(tokenStatsDf: DataFrame, nameRows: Long): DataFrame =
+    tokenStatsDf.select(col("token"),
+      log(lit(1.0) + lit(nameRows.toDouble) / col("df")).as("idf"))
+
+  /** Hot tokens: those whose posting list reaches `hotDf` rows — the
+    * tokens the exact-match join salts. A small driver-side set.
+    * @param tokenStatsDf (token, df) — [[tokenStats]] */
+  def hotTokens(tokenStatsDf: DataFrame, hotDf: Long): Set[String] = {
+    import tokenStatsDf.sparkSession.implicits._
+    tokenStatsDf.filter(col("df") >= hotDf).select("token").as[String].collect().toSet
+  }
+
   /** Per-name-row token→idf maps (name_row_id, idf_map) — built once at
     * vocabulary scale so per-candidate scoring in the linking DAG is a
     * pure array fold over the map, with no explode/join/groupBy over
     * candidates and no index-side work per run.
     * idf(t) = ln(1 + N/df(t)), N = name-row count. */
   def idfMaps(namesDf: DataFrame, tokenStatsDf: DataFrame,
-              nameRows: Long): DataFrame = {
-    val idf = tokenStatsDf.select(col("token"),
-      log(lit(1.0) + lit(nameRows.toDouble) / col("df")).as("idf"))
+              nameRows: Long): DataFrame =
     namesDf
       .select(col("name_row_id"), explode(col("name_tokens")).as("token"))
-      .join(idf, Seq("token"), "left")
+      .join(idf(tokenStatsDf, nameRows), Seq("token"), "left")
       .groupBy("name_row_id")
       .agg(map_from_entries(collect_list(
         struct(col("token"), coalesce(col("idf"), lit(0.0))))).as("idf_map"))
-  }
 
   /** Token-PAIR posting list (pair, name_row_id) — the candidate-blocking
     * index for multi-token mentions: a candidate that shares ≥2 tokens

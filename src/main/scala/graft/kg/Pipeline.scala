@@ -39,21 +39,25 @@ object Pipeline {
       postings3g: DataFrame, mentions: DataFrame, links: DataFrame,
       canon: DataFrame, pageLinks: DataFrame, triples: DataFrame)
 
+  /** The links stage's linker config: minimum_should_match generation
+    * with fuzzy expansions, a relevance-ordered top-32 cut, and no
+    * ambiguity features (linking does not read them). */
+  val LinkConfig: LinkerConfig = LinkerConfig(limit = 32, fuzzy = true,
+    cutByRelevance = true, computeAmbiguity = false, minShouldMatch = true)
+
+  /** The links stage's abstain threshold on `Linker.linkTop1`'s composite. */
+  val MinLinkScore: Double = 1.2
+
   /** Run (or resume) the full pipeline.
     * @param pages input table per BASELINE.json input_hint
     *              (url, warc_ts, html, text, lang)
     * @param dumpLines KG dump JSONL as a `line` column
-    * @param workDir   stage-commit directory (checkpoint root) */
+    * @param workDir   stage-commit directory (checkpoint root)
+    * @param memoDir   optional cross-run lookup memo table
+    *                  (Linker.linkTop1Memoized): mentions already linked in
+    *                  a PREVIOUS run skip candidate generation entirely. */
   def run(spark: SparkSession, pages: DataFrame, dumpLines: DataFrame,
-          workDir: String,
-          cfg: LinkerConfig = LinkerConfig(limit = 32, fuzzy = true,
-            cutByRelevance = true, computeAmbiguity = false,
-            minShouldMatch = true),
-          minLinkScore: Double = 1.2,
-          /** optional cross-run lookup memo table (Linker.linkTop1Memoized):
-            * mentions already linked under the same cfg in a PREVIOUS run
-            * skip candidate generation entirely. */
-          memoDir: Option[String] = None): StageOutputs = {
+          workDir: String, memoDir: Option[String] = None): StageOutputs = {
 
     // Independent stage chains run CONCURRENTLY (Spark schedules jobs from
     // multiple driver threads freely): the document side (extract+detect),
@@ -154,9 +158,7 @@ object Pipeline {
     val fNameRows = Future { names.count() } // overlaps the posting builds
     // memo-key index fingerprint (only consumed when memoDir is set):
     // computed concurrently so memoized runs pay no extra wall time
-    val fFingerprint = memoDir.map(_ => Future {
-      Linker.indexFingerprint(NameIndexTables(names, names, names))
-    })
+    val fFingerprint = memoDir.map(_ => Future { Linker.indexFingerprint(names) })
     val fPostings = Future { stage("postings") { NameIndex.postings(names) } }
     val fPostings3g = Future { stage("postings3g") { NameIndex.postings3g(names) } }
     val fPostingsPair = Future { stage("postings_pair") { NameIndex.postingsPair(names) } }
@@ -170,10 +172,7 @@ object Pipeline {
       NameIndex.pairStats(p).localCheckpoint(eager = true))
     val fIdfMaps = for (ts <- fTokenStats; n <- fNameRows) yield
       NameIndex.idfMaps(names, ts, n).localCheckpoint(eager = true)
-    val fHotTokens = fTokenStats.map { ts =>
-      import spark.implicits._
-      ts.filter(col("df") >= cfg.hotTokenDf).select("token").as[String].collect().toSet
-    }
+    val fHotTokens = fTokenStats.map(NameIndex.hotTokens(_, LinkConfig.hotTokenDf))
     val postings = Await.result(fPostings, Duration.Inf)
     val postings3g = Await.result(fPostings3g, Duration.Inf)
     val postingsPair = Await.result(fPostingsPair, Duration.Inf)
@@ -207,8 +206,8 @@ object Pipeline {
         fingerprint = fFingerprint.map(Await.result(_, Duration.Inf)))
       memoDir match {
         case Some(dir) =>
-          Linker.linkTop1Memoized(spark, mentions, idx, cfg, minLinkScore, dir)
-        case None => Linker.linkTop1(spark, mentions, idx, cfg, minLinkScore)
+          Linker.linkTop1Memoized(spark, mentions, idx, LinkConfig, MinLinkScore, dir)
+        case None => Linker.linkTop1(spark, mentions, idx, LinkConfig, MinLinkScore)
       }
     }
 

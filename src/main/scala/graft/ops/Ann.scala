@@ -90,11 +90,6 @@ object Ann {
   def lshBucketFor(v: Column, table: Int, nBits: Int): Column =
     (0 until nBits).map(b => hyperplaneBit(v, table, b)).reduce(_.bitwiseOR(_))
 
-  /** Single-table bucket assignment (kept for composition/tests). */
-  def lshBucket(df: DataFrame, vecCol: String, nBits: Int = 12): DataFrame =
-    df.withColumn("lsh_bucket",
-      lshBucketFor(col(vecCol).cast("array<double>"), 0, nBits))
-
   /** All-pairs cosine ≥ minCos via multi-table random-hyperplane buckets —
     * the scale path for [[Dedup.embeddingPairs]]: candidates = pairs
     * sharing a bucket in ≥1 of nTables tables; every candidate is verified
@@ -109,16 +104,22 @@ object Ann {
                      minCos: Double = 0.95, nBits: Int = 0, nTables: Int = 16,
                      maxBucket: Int = 100000): DataFrame = {
     val bits = if (nBits > 0) nBits else lshBitsFor(embs.count())
+    // Both checkpoints are EAGER: each table is read by several stages that
+    // AQE runs at once. A lazy checkpoint is materialized by whichever job
+    // ends first, which then drops the source plan; tasks of the other
+    // stages were built from that plan and still report its SQL metrics,
+    // which a GC has by then removed — one DAGScheduler "non-existent
+    // accumulator" ERROR trace per metric per task.
     val e = ensureParallelism(embs)
       .select(col(idCol).as("id"),
         unitVector(col(vecCol).cast("array<double>")).as("u"))
-      .localCheckpoint(eager = false) // normalize once; reused by verify joins
+      .localCheckpoint(eager = true) // normalize once; reused by verify joins
     // one (table, bucket) key per table per vector; table id mixed into the
     // join key so one shuffle covers all tables
     val keys = array((0 until nTables).map(t =>
       xxhash64(lit(t), lshBucketFor(col("u"), t, bits))): _*)
     val keyed = e.select(col("id"), explode(keys).as("bucket"))
-      .localCheckpoint(eager = false) // nTables×nBits projections computed once
+      .localCheckpoint(eager = true) // nTables×nBits projections computed once
     val bucketDf = keyed.groupBy("bucket").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxBucket).select("bucket")
     val small = keyed.join(bucketDf, Seq("bucket"), "left_semi")

@@ -82,15 +82,6 @@ object TextStats {
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.TextSetExprs.shingles(text, n)
 
-  /** POSITIONAL word n-gram shingles (ordered, duplicates kept) — the
-    * input winnowing needs (window positions matter). */
-  def positionalShingles(text: Column, n: Int): Column = {
-    val toks = Text.tokens(text)
-    when(size(toks) < n, array(concat_ws(" ", toks))).otherwise(
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
-
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     * SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting" —
     * the MOSS algorithm, public): hash every k-word shingle, slide a

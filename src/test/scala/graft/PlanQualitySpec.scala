@@ -57,7 +57,7 @@ class PlanQualitySpec extends SparkSpec {
     val mentionsD = Linker.distinctMentions(mentions)
     val tokenDf = postings.groupBy("token").agg(count(lit(1)).as("df"))
     val salted = Linker.exactTokenMatches(spark, mentionsD, postings, tokenDf,
-      commonDf = 100, cfg = LinkerConfig(hotTokenDf = 1L, saltShards = 4))
+      commonDf = 100, cfg = LinkerConfig(hotTokenDf = 1L))
     val plan = planOf(salted)
     assert(plan.contains("salt"), s"salt column missing from join plan:\n$plan")
   }
@@ -158,31 +158,9 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   /** HintErrorLogger WARN messages logged while `body` runs. */
-  private def hintWarnings(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    spark.sparkContext // a starting session reconfigures log4j, dropping the appender
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("hint-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
-    val prevLevel = logger.getLevel
-    logger.addAppender(appender)
-    logger.setLevel(Level.WARN)
-    try body
-    finally {
-      logger.removeAppender(appender)
-      logger.setLevel(prevLevel)
-      appender.stop()
-    }
-    seen.toArray(Array.empty[String]).toSeq
-  }
+  private def hintWarnings(body: => Unit): Seq[String] =
+    capturedLogs("org.apache.spark.sql.catalyst.analysis.HintErrorLogger",
+      org.apache.logging.log4j.Level.WARN)(body)
 
   test("linking leaves no broadcast hint outside a join (no HintErrorLogger WARN)") {
     assert(hintWarnings(broadcast(spark.range(3)).count()).nonEmpty,
@@ -199,11 +177,9 @@ class PlanQualitySpec extends SparkSpec {
     val idx = NameIndexTables(names, NameIndex.postings(names),
       NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))
     val mentions = Seq("borelis indusries", "alderton").toDF("mention_norm")
-    // Pipeline.run's default linker config
-    val cfg = LinkerConfig(limit = 32, fuzzy = true, cutByRelevance = true,
-      computeAmbiguity = false, minShouldMatch = true)
+    val cfg = Pipeline.LinkConfig
     val warnings = hintWarnings {
-      Linker.linkTop1(spark, mentions, idx, cfg, 1.2).collect()
+      Linker.linkTop1(spark, mentions, idx, cfg, Pipeline.MinLinkScore).collect()
       Linker.fuzzyExpansions(Linker.distinctMentions(mentions), idx.postings3g,
         NameIndex.tokenStats(idx.postings), cfg).count()
     }

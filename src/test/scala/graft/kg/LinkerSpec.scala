@@ -127,6 +127,34 @@ class LinkerSpec extends SparkSpec {
     assert(soft.count() >= hard.count())
   }
 
+  test("soft filtering golden: should-boosts 2.0/1.5/1.2 and penalties ×0.1/×0.2") {
+    // es_raw = (idf_sum + boosts) × penalties, es_score = es_raw / max per
+    // mention; the city rows match all three filters (boost 4.7, no
+    // penalty), the university rows only extendedTypes (boost 1.2, ×0.1
+    // for missing Q515), the "City" type row is LOC without Q515
+    val out = Linker.lookup(spark, mentionsOf("Alderton", "City of Alderton"), index,
+      LinkerConfig(limit = 50, nerTypes = Seq("LOC"), types = Seq("Q515"),
+        extendedTypes = Seq("Q2221906"), softFiltering = true)).cache()
+    val got = out.select("mention_norm", "id", "es_score", "rank")
+      .as[(String, String, Double, Int)].collect()
+      .map { case (m, id, es, r) => (m, id) -> (es, r) }.toMap
+    val expected = Map(
+      ("alderton", "Q100008") -> (1.0, 1),
+      ("alderton", "Q100015") -> (0.042026898900696295, 3),
+      ("city of alderton", "Q100028") -> (0.3967778802121931, 1),
+      ("city of alderton", "Q100008") -> (1.0, 35),
+      ("city of alderton", "Q100035") -> (0.01459463319087774, 33),
+      ("city of alderton", "Q100015") -> (0.034574339947035564, 47),
+      ("city of alderton", "Q515") -> (0.02385028315663386, 49))
+    expected.foreach { case (k, (es, rank)) =>
+      val (gotEs, gotRank) = got.getOrElse(k, fail(s"$k missing"))
+      assert(math.abs(gotEs - es) < 1e-12 && gotRank == rank,
+        s"$k: got ($gotEs, $gotRank), expected ($es, $rank)")
+    }
+    assert(got.keys.groupBy(_._1).map { case (m, ks) => m -> ks.size } ==
+      Map("alderton" -> 2, "city of alderton" -> 48))
+  }
+
   test("ambiguity_mention: exact-label share of distinct candidate ids (A5)") {
     val out = Linker.lookup(spark, mentionsOf("Springfield"), index,
       LinkerConfig(limit = 1000)).cache()
@@ -285,7 +313,7 @@ class LinkerSpec extends SparkSpec {
     val emptyIdx = NameIndexTables(emptyNames,
       index.postings.filter(lit(false)), index.postings3g.filter(lit(false)),
       index.postingsPair.map(_.filter(lit(false))),
-      fingerprint = Some(Linker.indexFingerprint(index)))
+      fingerprint = Some(Linker.indexFingerprint(index.names)))
     val m2 = mentionsOf("Alderton", "Xqzj Vvkp", "Springfield")
     val second = Linker.linkTop1Memoized(spark, m2, emptyIdx, cfg, 0.5, memoDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
@@ -344,17 +372,16 @@ class LinkerSpec extends SparkSpec {
   }
 
   test("pipeline linking: a two-token mention with one edit in EVERY token links") {
-    // Pipeline.run's default linker config: minimum_should_match counts a
-    // fuzzy expansion as a match, so a candidate reached only through
+    // Pipeline.run's linker config: minimum_should_match counts a fuzzy
+    // expansion as a match, so a candidate reached only through
     // misspelled tokens still clears the two-token bound
-    val cfg = LinkerConfig(limit = 32, fuzzy = true, cutByRelevance = true,
-      computeAmbiguity = false, minShouldMatch = true)
+    val cfg = Pipeline.LinkConfig
     val withPairs = index.copy(postingsPair = Some(NameIndex.postingsPair(index.names)))
     val label = items.filter(col("entity") === "Q100173")
       .select(col("labels")("en")).first().getString(0)
     assert(label == "Borealis Industries", s"fixture drifted: $label")
     val links = Linker.linkTop1(spark, mentionsOf("Borelis Indusries"), withPairs,
-      cfg, 1.2).collect()
+      cfg, Pipeline.MinLinkScore).collect()
     assert(links.map(_.getString(1)).toSeq == Seq("Q100173"), s"got: ${links.mkString(",")}")
   }
 
@@ -364,7 +391,7 @@ class LinkerSpec extends SparkSpec {
       base.copy(limit = 7), base.copy(fuzzy = true), base.copy(kind = Some("entity")),
       base.copy(nerTypes = Seq("PERS")), base.copy(types = Seq("Q5")),
       base.copy(extendedTypes = Seq("Q5")), base.copy(language = Some("en")),
-      base.copy(softFiltering = true), base.copy(saltShards = 3),
+      base.copy(softFiltering = true),
       base.copy(hotTokenDf = 5L), base.copy(commonTokenDf = 9L),
       base.copy(minShouldMatch = true), base.copy(cutByRelevance = true),
       base.copy(computeAmbiguity = false), base.copy(ids = Seq("Q1")),
@@ -389,7 +416,7 @@ class LinkerSpec extends SparkSpec {
       LinkerConfig(limit = 100, hotTokenDf = Long.MaxValue))
       .select("mention_norm", "id").collect().map(r => (r.getString(0), r.getString(1))).toSet
     val salted = Linker.lookup(spark, mentionsOf("Alderton", "Springfield"), index,
-      LinkerConfig(limit = 100, hotTokenDf = 1L, saltShards = 4))
+      LinkerConfig(limit = 100, hotTokenDf = 1L))
       .select("mention_norm", "id").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(base == salted)
   }

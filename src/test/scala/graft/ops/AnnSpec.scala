@@ -124,4 +124,34 @@ class AnnSpec extends SparkSpec {
     val recall = real.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"capped lshTopK real-query recall $recall < 0.9")
   }
+
+  test("lshCosinePairs: no task reports a metric of a collected plan (DAGScheduler ERROR)") {
+    // SQL metrics are weakly held accumulators: a task that reports one
+    // whose plan the driver no longer references makes DAGScheduler log
+    // "non-existent accumulator" with a stack trace. A GC loop running
+    // alongside the query makes any such task show up; it idles 3× as
+    // long as each collection took, so a large heap cannot stall the run.
+    val r = new scala.util.Random(7)
+    val dir = java.nio.file.Files.createTempDirectory("lsh-acc").toString + "/embs"
+    (0 until 500).map(i => (i.toLong, Array.fill(64)(r.nextDouble() * 2 - 1)))
+      .toDF("vec_id", "embedding").coalesce(1).write.parquet(dir)
+    @volatile var running = true
+    val gc = new Thread(() => while (running) {
+      val t0 = System.nanoTime()
+      System.gc()
+      Thread.sleep(math.max(10L, 3 * (System.nanoTime() - t0) / 1000000L))
+    })
+    gc.setDaemon(true)
+    gc.start()
+    val errors = try capturedLogs("org.apache.spark.scheduler.DAGScheduler",
+        org.apache.logging.log4j.Level.ERROR) {
+      (1 to 2).foreach { _ =>
+        Ann.lshCosinePairs(spark.read.parquet(dir), "vec_id", "embedding",
+          minCos = 0.5, nBits = 1, nTables = 10)
+          .orderBy(col("id_a"), col("id_b")).collect()
+      }
+      Thread.sleep(1000) // task-end events reach the scheduler asynchronously
+    } finally running = false
+    assert(errors.isEmpty, s"${errors.size} DAGScheduler errors, first: ${errors.take(1)}")
+  }
 }
