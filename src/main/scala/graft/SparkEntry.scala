@@ -503,13 +503,12 @@ object SparkEntry {
         explode(Text.tokenSet(col("name"))).as("tok"))
         .select(col("p_partkey"), col("name"), col("tok"),
           explode(Text.tokenNgrams(col("tok"), 3)).as("gram")).distinct()
-      val maxEdits = when(length(col("mtok")) < 3, 0)
-        .when(length(col("mtok")) < 6, 1).otherwise(2)
       val cand = mtok.join(ptok, "gram")
         .groupBy(col("mention_id"), col("mention"), col("mtok"),
           col("p_partkey"), col("name"), col("tok"))
         .agg(count(lit(1)).as("shared"))
-        .filter(levenshtein(col("mtok"), col("tok")) <= maxEdits)
+        .filter(levenshtein(col("mtok"), col("tok")) <=
+          graft.kg.Linker.autoFuzzEdits(length(col("mtok"))))
         .select(col("mention_id"), col("p_partkey"), col("mention"), col("name"))
         .distinct()
       cand.select(col("mention_id"), col("p_partkey"),

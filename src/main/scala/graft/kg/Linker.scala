@@ -311,13 +311,13 @@ object Linker {
     if (nVocab <= vocabDriverMax && nMvocab <= 10 * vocabDriverMax) {
       import spark.implicits._
       val vocabArr = tokenDf.select("token").as[String].collect()
-      val mtoks = mvocab.select("mtok").as[String].collect()
+      val mtoks = mvocab.select(col("mtok"), autoFuzzEdits(length(col("mtok"))))
+        .as[(String, Int)].collect()
       val dict = scala.collection.mutable.HashMap.empty[String, List[String]]
       vocabArr.foreach { t =>
         deleteSet(t, 2).foreach(k => dict(k) = t :: dict.getOrElse(k, Nil))
       }
-      val rows: Seq[(String, String)] = mtoks.toSeq.flatMap { m =>
-        val d = if (m.length < 3) 0 else if (m.length < 6) 1 else 2
+      val rows: Seq[(String, String)] = mtoks.toSeq.flatMap { case (m, d) =>
         if (d == 0) Seq.empty[(String, String)]
         else {
           val cands: Seq[String] =
@@ -476,6 +476,10 @@ object Linker {
       .withColumnRenamed("pos", "rank"))
 
     val full = if (cfg.ids.isEmpty) main else {
+      // the forced-id rows read `main` three times and the types
+      // enrichment reads `full` twice: evaluate each once, so the plan
+      // does not depend on which re-read exchanges AQE happens to reuse
+      val scored = main.localCheckpoint(eager = true)
       import spark.implicits._
       // ---- forced-candidate fetch (`_check_ids`:348-395): one en,
       // non-alias index row per requested id (the per-id limit=1 query),
@@ -490,12 +494,12 @@ object Linker {
         .join(forcedIds, Seq("id"), "left_semi")
         .withColumn("rn", row_number().over(w1)).filter(col("rn") === 1)
 
-      val perMention = main.groupBy(col("mid")).agg(
+      val perMention = scored.groupBy(col("mid")).agg(
         first(col("ambiguity_mention")).as("ambiguity_mention"),
         first(col("corrects_tokens")).as("corrects_tokens"),
         max(col("rank")).as("max_rank"))
       val missing = mentionsDM.crossJoin(forcedIds)
-        .join(main.select("mid", "id"), Seq("mid", "id"), "left_anti")
+        .join(scored.select("mid", "id"), Seq("mid", "id"), "left_anti")
 
       val wForced = Window.partitionBy(col("mid")).orderBy(col("req_pos"))
       val fetched = candidateOutput(missing.join(oneRow, Seq("id"))
@@ -504,7 +508,7 @@ object Linker {
         // a 1-hit ES response: pos_score = (0+1)/1, es_score = s/s = 1
         .withColumn("pos_score", lit(1.0)).withColumn("es_score", lit(1.0))
         .withColumn("rank", coalesce(col("max_rank"), lit(0)) + row_number().over(wForced)))
-      main.unionByName(fetched)
+      scored.unionByName(fetched).localCheckpoint(eager = true)
     }
 
     // ---- J5 types {id, name} enrichment over the final candidate set
@@ -560,9 +564,7 @@ object Linker {
     * cache and index lifecycles the same way: its Mongo `cache` is cleared
     * on reindex, `lookup_retriever.py:139-156`). One columnar partial-agg
     * scan of `names` (count + order-independent xor of a per-row hash over
-    * the scoring-relevant columns); precompute at index-build time via
-    * [[NameIndexTables.fingerprint]] to keep even that scan off the
-    * linking critical path. */
+    * the scoring-relevant columns), run by every memoized call. */
   def indexFingerprint(names: DataFrame): Long = {
     val r = names.agg(
       count(lit(1)).as("n"),
@@ -614,8 +616,7 @@ object Linker {
   def linkTop1Memoized(spark: SparkSession, mentions: DataFrame,
                        index: NameIndexTables, cfg: LinkerConfig,
                        minScore: Double, memoDir: String): DataFrame = {
-    val key = memoKey(cfg, minScore,
-      index.fingerprint.getOrElse(indexFingerprint(index.names)))
+    val key = memoKey(cfg, minScore, indexFingerprint(index.names))
     val memoRaw = readMemo(spark, memoDir)
     val mentionsD = mentions.select(col("mention_norm"))
       .filter(col("mention_norm") =!= "").distinct()
@@ -979,10 +980,7 @@ object Linker {
   * @param idfMaps       optional precomputed (name_row_id, idf_map) —
   *                      NameIndex.idfMaps; absent ⇒ derived per run.
   * @param nameRowCount  optional precomputed names row count (skips the
-  *                      per-run count job).
-  * @param fingerprint   optional precomputed [[Linker.indexFingerprint]]
-  *                      (memo-key invalidation); absent ⇒ one columnar
-  *                      agg scan of names per memoized call. */
+  *                      per-run count job). */
 case class NameIndexTables(names: DataFrame, postings: DataFrame,
                            postings3g: DataFrame,
                            postingsPair: Option[DataFrame] = None,
@@ -992,5 +990,4 @@ case class NameIndexTables(names: DataFrame, postings: DataFrame,
                            pairStats: Option[DataFrame] = None,
                            idfMaps: Option[DataFrame] = None,
                            nameRowCount: Option[Long] = None,
-                           hotTokens: Option[Set[String]] = None,
-                           fingerprint: Option[Long] = None)
+                           hotTokens: Option[Set[String]] = None)

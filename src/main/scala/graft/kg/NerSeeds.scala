@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage 5 — ORG / LOC seed sets for NER-type classification.
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * QIDs) and subtracts overlap trees
   * (`scripts/parse_wikidata_dump_parallel.py:1135-1183`). We derive the
   * identical sets from our own materialized P279 closure — no network, and
-  * the set-difference (T1) becomes `left_anti` joins.
+  * the set-difference (T1) becomes a filter on one aggregation.
   */
 object NerSeeds {
 
@@ -33,32 +33,24 @@ object NerSeeds {
     "Q12143"    // time zone
   )
 
-  /** All QIDs in the P279* tree under `root` (descendants ∪ root) — the
-    * closure-table realization of the SPARQL `backward_properties=[279]`
-    * tree query. Output: single column `qid`. */
-  def tree(spark: SparkSession,
-           closure: DataFrame, root: String): DataFrame = {
-    closure.filter(col("ancestor") === root).select(col("child").as("qid"))
-      .union(spark.createDataset(Seq(root))(spark.implicits.newStringEncoder).toDF("qid"))
-      .distinct()
+  /** The LOC/ORG seed table `(qid, is_geo, is_org)`: one row per QID in
+    * the geolocation or the organization seed set. A seed set is the P279*
+    * tree under its root (descendants ∪ root, the SPARQL
+    * `backward_properties=[279]` tree query) minus the trees under its
+    * overlap roots: organization_subclass minus seven (:1155-1164),
+    * geolocation_subclass minus five (:1167-1182). One filtered
+    * aggregation over the closure; the roots' self-rows put a root that is
+    * absent from the closure in its own tree. */
+  def seeds(closure: DataFrame): DataFrame = {
+    val spark = closure.sparkSession
+    import spark.implicits._
+    val roots = (Seq(GeoRoot, OrgRoot) ++ GeoSubtract ++ OrgSubtract).distinct
+    def under(rs: Seq[String]) = bool_or(col("ancestor").isin(rs: _*))
+    closure.select("child", "ancestor").filter(col("ancestor").isin(roots: _*))
+      .union(roots.toDF("child").select(col("child"), col("child").as("ancestor")))
+      .groupBy(col("child").as("qid"))
+      .agg((under(Seq(GeoRoot)) && !under(GeoSubtract)).as("is_geo"),
+        (under(Seq(OrgRoot)) && !under(OrgSubtract)).as("is_org"))
+      .filter(col("is_geo") || col("is_org"))
   }
-
-  private def subtracted(spark: SparkSession,
-                         closure: DataFrame, root: String,
-                         minus: Seq[String]): DataFrame = {
-    val base = tree(spark, closure, root)
-    val minusAll = minus.map(tree(spark, closure, _))
-      .reduceOption(_ union _)
-      .getOrElse(spark.emptyDataFrame.withColumn("qid", lit(null).cast("string")))
-      .distinct()
-    base.join(minusAll, Seq("qid"), "left_anti")
-  }
-
-  /** organization_subclass minus its seven overlap trees (:1155-1164). */
-  def orgSeeds(spark: SparkSession, closure: DataFrame): DataFrame =
-    subtracted(spark, closure, OrgRoot, OrgSubtract)
-
-  /** geolocation_subclass minus its five overlap trees (:1167-1182). */
-  def geoSeeds(spark: SparkSession, closure: DataFrame): DataFrame =
-    subtracted(spark, closure, GeoRoot, GeoSubtract)
 }

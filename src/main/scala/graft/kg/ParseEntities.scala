@@ -70,16 +70,22 @@ object ParseEntities {
       .filter(col("e.id").isNotNull && col("e.id").rlike("^[QP][0-9]+$"))
 
   /** Exploded claims: one row per (entity, pid, claim-position) with the
-    * datatype and the VARIANT value; skip rules applied. */
+    * entity's dump type, the datatype, the VARIANT value and the value's
+    * entity id (`$.id`, null for literal values); skip rules applied. The
+    * one claims decoder: `objects`, `literals` and the type claims of
+    * `items` all read it. */
   def claims(parsed: DataFrame): DataFrame =
     parsed
-      .select(col("e.id").as("entity"), explode(col("e.claims")).as(Seq("pid", "arr")))
-      .select(col("entity"), col("pid"), posexplode(col("arr")).as(Seq("pos", "claim")))
+      .select(col("e.id").as("entity"), col("e.type").as("entity_type"),
+        explode(col("e.claims")).as(Seq("pid", "arr")))
+      .select(col("entity"), col("entity_type"), col("pid"),
+        posexplode(col("arr")).as(Seq("pos", "claim")))
       .select(
-        col("entity"), col("pid"), col("pos"),
+        col("entity"), col("entity_type"), col("pid"), col("pos"),
         col("claim.mainsnak.datatype").as("datatype"),
         col("claim.mainsnak.datavalue.value").as("value"))
       .filter(col("value").isNotNull && !col("datatype").isin(SkipDatatypes: _*))
+      .withColumn("value_id", try_variant_get(col("value"), "$.id", "string"))
 
   /** Normalized entity→entity edge table `(subj, pred, obj)` — the
     * reference's `objects` map `{obj→[pred]}` (:1057-1075) flattened. This
@@ -87,10 +93,15 @@ object ParseEntities {
   def objects(claimsDf: DataFrame): DataFrame =
     claimsDf
       .filter(col("datatype").isin("wikibase-item", "wikibase-property"))
-      .select(
-        col("entity").as("subj"), col("pid").as("pred"),
-        try_variant_get(col("value"), "$.id", "string").as("obj"))
+      .select(col("entity").as("subj"), col("pid").as("pred"), col("value_id").as("obj"))
       .filter(col("obj").isNotNull)
+
+  /** The (child, ancestor) closure of the P279 edges of `objects` — the
+    * reference's `transitive_closure` (:846-868) over the subclass-of
+    * hierarchy, read by `items` (extended types, NER seeds). */
+  def subclassClosure(objectsDf: DataFrame): DataFrame =
+    graft.graph.TypeClosure.closure(objectsDf.filter(col("pred") === "P279")
+      .select(col("subj").as("child"), col("obj").as("parent")))
 
   /** Per-datatype literal value extraction — `get_value` (:697-715):
     * globe-coordinate → "lat,lon"; quantity → amount; monolingual → text;
@@ -122,32 +133,20 @@ object ParseEntities {
       .filter(col("value").isNotNull)
   }
 
-  /** P31/P279 type claims in claim order: (entity, pid, pos, qid, nerClass
-    * precursor inputs). Mirrors `types_claims = P31 ++ P279` (:992-994) by
-    * ordering P31 before P279 then claim position. */
-  private def typeClaims(parsed: DataFrame): DataFrame =
-    claims(parsed.filter(col("e.type") === "item"))
-      .filter(col("pid").isin("P31", "P279"))
-      .select(col("entity"), col("pid"), col("pos"),
-        try_variant_get(col("value"), "$.id", "string").as("qid"))
-      .filter(col("qid").isNotNull)
-
   /** The `items` table — one row per entity with kind / ner_types /
     * popularity / urls / explicit+extended types, per
     * `parse_data` (:942-1106).
     *
+    * @param claimsDf `claims(parsed)`: the P31/P279 claims of `item`
+    *                entities are its type claims.
     * @param closure (child, ancestor) transitive P279 closure used for
     *                extended_types (reference `transitive_closure`,
-    *                :846-868) — joined shuffle-side, broadcast if small.
-    * @param geoSeeds / orgSeeds single-column (`qid`) seed DataFrames
-    *                (NerSeeds.geo/org) replacing the reference's SPARQL
-    *                fetch (:1135-1183) with closure-table lookups.
+    *                :846-868) and for the LOC/ORG seeds (`NerSeeds.seeds`,
+    *                replacing the reference's SPARQL fetch, :1135-1183).
     */
-  def items(parsed: DataFrame, closure: DataFrame,
-            geoSeeds: DataFrame, orgSeeds: DataFrame): DataFrame = {
+  def items(parsed: DataFrame, claimsDf: DataFrame, closure: DataFrame): DataFrame = {
     val base = parsed.select(
       col("e.id").as("entity"),
-      col("e.type").as("wd_type"),
       coalesce(col("e.descriptions")("en")("value"), lit("")).as("description"),
       transform_values(coalesce(col("e.labels"),
         expr("map()").cast("map<string, struct<language: string, value: string>>")),
@@ -157,23 +156,12 @@ object ParseEntities {
         (_, v) => array_distinct(transform(v, a => a("value")))).as("aliases"),
       coalesce(col("e.sitelinks"),
         expr("map()").cast("map<string, struct<site: string, title: string>>")).as("sitelinks"),
-      col("e.claims").as("claims"))
-
-    // kind precedence: type > predicate > disambiguation > entity (:968-982).
-    // Null maps/arrays propagate null through contains → the `when` falls
-    // through to the next branch, matching the reference's .get() defaults.
-    val p31Ids = transform(col("claims")("P31"),
-      c => try_variant_get(c("mainsnak")("datavalue")("value"), "$.id", "string"))
-    val kind = when(map_contains_key(col("claims"), "P279"), "type")
-      .when(col("entity").startsWith("P"), "predicate")
-      .when(array_contains(p31Ids, "Q4167410"), "disambiguation")
-      .otherwise("entity")
+      map_contains_key(col("e.claims"), "P279").as("has_p279"))
 
     // popularity = max(#sitelinks, 1)  (:950-951)
     val popularity = greatest(size(map_keys(col("sitelinks"))), lit(1))
 
     // urls (:1036-1055); deterministic fallback = min sitelink key
-    val enLang = coalesce(col("labels")("en"), lit("en"))
     val wikipedia = when(map_contains_key(col("sitelinks"), "enwiki"),
         concat(lit("https://en.wikipedia.org/wiki/"),
           translate(col("sitelinks")("enwiki")("title"), " ", "_")))
@@ -186,19 +174,20 @@ object ParseEntities {
       .otherwise(lit(""))
 
     val withBase = base.select(
-      col("entity"), col("wd_type"), col("description"), col("labels"),
-      col("aliases"), popularity.as("popularity"), kind.as("kind"),
+      col("entity"), col("description"), col("labels"),
+      col("aliases"), popularity.as("popularity"), col("has_p279"),
       struct(
         concat(lit("https://www.wikidata.org/wiki/"), col("entity")).as("wikidata"),
         wikipedia.as("wikipedia")).as("urls"))
 
-    // type claims → p31/p279 lists, ner_types, explicit/extended types
-    val tc = typeClaims(parsed)
-    val geo = geoSeeds.select(col("qid").as("t_qid")).withColumn("is_geo", lit(true))
-    val org = orgSeeds.select(col("qid").as("t_qid")).withColumn("is_org", lit(true))
-    val nerClassed = tc
-      .join(broadcast(geo), tc("qid") === geo("t_qid"), "left").drop("t_qid")
-      .join(broadcast(org), tc("qid") === org("t_qid"), "left").drop("t_qid")
+    // type claims (P31/P279 of item entities, :992-994) → p31/p279 lists,
+    // ner_types, explicit/extended types
+    val typeClaims = claimsDf
+      .filter(col("entity_type") === "item" && col("pid").isin("P31", "P279") &&
+        col("value_id").isNotNull)
+      .select(col("entity"), col("pid"), col("pos"), col("value_id").as("qid"))
+    val nerClassed = typeClaims
+      .join(broadcast(NerSeeds.seeds(closure)), Seq("qid"), "left")
       .withColumn("ner", // :1002-1016
         when(col("qid") === "Q5", "PERS")
           .when(coalesce(col("is_geo"), lit(false)), "LOC")
@@ -212,9 +201,6 @@ object ParseEntities {
       array_distinct(transform(
         array_sort(collect_list(struct(col("ord"), col("ner")))),
         s => s("ner"))).as("ner_types"),
-      array_distinct(transform(
-        array_sort(collect_list(struct(col("ord"), col("qid")))),
-        s => s("qid"))).as("type_qids_ordered"),
       array_sort(collect_set(col("qid"))).as("explicit_types"),
       array_sort(collect_set(when(col("pid") === "P31", col("qid")))).as("p31"),
       array_sort(collect_set(when(col("pid") === "P279", col("qid")))).as("p279"))
@@ -236,7 +222,14 @@ object ParseEntities {
         col("description"), col("labels"), col("aliases"),
         coalesce(col("p31"), array().cast("array<string>")).as("p31"),
         coalesce(col("p279"), array().cast("array<string>")).as("p279"),
-        col("popularity"), col("kind"),
+        col("popularity"),
+        // kind precedence: type > predicate > disambiguation > entity
+        // (:968-982); a null p31 falls through to the next branch, matching
+        // the reference's .get() defaults
+        when(col("has_p279"), "type")
+          .when(col("entity").startsWith("P"), "predicate")
+          .when(array_contains(col("p31"), "Q4167410"), "disambiguation")
+          .otherwise("entity").as("kind"),
         coalesce(col("ner_types"), array().cast("array<string>")).as("ner_types"),
         col("urls"),
         coalesce(col("explicit_types"), array().cast("array<string>")).as("explicit_types"),

@@ -125,8 +125,18 @@ object Pipeline {
       df
     }
 
-    val parsed = ParseEntities.parse(dumpLines)
-    val claims = ParseEntities.claims(parsed)
+    // the decoded dump: materialized once (cached, never committed) by the
+    // first of the literals, objects and items stages that runs, and
+    // released once all three are done, so its blocks do not stay beside
+    // the linking stages. A resume with the three committed never decodes.
+    var decoded = false
+    lazy val parsed = {
+      val p = ParseEntities.parse(dumpLines).persist()
+      p.count()
+      decoded = true
+      p
+    }
+    lazy val claims = ParseEntities.claims(parsed)
 
     val fLiterals = Future { stage("literals") { ParseEntities.literals(claims) } }
     val fMentions = Future {
@@ -145,20 +155,10 @@ object Pipeline {
         Triples.canonMap(equiv)
       }
     }
-    val closure = stage("closure") {
-      val edges = objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent"))
-      graft.graph.TypeClosure.closure(edges)
-    }
-    val items = stage("items") {
-      ParseEntities.items(parsed, closure,
-        NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure))
-    }
+    val closure = stage("closure") { ParseEntities.subclassClosure(objects) }
+    val items = stage("items") { ParseEntities.items(parsed, claims, closure) }
     val names = stage("names") { NameIndex.names(items) }
     val fNameRows = Future { names.count() } // overlaps the posting builds
-    // memo-key index fingerprint (only consumed when memoDir is set):
-    // computed concurrently so memoized runs pay no extra wall time
-    val fFingerprint = memoDir.map(_ => Future { Linker.indexFingerprint(names) })
     val fPostings = Future { stage("postings") { NameIndex.postings(names) } }
     val fPostings3g = Future { stage("postings3g") { NameIndex.postings3g(names) } }
     val fPostingsPair = Future { stage("postings_pair") { NameIndex.postingsPair(names) } }
@@ -183,6 +183,7 @@ object Pipeline {
     val hotTokens = Await.result(fHotTokens, Duration.Inf)
     val mentions = Await.result(fMentions, Duration.Inf)
     val literals = Await.result(fLiterals, Duration.Inf)
+    if (decoded) parsed.unpersist()
 
     // canonicalized objects do NOT depend on links — materialize them
     // concurrently with the linking DAG (chained off fCanon; registered
@@ -202,8 +203,7 @@ object Pipeline {
         Some(typeNames), Some(NameIndex.maxPopularity(items)),
         tokenStats = Some(tokenStats), pairStats = Some(pairStats),
         idfMaps = Some(idfMaps),
-        nameRowCount = Some(nameRows), hotTokens = Some(hotTokens),
-        fingerprint = fFingerprint.map(Await.result(_, Duration.Inf)))
+        nameRowCount = Some(nameRows), hotTokens = Some(hotTokens))
       memoDir match {
         case Some(dir) =>
           Linker.linkTop1Memoized(spark, mentions, idx, LinkConfig, MinLinkScore, dir)

@@ -67,11 +67,7 @@ class PlanQualitySpec extends SparkSpec {
     val parsed = ParseEntities.parse(dump)
     val claims = ParseEntities.claims(parsed)
     val objects = ParseEntities.objects(claims)
-    val closure = graft.graph.TypeClosure.closure(
-      objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent")))
-    val items = ParseEntities.items(parsed, closure,
-      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure))
+    val items = ParseEntities.items(parsed, claims, ParseEntities.subclassClosure(objects))
     val names = NameIndex.names(items)
     val idx = NameIndexTables(names, NameIndex.postings(names),
       NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))
@@ -167,12 +163,9 @@ class PlanQualitySpec extends SparkSpec {
       "the capture must see a stray hint")
     val dump = Fixtures.dumpLines(spark, 200)
     val parsed = ParseEntities.parse(dump)
-    val objects = ParseEntities.objects(ParseEntities.claims(parsed))
-    val closure = graft.graph.TypeClosure.closure(
-      objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent")))
-    val items = ParseEntities.items(parsed, closure,
-      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure))
+    val claims = ParseEntities.claims(parsed)
+    val objects = ParseEntities.objects(claims)
+    val items = ParseEntities.items(parsed, claims, ParseEntities.subclassClosure(objects))
     val names = NameIndex.names(items).localCheckpoint(eager = true)
     val idx = NameIndexTables(names, NameIndex.postings(names),
       NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))

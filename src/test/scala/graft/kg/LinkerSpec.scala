@@ -14,11 +14,8 @@ class LinkerSpec extends SparkSpec {
     val parsed = ParseEntities.parse(dump)
     val claims = ParseEntities.claims(parsed)
     val objects = ParseEntities.objects(claims)
-    val closure = graft.graph.TypeClosure.closure(
-      objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent")))
-    val items = ParseEntities.items(parsed, closure,
-      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure)).cache()
+    val items = ParseEntities.items(parsed, claims,
+      ParseEntities.subclassClosure(objects)).cache()
     val names = NameIndex.names(items).cache()
     val typeNames = items.filter(col("kind") === "type")
       .select(col("entity"), col("labels")("en").as("name"))
@@ -210,6 +207,49 @@ class LinkerSpec extends SparkSpec {
     assert(out2.filter(col("id") === present).count() == 1)
   }
 
+  test("forced ids: one plan on every run, rows pinned") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // executed operators of every query of one lookup, by node name (codegen
+    // stage ids dropped); a `range` query named `sentinel` marks the end of
+    // a run, since the listener bus delivers events in order
+    val events = new java.util.concurrent.LinkedBlockingQueue[Option[Map[String, Int]]]()
+    def nodes(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.nodeName.replaceAll(" \\(\\d+\\)$", "") +:
+        (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        events.put(if (qe.analyzed.output.map(_.name) == Seq("sentinel")) None
+          else Some(nodes(qe.executedPlan).groupBy(identity).map { case (k, v) => k -> v.size }))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val absent = items.filter(!lower(col("labels")("en")).contains("springfield") &&
+        col("kind") === "entity")
+      .select("entity").as[String].take(2).toSeq
+    val cfg = LinkerConfig(ids = absent.reverse :+ "Q100000")
+    val ms = mentionsOf("Springfield", "Alderton", "Cora Ashford")
+    spark.listenerManager.register(listener)
+    val runs = try (1 to 5).map { _ =>
+      val rows = Linker.lookup(spark, ms, index, cfg).collect().map(_.toString).sorted.toSeq
+      spark.range(1).toDF("sentinel").collect()
+      val ops = Iterator.continually(events.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && e.isDefined).flatMap(_.get)
+        .foldLeft(Map.empty[String, Int]) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0) + n) }
+      (rows, ops)
+    } finally spark.listenerManager.unregister(listener)
+    // the pinned rows: count and MD5 of the sorted rendered rows
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(runs.head._1.mkString("\n").getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert((runs.head._1.size, digest) == (19, "d8acbdf8d0bd8e0132969e758b4ed25e"))
+    assert(runs.map(_._1).distinct.size == 1, "rows differ between runs")
+    assert(runs.map(_._2).distinct.size == 1,
+      s"executed operators differ between runs: ${runs.map(_._2.get("Exchange"))}")
+  }
+
   test("normalize_score=false denormalizes popularity and keeps raw es (F7)") {
     val norm = Linker.lookup(spark, mentionsOf("Alderton"), index,
       LinkerConfig(limit = 20)).cache()
@@ -304,16 +344,15 @@ class LinkerSpec extends SparkSpec {
     val first = Linker.linkTop1Memoized(spark, m1, index, cfg, 0.5, memoDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(first.nonEmpty, "Alderton must link")
-    // run 2 over overlapping + new mentions, against an EMPTY index (but
-    // carrying the REAL index's fingerprint, as a caller reusing a built
-    // index does): the memoized mention can only resolve through the memo —
-    // proof that candidate generation was skipped for it. The no-link
-    // mention is memoized too (cached empty response) and must NOT reappear.
-    val emptyNames = index.names.filter(lit(false)).localCheckpoint(eager = false)
-    val emptyIdx = NameIndexTables(emptyNames,
+    // run 2 over overlapping + new mentions, against the REAL names (so the
+    // same index fingerprint and memo key) but EMPTY postings: nothing can
+    // be generated, so the memoized mention can only resolve through the
+    // memo — proof that candidate generation was skipped for it. The
+    // no-link mention is memoized too (cached empty response) and must NOT
+    // reappear.
+    val emptyIdx = NameIndexTables(index.names,
       index.postings.filter(lit(false)), index.postings3g.filter(lit(false)),
-      index.postingsPair.map(_.filter(lit(false))),
-      fingerprint = Some(Linker.indexFingerprint(index.names)))
+      index.postingsPair.map(_.filter(lit(false))))
     val m2 = mentionsOf("Alderton", "Xqzj Vvkp", "Springfield")
     val second = Linker.linkTop1Memoized(spark, m2, emptyIdx, cfg, 0.5, memoDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap

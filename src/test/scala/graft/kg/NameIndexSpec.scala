@@ -13,11 +13,8 @@ class NameIndexSpec extends SparkSpec {
     val parsed = ParseEntities.parse(dump)
     val claims = ParseEntities.claims(parsed)
     val objects = ParseEntities.objects(claims)
-    val closure = graft.graph.TypeClosure.closure(
-      objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent")))
-    val items = ParseEntities.items(parsed, closure,
-      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure)).cache()
+    val items = ParseEntities.items(parsed, claims,
+      ParseEntities.subclassClosure(objects)).cache()
     StageOutputsLite(items, NameIndex.names(items).cache())
   }
   case class StageOutputsLite(items: org.apache.spark.sql.DataFrame,

@@ -15,11 +15,8 @@ class ParseEntitiesSpec extends SparkSpec {
   private lazy val claims = ParseEntities.claims(parsed).cache()
   private lazy val objects = ParseEntities.objects(claims).cache()
   private lazy val literals = ParseEntities.literals(claims).cache()
-  private lazy val closure = graft.graph.TypeClosure.closure(
-    objects.filter(col("pred") === "P279")
-      .select(col("subj").as("child"), col("obj").as("parent"))).cache()
-  private lazy val items = ParseEntities.items(parsed, closure,
-    NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure)).cache()
+  private lazy val closure = ParseEntities.subclassClosure(objects).cache()
+  private lazy val items = ParseEntities.items(parsed, claims, closure).cache()
 
   test("every dump line parses (no nulls from the variant schema)") {
     assert(parsed.count() ==
@@ -107,6 +104,68 @@ class ParseEntitiesSpec extends SparkSpec {
       .select("urls.wikidata", "urls.wikipedia").as[(String, String)].head()
     assert(u._1 == "https://www.wikidata.org/wiki/Q100000")
     assert(u._2.startsWith("https://en.wikipedia.org/wiki/") && !u._2.contains(" "))
+  }
+
+  test("items golden: kind, ner_types order and type lists per entity") {
+    // (kind, ner_types, p31, p279, explicit_types, extended_types) of the
+    // fixture dump's entities: every kind, two-class ner_types in claim order
+    val expected = Map(
+      "Q515" -> ("type", Seq("LOC"), Seq(), Seq("Q486972"), Seq("Q486972"),
+        Seq("Q2221906", "Q35120", "Q486972")),
+      "Q2385804" -> ("type", Seq("ORG", "LOC"), Seq(), Seq("Q2221906", "Q43229"),
+        Seq("Q2221906", "Q43229"), Seq("Q2221906", "Q35120", "Q43229")),
+      "Q9101" -> ("type", Seq("OTHERS"), Seq(), Seq("Q9102", "Q9103"),
+        Seq("Q9102", "Q9103"), Seq("Q35120", "Q9102", "Q9103", "Q9104")),
+      "P31" -> ("predicate", Seq(), Seq(), Seq(), Seq(), Seq()),
+      "Q100039" -> ("disambiguation", Seq("OTHERS"), Seq("Q4167410"), Seq(),
+        Seq("Q4167410"), Seq("Q35120", "Q4167410")),
+      "Q100000" -> ("entity", Seq("PERS"), Seq("Q5"), Seq(), Seq("Q5"), Seq("Q35120", "Q5")),
+      "Q100008" -> ("entity", Seq("LOC"), Seq("Q515"), Seq(), Seq("Q515"),
+        Seq("Q2221906", "Q35120", "Q486972", "Q515")),
+      "Q100012" -> ("entity", Seq("ORG"), Seq("Q4830453"), Seq(), Seq("Q4830453"),
+        Seq("Q35120", "Q43229", "Q4830453")),
+      "Q100015" -> ("entity", Seq("ORG"), Seq("Q3918"), Seq(), Seq("Q3918"),
+        Seq("Q2221906", "Q2385804", "Q35120", "Q3918", "Q43229")),
+      "Q100018" -> ("entity", Seq("OTHERS"), Seq("Q746549"), Seq(), Seq("Q746549"),
+        Seq("Q2095", "Q35120", "Q746549")),
+      "Q2001" -> ("entity", Seq("LOC"), Seq("Q6256"), Seq(), Seq("Q6256"),
+        Seq("Q2221906", "Q35120", "Q6256")))
+    val got = items.filter(col("entity").isin(expected.keys.toSeq: _*))
+      .select("entity", "kind", "ner_types", "p31", "p279", "explicit_types",
+        "extended_types")
+      .as[(String, String, Seq[String], Seq[String], Seq[String], Seq[String], Seq[String])]
+      .collect().map(r => r._1 -> (r._2, r._3, r._4, r._5, r._6, r._7)).toMap
+    assert(got == expected)
+  }
+
+  test("NerSeeds.seeds equals the tree minus subtracted-trees definition") {
+    // the reference definition: tree(root) = descendants ∪ root; a seed set
+    // is its root's tree left-anti the union of its overlap roots' trees
+    def tree(cl: org.apache.spark.sql.DataFrame, root: String) =
+      cl.filter(col("ancestor") === root).select(col("child").as("qid"))
+        .union(Seq(root).toDF("qid")).distinct()
+    def subtracted(cl: org.apache.spark.sql.DataFrame, root: String, minus: Seq[String]) =
+      tree(cl, root).join(minus.map(tree(cl, _)).reduce(_ union _).distinct(),
+        Seq("qid"), "left_anti")
+    def check(cl: org.apache.spark.sql.DataFrame): Unit = {
+      val seeds = NerSeeds.seeds(cl)
+      def set(c: String) = seeds.filter(col(c)).select("qid").as[String].collect().toSet
+      def ref(root: String, minus: Seq[String]) =
+        subtracted(cl, root, minus).as[String].collect().toSet
+      assert(set("is_geo") == ref(NerSeeds.GeoRoot, NerSeeds.GeoSubtract))
+      assert(set("is_org") == ref(NerSeeds.OrgRoot, NerSeeds.OrgSubtract))
+      assert(seeds.count() == (set("is_geo") ++ set("is_org")).size) // one row per qid
+    }
+    // synthetic: neither root is the child of any closure row (each reaches
+    // its set through its self-row only); X1 is under the geo root and
+    // under a geo subtract root (food); X2 under both roots; X3 under both
+    // roots and an org subtract root (country); X4 under neither root
+    check(Seq(
+      ("Q2095", NerSeeds.GeoRoot), ("X1", "Q2095"), ("X1", NerSeeds.GeoRoot),
+      ("X2", NerSeeds.GeoRoot), ("X2", NerSeeds.OrgRoot),
+      ("Q6256", NerSeeds.GeoRoot), ("X3", "Q6256"), ("X3", NerSeeds.GeoRoot),
+      ("X3", NerSeeds.OrgRoot), ("X4", "Q35120")).toDF("child", "ancestor"))
+    check(closure)
   }
 
   test("closure: chain depth 5, diamond, cycle all terminate correctly") {

@@ -1,7 +1,9 @@
 package graft.kg
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import java.nio.file.Files
 
 /** End-to-end pipeline: pages + dump → triples, with the P/R harness
@@ -104,6 +106,32 @@ class PipelineSpec extends SparkSpec {
       .as[(String, String)].collect().toMap == before)
     assert(memoCount() == memoRows,
       "second run should memo-hit every mention and append nothing")
+  }
+
+  /** The dump with every `line` read counted: a non-deterministic UDF, so
+    * the optimizer neither duplicates it into a pushed-down filter nor
+    * merges two reads of it. */
+  private def countedDump(): (DataFrame, LongAccumulator) = {
+    val reads = spark.sparkContext.longAccumulator("dump-line-reads")
+    val readLine = udf { (line: String) => reads.add(1); line }.asNondeterministic()
+    (dump.select(readLine(col("line")).as("line")), reads)
+  }
+
+  test("decode once: a run reads each dump line at most once") {
+    val (counted, reads) = countedDump()
+    val w = Files.createTempDirectory("graft-pipe-decode").toString
+    Pipeline.run(spark, pages, counted, w)
+    val rows = dump.count()
+    info(s"dump lines read: ${reads.value} for $rows rows")
+    assert(reads.value > 0 && reads.value <= rows,
+      s"${reads.value} line reads for $rows dump rows")
+  }
+
+  test("resume with every ingest stage committed decodes nothing") {
+    out.items.count() // forces the first full run
+    val (counted, reads) = countedDump()
+    Pipeline.run(spark, pages, counted, work).triples.count()
+    assert(reads.value == 0, s"${reads.value} dump lines read on a committed resume")
   }
 
   test("resume: a second run recomputes nothing and returns identical triples") {

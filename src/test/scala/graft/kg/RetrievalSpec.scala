@@ -15,11 +15,8 @@ class RetrievalSpec extends SparkSpec {
     val claims = ParseEntities.claims(parsed)
     val objects = ParseEntities.objects(claims).cache()
     val literals = ParseEntities.literals(claims).cache()
-    val closure = graft.graph.TypeClosure.closure(
-      objects.filter(col("pred") === "P279")
-        .select(col("subj").as("child"), col("obj").as("parent")))
-    val items = ParseEntities.items(parsed, closure,
-      NerSeeds.geoSeeds(spark, closure), NerSeeds.orgSeeds(spark, closure)).cache()
+    val items = ParseEntities.items(parsed, claims,
+      ParseEntities.subclassClosure(objects)).cache()
     (items, objects, literals)
   }
   private lazy val (items, objects, literals) = world
