@@ -43,14 +43,8 @@ object Canonicalize {
     val sym0 = edges.select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v")))
       .distinct()
-    val spark = edges.sparkSession
-    val nodeType = sym0.schema("u").dataType
-    val srcNullable = sym0.schema("u").nullable
-    val driverOrd = GraphDriverPath.orderingFor(nodeType)
-    val nEdges = if (driverOrd.isDefined) sym0.count() else Long.MaxValue
-    if (nEdges <= maxDriverEdges) {
-      implicit val ord: Ordering[Any] = driverOrd.get
-      val es = sym0.collect().map(r => (r.get(0), r.get(1)))
+    val inDriver = GraphDriverPath.solve(sym0, maxDriverEdges,
+        ("node", "component")) { (es, ord) =>
       // union-find with min-label roots (deterministic: label order only,
       // NATIVE ordering of the column type — identical to the loop's min)
       val parent = scala.collection.mutable.HashMap.empty[Any, Any]
@@ -66,15 +60,9 @@ object Canonicalize {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
       }
-      val rows = parent.keys.toSeq.sorted
-        .map(n => org.apache.spark.sql.Row(n, find(n)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, rows.size / 500000 + 1)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType, nullable = srcNullable),
-          org.apache.spark.sql.types.StructField("component", nodeType, nullable = srcNullable))))
+      parent.keys.toSeq.sorted(ord).map(n => (n, find(n)))
     }
+    if (inDriver.isDefined) return inDriver.get
     val sym = sym0.localCheckpoint(eager = true)
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("component", col("node"))

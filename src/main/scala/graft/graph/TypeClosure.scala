@@ -43,16 +43,10 @@ object TypeClosure {
     *         excluding the trivial (x, x) unless present as an edge. */
   def closure(edges: DataFrame, maxIters: Int = 64,
               maxDriverEdges: Long = 32768L): DataFrame = {
-    val spark = edges.sparkSession
     val eDistinct = edges.select(col("child").as("e_child"), col("parent").as("e_parent"))
       .distinct()
-    val nodeType = eDistinct.schema("e_child").dataType
-    val srcNullable = eDistinct.schema("e_child").nullable
-    val driverOrd = GraphDriverPath.orderingFor(nodeType)
-    val nEdges = if (driverOrd.isDefined) eDistinct.count() else Long.MaxValue
-    if (nEdges <= maxDriverEdges) {
-      implicit val ord: Ordering[Any] = driverOrd.get
-      val es = eDistinct.collect().map(r => (r.get(0), r.get(1)))
+    val inDriver = GraphDriverPath.solve(eDistinct, maxDriverEdges,
+        ("child", "ancestor")) { (es, ord) =>
       val adj = es.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).toSet }
       // semi-naive fixpoint over nodes (cycle-safe, like the join loop)
       val memo = scala.collection.mutable.HashMap.empty[Any, Set[Any]]
@@ -66,17 +60,11 @@ object TypeClosure {
           if (next != cur) { memo(n) = next; changed = true }
         }
       }
-      val rows = memo.toSeq
+      memo.toSeq
         .flatMap { case (c, as) => as.map(a => (c, a)) }
         .sortBy(identity)(Ordering.Tuple2(ord, ord))
-        .map { case (c, a) => org.apache.spark.sql.Row(c, a) }
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, rows.size / 500000 + 1)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("child", nodeType, nullable = srcNullable),
-          org.apache.spark.sql.types.StructField("ancestor", nodeType, nullable = srcNullable))))
     }
+    if (inDriver.isDefined) return inDriver.get
     val e = eDistinct.localCheckpoint(eager = true)
     var acc = e.select(col("e_child").as("child"), col("e_parent").as("ancestor"))
       .localCheckpoint(eager = true)

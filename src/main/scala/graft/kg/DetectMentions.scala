@@ -68,6 +68,26 @@ object DetectMentions {
         col("m.start").as("start"), col("m.end").as("end"),
         graft.core.Text.cleanStr(col("m.surface")).as("mention_norm"))
 
+  /** pages(url, html, …) → the mention table of their extracted text
+    * (stages 1-2: [[ExtractText.extract]] then [[mentions]]). */
+  def ofPages(pages: DataFrame): DataFrame =
+    mentions(pages.withColumn("extracted_text", ExtractText.extract(col("html"))),
+      "extracted_text")
+
+  /** The gazetteer majority rule: one row per surface, (name_clean,
+    * ner_type) with the surface's most frequent ner_type (count desc,
+    * then ner_type asc — deterministic; a null ner_type competes unless
+    * the caller filters it out).
+    * @param gazetteer (name_clean, ner_type) — e.g. NameIndex.names. */
+  def majorityNerType(gazetteer: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("name_clean")).orderBy(col("cnt").desc, col("ner_type"))
+    gazetteer.groupBy(col("name_clean"), col("ner_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .select(col("name_clean"), col("ner_type"))
+  }
+
   /** Per-mention NER classification (N1's missing half — the reference
     * attaches a spaCy class to each mention, `ner_recognizer.py:14-26`).
     * Deterministic gazetteer rule instead of a model: a mention whose
@@ -78,14 +98,8 @@ object DetectMentions {
     * filter directly (the reference's NER→lookup composition).
     * @param gazetteer (name_clean, ner_type) — e.g. NameIndex.names. */
   def classifyMentions(mentions: DataFrame, gazetteer: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("name_clean")).orderBy(col("cnt").desc, col("ner_type"))
-    val surface = gazetteer
-      .filter(col("ner_type").isNotNull)
-      .groupBy(col("name_clean"), col("ner_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("name_clean").as("mention_norm"), col("ner_type"))
+    val surface = majorityNerType(gazetteer.filter(col("ner_type").isNotNull))
+      .withColumnRenamed("name_clean", "mention_norm")
     mentions.join(surface, Seq("mention_norm"), "left")
       .withColumn("ner_class", coalesce(col("ner_type"), lit("OTHERS")))
       .drop("ner_type")

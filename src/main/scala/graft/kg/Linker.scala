@@ -19,6 +19,9 @@ case class LinkerConfig(
     extendedTypes: Seq[String] = Nil,
     language: Option[String] = None,
     softFiltering: Boolean = false,
+    /** Posting-list length from which a token is hot (salted by the exact
+      * join). Read only when the index carries no hot-token set:
+      * `NameIndex.tables` fixes that set at this default. */
     hotTokenDf: Long = 100000L,
     /** Candidate-generation blocking (Lucene common-terms /
       * minimum_should_match analog): a token whose posting list exceeds
@@ -121,6 +124,11 @@ object Linker {
     * exact-match join. */
   private val SaltShards = 8
 
+  /** An index table linking reads; `NameIndex.tables` builds them all. */
+  private def required[T](table: Option[T], name: String): T =
+    table.getOrElse(sys.error(
+      s"linking needs NameIndexTables.$name; build the index with NameIndex.tables"))
+
   /** ES AUTO fuzziness: max edits allowed for a token of given length. */
   def autoFuzzEdits(len: Column): Column =
     when(len < 3, 0).when(len < 6, 1).otherwise(2)
@@ -207,25 +215,21 @@ object Linker {
     array_distinct(keys)
   }
 
-  /** Plain Levenshtein distance (driver-side verification). */
+  /** Levenshtein distance in code points, as Spark's `levenshtein`
+    * (driver-side verification). */
   private def lev(a: String, b: String): Int = {
-    val dp = Array.tabulate(b.length + 1)(identity)
-    for (i <- 1 to a.length) {
-      var prev = dp(0); dp(0) = i
-      for (j <- 1 to b.length) {
-        val cur = dp(j)
-        dp(j) = math.min(math.min(dp(j) + 1, dp(j - 1) + 1),
-          prev + (if (a(i - 1) == b(j - 1)) 0 else 1))
-        prev = cur
-      }
-    }
-    dp(b.length)
+    import org.apache.spark.unsafe.types.UTF8String
+    UTF8String.fromString(a).levenshteinDistance(UTF8String.fromString(b))
   }
 
+  /** `s` and every variant with up to `d` code points deleted. */
   private def deleteSet(s: String, d: Int): Set[String] = {
     var cur = Set(s); var all = Set(s)
     for (_ <- 1 to d) {
-      cur = cur.flatMap(x => x.indices.map(i => x.take(i) + x.drop(i + 1)))
+      cur = cur.flatMap { x =>
+        val cps = x.codePoints().toArray
+        cps.indices.map(i => new String(cps, 0, i) + new String(cps, i + 1, cps.length - i - 1))
+      }
       all ++= cur
     }
     all
@@ -447,8 +451,7 @@ object Linker {
     val (feat2, mentionsDM) = scoredFeatures(spark, mentions, index, cfg)
     val popularity =
       if (cfg.normalizeScore) col("popularity_norm")
-      else col("popularity_norm") * lit(index.maxPopularity.getOrElse(sys.error(
-        "normalizeScore=false needs NameIndexTables.maxPopularity")))
+      else col("popularity_norm") * lit(required(index.maxPopularity, "maxPopularity"))
 
     // ---- A7 per-entity best-variant dedup: keep max (ed+jac); ties →
     //      first in result order (pos asc) ----
@@ -498,8 +501,11 @@ object Linker {
         first(col("ambiguity_mention")).as("ambiguity_mention"),
         first(col("corrects_tokens")).as("corrects_tokens"),
         max(col("rank")).as("max_rank"))
+      // broadcast (bounded by mentions × ids): an AQE-converted sort-merge
+      // join keeps or drops its left shuffle by which input finishes first
+      val present = scored.select("mid", "id").filter(col("id").isin(cfg.ids: _*))
       val missing = mentionsDM.crossJoin(forcedIds)
-        .join(scored.select("mid", "id"), Seq("mid", "id"), "left_anti")
+        .join(broadcast(present), Seq("mid", "id"), "left_anti")
 
       val wForced = Window.partitionBy(col("mid")).orderBy(col("req_pos"))
       val fetched = candidateOutput(missing.join(oneRow, Seq("id"))
@@ -513,9 +519,7 @@ object Linker {
 
     // ---- J5 types {id, name} enrichment over the final candidate set
     // ((mention_norm, id) is unique after dedup) ----
-    val typeNames = index.typeNames.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("entity string, name string")))
+    val typeNames = required(index.typeNames, "typeNames")
     val typeIds = full.select(col("mid"), col("id"),
         posexplode_outer(filter(split(col("types_text"), " "), t => t =!= ""))
           .as(Seq("tpos", "tid")))
@@ -740,11 +744,9 @@ object Linker {
       if (nMentions <= BroadcastMentionsMaxRows) broadcast(df) else df
     val midMap = mentionsD.select(col("mention_norm"), col("mid"))
 
-    // index-side stats: precomputed tables when the caller built them at
-    // index time (Pipeline does), else derived here
-    val nRows = index.nameRowCount.getOrElse(index.names.count())
-    val tokenDf = index.tokenStats.getOrElse(
-      NameIndex.tokenStats(index.postings).localCheckpoint(eager = false))
+    // index-side stats, all built once by NameIndex.tables
+    val nRows = required(index.nameRowCount, "nameRowCount")
+    val tokenDf = required(index.tokenStats, "tokenStats")
     val idf = NameIndex.idf(tokenDf, nRows)
     val commonDf =
       if (cfg.commonTokenDf > 0) cfg.commonTokenDf
@@ -779,14 +781,10 @@ object Linker {
         // stay short no matter how common the individual tokens get
         // ("garen ashford" vs every "ashford"). Single-token mentions use
         // the (blocked) single-token path; fuzzy candidates always join.
-        val pairTable = index.postingsPair.getOrElse(sys.error(
-          "minShouldMatch generation needs NameIndexTables.postingsPair"))
+        val pairTable = required(index.postingsPair, "postingsPair")
 
-        // pair-df blocking with the same all-common fallback as tokens;
-        // precomputed at index time when available (NameIndex.pairStats) —
-        // re-aggregating the pair table (the LARGEST index table) here
-        // would put a full index-side shuffle on every linking run
-        val pairDf = index.pairStats.getOrElse(NameIndex.pairStats(pairTable))
+        // pair-df blocking with the same all-common fallback as tokens
+        val pairDf = required(index.pairStats, "pairStats")
         val pairCands = blockedKeys(mentionsD.filter(size(col("mention_tokens")) >= 2),
             NameIndex.tokenPairs(col("mention_tokens")), "pair", pairDf, commonDf)
           .join(pairTable, Seq("pair"))
@@ -841,8 +839,8 @@ object Linker {
 
         // stats from the token-set intersection (+ fuzzy-only tokens).
         // idf per matched token comes from a per-NAME-ROW token→idf map
-        // (built once at vocabulary scale — precomputed at index time when
-        // available), so the per-candidate work is a pure array fold — no
+        // (built once at vocabulary scale, at index time), so the
+        // per-candidate work is a pure array fold — no
         // explode / join / groupBy over candidates. The map's KEY SET is
         // exactly the name's token set, so one join serves both.
         //
@@ -858,8 +856,7 @@ object Linker {
         // right cluster shape (bucketed index side) — and the map still
         // never rides a candidate exchange, because the scalars project
         // out within the join stage.
-        val namesIdf = index.idfMaps.getOrElse(
-          NameIndex.idfMaps(index.names, tokenDf, nRows))
+        val namesIdf = required(index.idfMaps, "idfMaps")
         val namesIdfJ =
           if (nRows <= BroadcastIdfMapsMaxRows) broadcast(namesIdf) else namesIdf
         candStats
@@ -964,30 +961,3 @@ object Linker {
     (out, mentionsD)
   }
 }
-
-/** The index tables produced by NameIndex (bucketable sides of the
-  * candidate-gen joins).
-  * @param typeNames     optional (entity, name) en labels of kind='type'
-  *                      items, for the J5 types {id,name} enrichment
-  *                      (`lookup_retriever.py:262-285,397-401`); absent ⇒
-  *                      names fall back to the QIDs themselves.
-  * @param maxPopularity index max popularity (A1 scalar) for
-  *                      normalize_score=false denormalization.
-  * @param tokenStats    optional precomputed (token, df) —
-  *                      NameIndex.tokenStats; absent ⇒ derived per run.
-  * @param pairStats     optional precomputed (pair, df) —
-  *                      NameIndex.pairStats; absent ⇒ derived per run.
-  * @param idfMaps       optional precomputed (name_row_id, idf_map) —
-  *                      NameIndex.idfMaps; absent ⇒ derived per run.
-  * @param nameRowCount  optional precomputed names row count (skips the
-  *                      per-run count job). */
-case class NameIndexTables(names: DataFrame, postings: DataFrame,
-                           postings3g: DataFrame,
-                           postingsPair: Option[DataFrame] = None,
-                           typeNames: Option[DataFrame] = None,
-                           maxPopularity: Option[Double] = None,
-                           tokenStats: Option[DataFrame] = None,
-                           pairStats: Option[DataFrame] = None,
-                           idfMaps: Option[DataFrame] = None,
-                           nameRowCount: Option[Long] = None,
-                           hotTokens: Option[Set[String]] = None)

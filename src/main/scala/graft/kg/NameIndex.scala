@@ -36,8 +36,9 @@ import graft.core.Text
   * `bucketBy(8, "token")` saveAsTable of this postings table plans
   * exactly one mention-side Exchange per linking join. Popularity
   * max (A1/A2) is a partial+final agg producing one scalar, broadcast into
-  * the projection. Derived stats (tokenStats, idfMaps, hot tokens) are
-  * precomputable at build time so linking runs carry no index-side work.
+  * the projection. [[NameIndex.tables]] derives every linking statistic
+  * (token/pair df, idf maps, hot tokens, row count, max popularity) once
+  * at build time, so linking runs carry no index-side work.
   */
 object NameIndex {
 
@@ -213,4 +214,53 @@ object NameIndex {
     * changes when the index does. */
   def pairStats(postingsPairDf: DataFrame): DataFrame =
     postingsPairDf.groupBy("pair").agg(count(lit(1)).as("df"))
+
+  /** The complete linking index over built posting tables: every derived
+    * table `Linker` reads, each computed here once. The df, pair-df and
+    * idf-map tables are materialized eagerly in executor storage; the hot
+    * tokens use `LinkerConfig().hotTokenDf`.
+    * @param items the items table (kind='type' en labels name the J5
+    *              types; its max popularity denormalizes F7) */
+  def tables(items: DataFrame, names: DataFrame, postings: DataFrame,
+             postings3g: DataFrame, postingsPair: DataFrame): NameIndexTables = {
+    val nameRows = names.count()
+    val tokenDf = tokenStats(postings).localCheckpoint(eager = true)
+    val typeNames = items.filter(col("kind") === "type")
+      .select(col("entity"), col("labels")("en").as("name"))
+      .filter(col("name").isNotNull)
+    NameIndexTables(names, postings, postings3g, Some(postingsPair),
+      Some(typeNames), Some(maxPopularity(items)),
+      tokenStats = Some(tokenDf),
+      pairStats = Some(pairStats(postingsPair).localCheckpoint(eager = true)),
+      idfMaps = Some(idfMaps(names, tokenDf, nameRows).localCheckpoint(eager = true)),
+      nameRowCount = Some(nameRows),
+      hotTokens = Some(hotTokens(tokenDf, LinkerConfig().hotTokenDf)))
+  }
 }
+
+/** The linking index: the posting tables of [[NameIndex]] plus the
+  * statistics derived from them. [[NameIndex.tables]] builds a complete
+  * one; `Linker` derives none of the optional tables and fails on a
+  * missing one that its config reads.
+  * @param postingsPair  (pair, name_row_id) — NameIndex.postingsPair.
+  * @param typeNames     (entity, name) en labels of kind='type' items, for
+  *                      the J5 types {id,name} enrichment
+  *                      (`lookup_retriever.py:262-285,397-401`).
+  * @param maxPopularity index max popularity (A1 scalar) for
+  *                      normalize_score=false denormalization.
+  * @param tokenStats    (token, df) — NameIndex.tokenStats.
+  * @param pairStats     (pair, df) — NameIndex.pairStats.
+  * @param idfMaps       (name_row_id, idf_map) — NameIndex.idfMaps.
+  * @param nameRowCount  names row count.
+  * @param hotTokens     tokens the exact-match join salts; absent ⇒ the
+  *                      config's `hotTokenDf` picks them per call. */
+case class NameIndexTables(names: DataFrame, postings: DataFrame,
+                           postings3g: DataFrame,
+                           postingsPair: Option[DataFrame] = None,
+                           typeNames: Option[DataFrame] = None,
+                           maxPopularity: Option[Double] = None,
+                           tokenStats: Option[DataFrame] = None,
+                           pairStats: Option[DataFrame] = None,
+                           idfMaps: Option[DataFrame] = None,
+                           nameRowCount: Option[Long] = None,
+                           hotTokens: Option[Set[String]] = None)

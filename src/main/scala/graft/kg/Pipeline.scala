@@ -139,13 +139,7 @@ object Pipeline {
     lazy val claims = ParseEntities.claims(parsed)
 
     val fLiterals = Future { stage("literals") { ParseEntities.literals(claims) } }
-    val fMentions = Future {
-      stage("mentions") {
-        val extracted = pages
-          .withColumn("extracted_text", ExtractText.extract(col("html")))
-        DetectMentions.mentions(extracted, "extracted_text")
-      }
-    }
+    val fMentions = Future { stage("mentions") { DetectMentions.ofPages(pages) } }
 
     val objects = stage("objects") { ParseEntities.objects(claims) }
     val fCanon = Future {
@@ -158,29 +152,16 @@ object Pipeline {
     val closure = stage("closure") { ParseEntities.subclassClosure(objects) }
     val items = stage("items") { ParseEntities.items(parsed, claims, closure) }
     val names = stage("names") { NameIndex.names(items) }
-    val fNameRows = Future { names.count() } // overlaps the posting builds
     val fPostings = Future { stage("postings") { NameIndex.postings(names) } }
     val fPostings3g = Future { stage("postings3g") { NameIndex.postings3g(names) } }
     val fPostingsPair = Future { stage("postings_pair") { NameIndex.postingsPair(names) } }
-    // index-side stats materialized eagerly in memory, CONCURRENTLY with
-    // mention extraction — pure KG work that would otherwise sit on the
-    // linking DAG's critical path. Not stage-committed: both derive from
-    // committed tables in one cheap job each, so resume just recomputes.
-    val fTokenStats = fPostings.map(p =>
-      NameIndex.tokenStats(p).localCheckpoint(eager = true))
-    val fPairStats = fPostingsPair.map(p =>
-      NameIndex.pairStats(p).localCheckpoint(eager = true))
-    val fIdfMaps = for (ts <- fTokenStats; n <- fNameRows) yield
-      NameIndex.idfMaps(names, ts, n).localCheckpoint(eager = true)
-    val fHotTokens = fTokenStats.map(NameIndex.hotTokens(_, LinkConfig.hotTokenDf))
-    val postings = Await.result(fPostings, Duration.Inf)
-    val postings3g = Await.result(fPostings3g, Duration.Inf)
-    val postingsPair = Await.result(fPostingsPair, Duration.Inf)
-    val tokenStats = Await.result(fTokenStats, Duration.Inf)
-    val pairStats = Await.result(fPairStats, Duration.Inf)
-    val idfMaps = Await.result(fIdfMaps, Duration.Inf)
-    val nameRows = Await.result(fNameRows, Duration.Inf)
-    val hotTokens = Await.result(fHotTokens, Duration.Inf)
+    // the linking index's derived tables, built CONCURRENTLY with mention
+    // extraction — pure KG work that would otherwise sit on the linking
+    // DAG's critical path. Not stage-committed: they derive from committed
+    // tables, so resume just recomputes.
+    val fIndex = for (p <- fPostings; p3 <- fPostings3g; pp <- fPostingsPair) yield
+      NameIndex.tables(items, names, p, p3, pp)
+    val index = Await.result(fIndex, Duration.Inf)
     val mentions = Await.result(fMentions, Duration.Inf)
     val literals = Await.result(fLiterals, Duration.Inf)
     if (decoded) parsed.unpersist()
@@ -196,18 +177,10 @@ object Pipeline {
 
     // ---- linking ----
     val links = stage("links") {
-      val typeNames = items.filter(col("kind") === "type")
-        .select(col("entity"), col("labels")("en").as("name"))
-        .filter(col("name").isNotNull)
-      val idx = NameIndexTables(names, postings, postings3g, Some(postingsPair),
-        Some(typeNames), Some(NameIndex.maxPopularity(items)),
-        tokenStats = Some(tokenStats), pairStats = Some(pairStats),
-        idfMaps = Some(idfMaps),
-        nameRowCount = Some(nameRows), hotTokens = Some(hotTokens))
       memoDir match {
         case Some(dir) =>
-          Linker.linkTop1Memoized(spark, mentions, idx, LinkConfig, MinLinkScore, dir)
-        case None => Linker.linkTop1(spark, mentions, idx, LinkConfig, MinLinkScore)
+          Linker.linkTop1Memoized(spark, mentions, index, LinkConfig, MinLinkScore, dir)
+        case None => Linker.linkTop1(spark, mentions, index, LinkConfig, MinLinkScore)
       }
     }
 
@@ -226,7 +199,7 @@ object Pipeline {
     // only "complete" when every stage is durably committed
     commitFutures.forEach(f => Await.result(f, Duration.Inf))
 
-    StageOutputs(items, objects, literals, closure, names, postings,
-      postings3g, mentions, links, canon, pageLinks, triples)
+    StageOutputs(items, objects, literals, closure, names, index.postings,
+      index.postings3g, mentions, links, canon, pageLinks, triples)
   }
 }

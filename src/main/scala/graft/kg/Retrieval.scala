@@ -184,14 +184,9 @@ object Retrieval {
       .withColumn("clean", graft.core.Text.cleanStr(col("value")))
     val voted = gazetteer match {
       case Some(g) =>
-        // one ner_type per surface: deterministic majority inside the
-        // gazetteer itself (count desc, ner_type asc)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("name_clean")).orderBy(col("cnt").desc, col("ner_type"))
-        val surface = g.groupBy(col("name_clean"), col("ner_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-          .select(col("name_clean").as("clean"), col("ner_type"))
+        // one ner_type per surface: the gazetteer majority rule
+        val surface = DetectMentions.majorityNerType(g)
+          .withColumnRenamed("name_clean", "clean")
         labeled.join(surface, Seq("clean"), "left")
           .withColumn("tag", when(col("ner_type").isNotNull, "NE").otherwise("LIT"))
           .withColumn("classification",

@@ -34,11 +34,7 @@ object IncrementalPages {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(pagesDir)
 
-    val mentions = graft.kg.DetectMentions.mentions(
-      pages.withColumn("extracted_text", graft.kg.ExtractText.extract(col("html"))),
-      "extracted_text")
-
-    mentions.writeStream
+    graft.kg.DetectMentions.ofPages(pages).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

@@ -69,8 +69,8 @@ class PlanQualitySpec extends SparkSpec {
     val objects = ParseEntities.objects(claims)
     val items = ParseEntities.items(parsed, claims, ParseEntities.subclassClosure(objects))
     val names = NameIndex.names(items)
-    val idx = NameIndexTables(names, NameIndex.postings(names),
-      NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))
+    val idx = NameIndex.tables(items, names, NameIndex.postings(names),
+      NameIndex.postings3g(names), NameIndex.postingsPair(names))
     val out = Linker.lookup(spark, Seq("alderton").toDF("mention_norm"), idx,
       LinkerConfig(limit = 10))
     val plan = planOf(out)
@@ -78,6 +78,10 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("precomputed pairStats remove the pair-table re-aggregation from the linking plan") {
+    val items = Seq(("Q1", "garen ashford"), ("Q2", "lina ashford"))
+      .toDF("entity", "name")
+      .select(col("entity"), lit("e").as("kind"), map(lit("en"), col("name")).as("labels"),
+        lit(1L).as("popularity"))
     val names = Seq(("Q1", "garen ashford", "e"), ("Q2", "lina ashford", "e"))
       .toDF("id", "name_clean", "kind")
       .withColumn("name_tokens", graft.core.Text.tokenSet(col("name_clean")))
@@ -98,16 +102,10 @@ class PlanQualitySpec extends SparkSpec {
     val mentions = Seq("garen ashford").toDF("mention_norm")
     val cfg = LinkerConfig(minShouldMatch = true, cutByRelevance = true,
       computeAmbiguity = false)
-    def pairScans(pairStats: Option[org.apache.spark.sql.DataFrame]): Int = {
-      val idx = NameIndexTables(names, NameIndex.postings(names),
-        NameIndex.postings3g(names), Some(pairTable), pairStats = pairStats)
-      val plan = planOf(Linker.linkTop1(spark, mentions, idx, cfg, 0.0))
-      s"$dir/pp".r.findAllIn(plan).size
-    }
-    val without = pairScans(None)
-    val precomputed = NameIndex.pairStats(pairTable).localCheckpoint(eager = true)
-    val withStats = pairScans(Some(precomputed))
-    assert(without >= 2, s"expected pairDf agg to scan the pair table again: $without")
+    val idx = NameIndex.tables(items, names, NameIndex.postings(names),
+      NameIndex.postings3g(names), pairTable)
+    val plan = planOf(Linker.linkTop1(spark, mentions, idx, cfg, 0.0))
+    val withStats = s"$dir/pp".r.findAllIn(plan).size
     assert(withStats == 1,
       s"pair table should be scanned exactly once with precomputed stats: $withStats")
   }
@@ -167,14 +165,14 @@ class PlanQualitySpec extends SparkSpec {
     val objects = ParseEntities.objects(claims)
     val items = ParseEntities.items(parsed, claims, ParseEntities.subclassClosure(objects))
     val names = NameIndex.names(items).localCheckpoint(eager = true)
-    val idx = NameIndexTables(names, NameIndex.postings(names),
-      NameIndex.postings3g(names), Some(NameIndex.postingsPair(names)))
+    val idx = NameIndex.tables(items, names, NameIndex.postings(names),
+      NameIndex.postings3g(names), NameIndex.postingsPair(names))
     val mentions = Seq("borelis indusries", "alderton").toDF("mention_norm")
     val cfg = Pipeline.LinkConfig
     val warnings = hintWarnings {
       Linker.linkTop1(spark, mentions, idx, cfg, Pipeline.MinLinkScore).collect()
       Linker.fuzzyExpansions(Linker.distinctMentions(mentions), idx.postings3g,
-        NameIndex.tokenStats(idx.postings), cfg).count()
+        idx.tokenStats.get, cfg).count()
     }
     assert(warnings.isEmpty, s"stray hints:\n${warnings.mkString("\n")}")
   }

@@ -17,13 +17,9 @@ class LinkerSpec extends SparkSpec {
     val items = ParseEntities.items(parsed, claims,
       ParseEntities.subclassClosure(objects)).cache()
     val names = NameIndex.names(items).cache()
-    val typeNames = items.filter(col("kind") === "type")
-      .select(col("entity"), col("labels")("en").as("name"))
-      .filter(col("name").isNotNull)
-    (items, NameIndexTables(names,
+    (items, NameIndex.tables(items, names,
       NameIndex.postings(names).cache(), NameIndex.postings3g(names).cache(),
-      typeNames = Some(typeNames),
-      maxPopularity = Some(NameIndex.maxPopularity(items))))
+      NameIndex.postingsPair(names).cache()))
   }
   private lazy val items = world._1
   private lazy val index = world._2
@@ -282,7 +278,8 @@ class LinkerSpec extends SparkSpec {
       .withColumn("kind", lit("entity"))
       .withColumn("popularity", lit(1))
     val nm = NameIndex.names(mini)
-    val idx2 = NameIndexTables(nm, NameIndex.postings(nm), NameIndex.postings3g(nm))
+    val idx2 = NameIndex.tables(mini, nm, NameIndex.postings(nm), NameIndex.postings3g(nm),
+      NameIndex.postingsPair(nm))
     val out = Linker.lookup(spark, mentionsOf("Oxk", "Thxonx"), idx2,
       LinkerConfig(limit = 10, fuzzy = true)).cache()
     val found = out.select("mention_norm", "id").as[(String, String)].collect().toSet
@@ -310,9 +307,12 @@ class LinkerSpec extends SparkSpec {
     // shared 3-gram — a distinct-gram count would wrongly prune it; the
     // positional (multiset) bound keeps it. Verified on BOTH phase-1
     // paths: the in-driver SymSpell and the distributed gram+delete join.
+    // 'a𝒳bcd' vs 'abcd': one edit in code points (d=1 at length 5), two
+    // in UTF-16 units — both paths must count code points.
     val mini = Seq(
       ("Q1", Map("en" -> "aaaaaaaaaa"), "repeats"),
-      ("Q2", Map("en" -> "bbbbbbcccc"), "control")
+      ("Q2", Map("en" -> "bbbbbbcccc"), "control"),
+      ("Q3", Map("en" -> "abcd"), "code points")
     ).toDF("entity", "labels", "description")
       .withColumn("aliases", typedLit(Map.empty[String, Seq[String]]))
       .withColumn("ner_types", typedLit(Seq.empty[String]))
@@ -325,7 +325,7 @@ class LinkerSpec extends SparkSpec {
     val nm = NameIndex.names(mini)
     val p3 = NameIndex.postings3g(nm)
     val tokenDf = NameIndex.tokenStats(NameIndex.postings(nm))
-    val md = Linker.distinctMentions(mentionsOf("aaaaaaaaab", "bbbbbbccxc"))
+    val md = Linker.distinctMentions(mentionsOf("aaaaaaaaab", "bbbbbbccxc", "a𝒳bcd"))
     val cfg = LinkerConfig(fuzzy = true)
     def exps(driverMax: Long) =
       Linker.fuzzyExpansions(md, p3, tokenDf, cfg, vocabDriverMax = driverMax)
@@ -334,6 +334,8 @@ class LinkerSpec extends SparkSpec {
     val dist = exps(0L) // vocab count > 0 forces the distributed path
     assert(driver.contains(("aaaaaaaaab", "aaaaaaaaaa")), s"driver: $driver")
     assert(dist.contains(("aaaaaaaaab", "aaaaaaaaaa")), s"distributed: $dist")
+    assert(driver.contains(("a𝒳bcd", "abcd")), s"driver: $driver")
+    assert(dist.contains(("a𝒳bcd", "abcd")), s"distributed: $dist")
     assert(driver == dist, s"paths diverge: $driver vs $dist")
   }
 
@@ -350,9 +352,9 @@ class LinkerSpec extends SparkSpec {
     // memo — proof that candidate generation was skipped for it. The
     // no-link mention is memoized too (cached empty response) and must NOT
     // reappear.
-    val emptyIdx = NameIndexTables(index.names,
+    val emptyIdx = NameIndex.tables(items, index.names,
       index.postings.filter(lit(false)), index.postings3g.filter(lit(false)),
-      index.postingsPair.map(_.filter(lit(false))))
+      index.postingsPair.get.filter(lit(false)))
     val m2 = mentionsOf("Alderton", "Xqzj Vvkp", "Springfield")
     val second = Linker.linkTop1Memoized(spark, m2, emptyIdx, cfg, 0.5, memoDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
@@ -378,9 +380,9 @@ class LinkerSpec extends SparkSpec {
     // index finds nothing. (Pre-r4 the memo key covered only the config,
     // and this returned the stale link.)
     val emptyNames = index.names.filter(lit(false)).localCheckpoint(eager = false)
-    val rebuilt = NameIndexTables(emptyNames,
+    val rebuilt = NameIndex.tables(items, emptyNames,
       index.postings.filter(lit(false)), index.postings3g.filter(lit(false)),
-      index.postingsPair.map(_.filter(lit(false))))
+      index.postingsPair.get.filter(lit(false)))
     val second = Linker.linkTop1Memoized(spark, m, rebuilt, cfg, 0.5, memoDir)
       .collect()
     assert(second.isEmpty,
@@ -415,11 +417,10 @@ class LinkerSpec extends SparkSpec {
     // expansion as a match, so a candidate reached only through
     // misspelled tokens still clears the two-token bound
     val cfg = Pipeline.LinkConfig
-    val withPairs = index.copy(postingsPair = Some(NameIndex.postingsPair(index.names)))
     val label = items.filter(col("entity") === "Q100173")
       .select(col("labels")("en")).first().getString(0)
     assert(label == "Borealis Industries", s"fixture drifted: $label")
-    val links = Linker.linkTop1(spark, mentionsOf("Borelis Indusries"), withPairs,
+    val links = Linker.linkTop1(spark, mentionsOf("Borelis Indusries"), index,
       cfg, Pipeline.MinLinkScore).collect()
     assert(links.map(_.getString(1)).toSeq == Seq("Q100173"), s"got: ${links.mkString(",")}")
   }
@@ -451,12 +452,17 @@ class LinkerSpec extends SparkSpec {
   }
 
   test("salting path yields identical candidates to the unsalted join") {
-    val base = Linker.lookup(spark, mentionsOf("Alderton", "Springfield"), index,
-      LinkerConfig(limit = 100, hotTokenDf = Long.MaxValue))
-      .select("mention_norm", "id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val salted = Linker.lookup(spark, mentionsOf("Alderton", "Springfield"), index,
-      LinkerConfig(limit = 100, hotTokenDf = 1L))
-      .select("mention_norm", "id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(base == salted)
+    // no index hot-token set, so each config's hotTokenDf picks the tokens
+    val noHot = index.copy(hotTokens = None)
+    def run(hotTokenDf: Long) = Linker.lookup(spark,
+      mentionsOf("Alderton", "Springfield"), noHot,
+      LinkerConfig(limit = 100, hotTokenDf = hotTokenDf))
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("mention_norm", "id")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val (base, salted) = (run(Long.MaxValue), run(1L))
+    assert(!plan(base).contains("salt"), plan(base))
+    assert(plan(salted).contains("salt"), s"salt column missing from the plan:\n${plan(salted)}")
+    assert(rows(base) == rows(salted))
   }
 }
