@@ -96,24 +96,34 @@ object Bench {
     * so it measures DRAM bandwidth): returns (single, aggregate-of-4)
     * GB/s. Its ratio/4 is the box's own 1→4-thread memory-fabric scaling
     * — the hard ceiling for any shuffle/scan-heavy job's efficiency on
-    * ONE box (a multi-host cluster does not share memory channels). */
-  private[graft] def memProbe(): (Double, Double) = {
-    val size = 64 << 20
+    * ONE box (a multi-host cluster does not share memory channels).
+    * A worker that cannot allocate its arrays still releases the start
+    * latch, and the probe then throws an Exception naming the cause.
+    * `size` (bytes per array) is a test seam; 64 MiB is the probe. */
+  private[graft] def memProbe(size: Int = 64 << 20): (Double, Double) = {
     def pass(nThreads: Int, runMs: Long): Double = {
       val ready = new java.util.concurrent.CountDownLatch(nThreads)
       val go = new java.util.concurrent.CountDownLatch(1)
       val bytes = new java.util.concurrent.atomic.AtomicLong()
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
       @volatile var stopAt = 0L
       val ths = (1 to nThreads).map { _ =>
         val t = new Thread(() => {
-          val src = new Array[Byte](size); val dst = new Array[Byte](size)
-          java.util.Arrays.fill(src, 1.toByte) // touch pages outside the clock
-          ready.countDown(); go.await()
-          var b = 0L
-          while (System.nanoTime() < stopAt) {
-            System.arraycopy(src, 0, dst, 0, size); b += size
+          val bufs =
+            try {
+              val src = new Array[Byte](size); val dst = new Array[Byte](size)
+              java.util.Arrays.fill(src, 1.toByte) // touch pages outside the clock
+              Some((src, dst))
+            } catch { case e: Throwable => failure.compareAndSet(null, e); None }
+            finally ready.countDown()
+          go.await()
+          for ((src, dst) <- bufs) {
+            var b = 0L
+            while (System.nanoTime() < stopAt) {
+              System.arraycopy(src, 0, dst, 0, size); b += size
+            }
+            bytes.addAndGet(b)
           }
-          bytes.addAndGet(b); ()
         })
         t.setDaemon(true); t.start(); t
       }
@@ -122,6 +132,8 @@ object Bench {
       stopAt = t0 + runMs * 1000000L
       go.countDown()
       ths.foreach(_.join())
+      Option(failure.get).foreach(e =>
+        throw new RuntimeException(s"memory probe: a worker could not allocate its arrays: $e", e))
       bytes.get() / ((System.nanoTime() - t0) / 1e9) / 1e9
     }
     pass(1, 300) // JIT warm, discarded

@@ -2,13 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the tokenizer primitives (SURVEY.md
+/** Native static helpers for the tokenizer primitives (SURVEY.md
   * §4.4: "custom expressions, perf-only") — each replaces a chain of 4-7
   * interpreted higher-order-function expressions with ONE generated call
   * into a static helper, so the surrounding whole-stage-codegen span stays
@@ -247,110 +247,41 @@ object SigHelper {
   }
 }
 
-abstract class TextSetExpr extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  /** fully-qualified static call the generated code emits */
-  protected def helperCall(c: String): String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => helperCall(c))
-}
-
-case class TokenSetExpr(child: Expression) extends TextSetExpr {
-  override protected def nullSafeEval(input: Any): Any =
-    TextSetHelper.tokenSet(input.asInstanceOf[UTF8String])
-  override protected def helperCall(c: String): String =
-    s"graft.functions.TextSetHelper.tokenSet($c)"
-  override protected def withNewChildInternal(newChild: Expression): TokenSetExpr =
-    copy(child = newChild)
-}
-
-case class NgramSetExpr(child: Expression, n: Int) extends TextSetExpr {
-  override protected def nullSafeEval(input: Any): Any =
-    TextSetHelper.ngramSet(input.asInstanceOf[UTF8String], n)
-  override protected def helperCall(c: String): String =
-    s"graft.functions.TextSetHelper.ngramSet($c, $n)"
-  override protected def withNewChildInternal(newChild: Expression): NgramSetExpr =
-    copy(child = newChild)
-}
-
-case class WinnowExpr(child: Expression, k: Int, w: Int) extends TextSetExpr {
-  override protected def nullSafeEval(input: Any): Any =
-    TextSetHelper.winnow(input.asInstanceOf[UTF8String], k, w)
-  override protected def helperCall(c: String): String =
-    s"graft.functions.TextSetHelper.winnow($c, $k, $w)"
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
-}
-
-case class ShinglesExpr(child: Expression, n: Int) extends TextSetExpr {
-  override protected def nullSafeEval(input: Any): Any =
-    TextSetHelper.shingles(input.asInstanceOf[UTF8String], n)
-  override protected def helperCall(c: String): String =
-    s"graft.functions.TextSetHelper.shingles($c, $n)"
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
-
-/** |A ∩ B| of two SORTED DISTINCT string arrays (as produced by
-  * TokenSetExpr / NgramSetExpr / ShinglesExpr — binary UTF8String order)
-  * via a single merge scan: no per-row hash set, no materialized
-  * intersection array. Bit-identical to size(array_intersect(a, b)) for
-  * such inputs (verified in TextSetExprsSpec); the candidate-scoring
-  * stage evaluates this on every post-cut candidate pair, where
-  * array_intersect's per-row allocation was the hot path. */
-case class SortedOverlapCountExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextSetHelper.sortedOverlapCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TextSetHelper.sortedOverlapCount($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedOverlapCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** array<string> → array<long> MinHash signature (see [[SigHelper]]). */
-case class MinHashExpr(child: Expression, numPerms: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    SigHelper.minhash(input.asInstanceOf[ArrayData], numPerms)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SigHelper.minhash($c, $numPerms)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashExpr =
-    copy(child = newChild)
-}
-
-/** array<string> → 60-bit SimHash signature (see [[SigHelper]]). */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override protected def nullSafeEval(input: Any): Any =
-    SigHelper.simhash60(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SigHelper.simhash60($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
-}
-
+/** Each function is one `StaticInvoke` of a helper method above: Spark
+  * derives both the generated code (a call to the object's static
+  * forwarder, so the whole-stage-codegen span stays intact) and the
+  * interpreted eval from the same declaration. Int parameters are
+  * literals; with `returnNullable = false` a result is null exactly when
+  * an input is null. */
 object TextSetExprs {
-  def tokenSet(c: Column): Column =
-    GraftExpressionBridge.column(TokenSetExpr(GraftExpressionBridge.expression(c)))
-  def ngramSet(c: Column, n: Int): Column =
-    GraftExpressionBridge.column(NgramSetExpr(GraftExpressionBridge.expression(c), n))
-  def shingles(c: Column, n: Int): Column =
-    GraftExpressionBridge.column(ShinglesExpr(GraftExpressionBridge.expression(c), n))
-  def winnow(c: Column, k: Int, w: Int): Column =
-    GraftExpressionBridge.column(WinnowExpr(GraftExpressionBridge.expression(c), k, w))
+  private val StringSet = ArrayType(StringType, containsNull = false)
+
+  private def invoke(helper: Class[_], dataType: DataType, method: String,
+                     args: Column*): Column =
+    GraftExpressionBridge.column(StaticInvoke(helper, dataType, method,
+      args.map(GraftExpressionBridge.expression), returnNullable = false))
+
+  private def textSet(method: String, args: Column*): Column =
+    invoke(TextSetHelper.getClass, StringSet, method, args: _*)
+
+  def tokenSet(c: Column): Column = textSet("tokenSet", c)
+  def ngramSet(c: Column, n: Int): Column = textSet("ngramSet", c, lit(n))
+  def shingles(c: Column, n: Int): Column = textSet("shingles", c, lit(n))
+  def winnow(c: Column, k: Int, w: Int): Column = textSet("winnow", c, lit(k), lit(w))
+  /** array<string> → array<long> MinHash signature (see [[SigHelper]]). */
   def minhash(c: Column, numPerms: Int): Column =
-    GraftExpressionBridge.column(MinHashExpr(GraftExpressionBridge.expression(c), numPerms))
+    invoke(SigHelper.getClass, ArrayType(LongType, containsNull = false), "minhash",
+      c, lit(numPerms))
+  /** array<string> → 60-bit SimHash signature (see [[SigHelper]]). */
   def simhash60(c: Column): Column =
-    GraftExpressionBridge.column(SimHashExpr(GraftExpressionBridge.expression(c)))
-  /** |A ∩ B| for SORTED DISTINCT string arrays only — see
-    * [[SortedOverlapCountExpr]]. */
+    invoke(SigHelper.getClass, LongType, "simhash60", c)
+  /** |A ∩ B| of two SORTED DISTINCT string arrays (as tokenSet / ngramSet /
+    * shingles produce — binary UTF8String order) via a single merge scan:
+    * no per-row hash set, no materialized intersection array.
+    * Bit-identical to size(array_intersect(a, b)) for such inputs
+    * (verified in TextSetExprsSpec); the candidate-scoring stage evaluates
+    * it on every post-cut candidate pair, where array_intersect's per-row
+    * allocation was the hot path. */
   def sortedOverlapCount(a: Column, b: Column): Column =
-    GraftExpressionBridge.column(SortedOverlapCountExpr(
-      GraftExpressionBridge.expression(a), GraftExpressionBridge.expression(b)))
+    invoke(TextSetHelper.getClass, IntegerType, "sortedOverlapCount", a, b)
 }

@@ -265,15 +265,19 @@ object Linker {
     // the driver-built expansion table is small, so phase 2 broadcasts it;
     // the hint sits on the join that consumes it
     val (exps, inDriver) = expandTokens(mentionsD, postings3g, tokenDf, VocabDriverMax)
+    // distinct targets × postings unique per (token, name_row_id) ⇒
+    // distinct triples
     fuzzyTargets(mentionsD, if (inDriver) broadcast(exps) else exps, tokenDf, commonDf)
       .join(postings, Seq("token"))
       .select(col("mention_norm"), col("name_row_id"), col("token"))
-      .distinct()
   }
 
-  /** Phase 2's (mention_norm, token) targets: every accepted expansion of
-    * each mention token, minus common targets (df > commonDf, the exact
-    * path's blocking policy). Not distinct. */
+  /** Phase 2's distinct (mention_norm, token) targets: every accepted
+    * expansion of each mention token, minus common targets (df > commonDf,
+    * the exact path's blocking policy). Deduplicated here, at the
+    * (mention, target-token) level — a table that is tiny BEFORE the
+    * posting join (tens of thousands of rows) — instead of on the
+    * millions of post-join triples. */
   private def fuzzyTargets(mentionsD: DataFrame, expansions: DataFrame,
                            tokenDf: DataFrame, commonDf: Long): DataFrame = {
     val rareExpansions = expansions
@@ -282,6 +286,7 @@ object Linker {
       .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
       .join(rareExpansions, Seq("mtok"))
       .select(col("mention_norm"), col("token"))
+      .distinct()
   }
 
   /** Phase 1 only: the accepted (mtok → index token) fuzzy expansions.
@@ -406,13 +411,11 @@ object Linker {
   private def fuzzyStats(mentionsD: DataFrame, expansions: DataFrame,
                          postings: DataFrame, tokenDf: DataFrame,
                          commonDf: Long, idf: DataFrame): DataFrame = {
-    // Dedup + self-token filtering run at the (mention, target-token)
-    // level — a table that is tiny BEFORE the posting join (tens of
-    // thousands of rows) — instead of on the millions of post-join
-    // triples: postings are unique per (token, name_row), so distinct
-    // (m, token) targets yield (m, n, token) triples with NO duplicates
-    // and the per-candidate stats reduce to a plain codegen count/sum.
-    val targets = fuzzyTargets(mentionsD, expansions, tokenDf, commonDf).distinct()
+    // Self-token filtering runs on the distinct (mention, target-token)
+    // targets, before the posting join: postings are unique per (token,
+    // name_row), so the (m, n, token) triples have NO duplicates and the
+    // per-candidate stats reduce to a plain codegen count/sum.
+    val targets = fuzzyTargets(mentionsD, expansions, tokenDf, commonDf)
       .join(mentionsD.select(col("mention_norm"),
           explode(col("mention_tokens")).as("token")),
         Seq("mention_norm", "token"), "left_anti")
@@ -901,7 +904,10 @@ object Linker {
 
     // ---- deterministic lexical raw score (es_score substitute) ----
     val exactBoost =
-      if (cfg.fuzzy) lit(1.0) // old form folded to 1.0 via && !lit(true)
+      // lamAPI boosts an exact name match 2× only in its non-fuzzy name
+      // query; the fuzzy (`fuzziness: auto`) query carries no such boost
+      // (SURVEY.md J3, `lookup_retriever.py:505-512`)
+      if (cfg.fuzzy) lit(1.0)
       else when(col("name_clean") === col("mention_norm"), 2.0).otherwise(1.0)
     // soft filtering turns every filter with a should-boost into boost +
     // penalty terms (in declaration order); the rest stay hard

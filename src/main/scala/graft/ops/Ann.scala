@@ -66,8 +66,14 @@ object Ann {
     val joined = c.join(broadcast(q),
       if (excludeSelf) col("n_id") =!= col("q_id") else lit(true))
       .withColumn("cos", round(dot(col("q_u"), col("n_u")), 6))
+    topKPerQuery(joined, k)
+  }
+
+  /** The k best (q_id, n_id, cos) rows of each query, ranked by
+    * (cos desc, n_id asc) — the deterministic tail of every top-k path. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
-    joined.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
   }
@@ -89,6 +95,11 @@ object Ann {
   /** nBits-bit LSH bucket id of each vector for one hyperplane table. */
   def lshBucketFor(v: Column, table: Int, nBits: Int): Column =
     (0 until nBits).map(b => hyperplaneBit(v, table, b)).reduce(_.bitwiseOR(_))
+
+  /** One (table, bucket) key per table: the table id is mixed into the
+    * key so one shuffle on it covers all nTables tables. */
+  private def lshKeys(u: Column, nTables: Int, nBits: Int): Column =
+    array((0 until nTables).map(t => xxhash64(lit(t), lshBucketFor(u, t, nBits))): _*)
 
   /** All-pairs cosine ≥ minCos via multi-table random-hyperplane buckets —
     * the scale path for [[Dedup.embeddingPairs]]: candidates = pairs
@@ -114,15 +125,9 @@ object Ann {
       .select(col(idCol).as("id"),
         unitVector(col(vecCol).cast("array<double>")).as("u"))
       .localCheckpoint(eager = true) // normalize once; reused by verify joins
-    // one (table, bucket) key per table per vector; table id mixed into the
-    // join key so one shuffle covers all tables
-    val keys = array((0 until nTables).map(t =>
-      xxhash64(lit(t), lshBucketFor(col("u"), t, bits))): _*)
-    val keyed = e.select(col("id"), explode(keys).as("bucket"))
+    val keyed = e.select(col("id"), explode(lshKeys(col("u"), nTables, bits)).as("bucket"))
       .localCheckpoint(eager = true) // nTables×nBits projections computed once
-    val bucketDf = keyed.groupBy("bucket").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxBucket).select("bucket")
-    val small = keyed.join(bucketDf, Seq("bucket"), "left_semi")
+    val small = Dedup.dropFrequentKeys(keyed, "bucket", maxBucket)
     val cands = small.as("x").join(small.as("y"), "bucket")
       .filter(col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -224,10 +229,7 @@ object Ann {
     val joined = qProbes.join(cAssigned, Seq("centroid_id"))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("cos", round(dot(col("q_u"), col("n_u")), 6))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** Bucketed ANN top-k: exact ranking inside the union of shared LSH
@@ -241,8 +243,8 @@ object Ann {
     * a pair is far cheaper than shuffling both unit vectors through the
     * dedup exchange), so the multi-table `distinct` carries 3 scalars per
     * candidate instead of ~1 KB of vectors; and corpus-side buckets above
-    * maxBucket are dropped (degenerate-bucket skew guard — same policy as
-    * [[lshCosinePairs]]; a zero vector or constant embedding region
+    * maxBucket are dropped (degenerate-bucket skew guard
+    * [[Dedup.dropFrequentKeys]], as in [[lshCosinePairs]]; a zero vector or constant embedding region
     * otherwise funnels the corpus into one reducer). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",
@@ -252,24 +254,18 @@ object Ann {
     def keyed(df: DataFrame, side: String) = {
       val e = ensureParallelism(df).select(col(idCol).as(s"${side}_id"),
         unitVector(col(vecCol).cast("array<double>")).as(s"${side}_u"))
-      val keys = array((0 until nTables).map(t =>
-        xxhash64(lit(t), lshBucketFor(col(s"${side}_u"), t, bits))): _*)
-      e.select(col(s"${side}_id"), col(s"${side}_u"), explode(keys).as("bucket"))
+      e.select(col(s"${side}_id"), col(s"${side}_u"),
+        explode(lshKeys(col(s"${side}_u"), nTables, bits)).as("bucket"))
     }
     // checkpoint: the keyed corpus feeds both the bucket-df count and the
     // join — without it the nTables×nBits projections run twice
     val c = keyed(corpus, "n").localCheckpoint(eager = false)
-    val bucketDf = c.groupBy("bucket").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxBucket).select("bucket")
-    val cSmall = c.join(bucketDf, Seq("bucket"), "left_semi")
+    val cSmall = Dedup.dropFrequentKeys(c, "bucket", maxBucket)
     val q = keyed(queries, "q")
     val joined = cSmall.join(q, Seq("bucket")).filter(col("n_id") =!= col("q_id"))
       .withColumn("cos", round(dot(col("q_u"), col("n_u")), 6))
       .select("q_id", "n_id", "cos")
       .distinct() // a pair may collide in several tables — scalar-only dedup
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id").asc)
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
+    topKPerQuery(joined, k)
   }
 }

@@ -26,12 +26,13 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Keep only posting rows whose key's document frequency is ≤ cap —
-    * the stop-key skew guard shared by every inverted-index join here.
+    * the stop-key skew guard shared by every inverted-index join here and
+    * by the LSH bucket joins in [[Ann]].
     * groupBy + left-semi join (two hash shuffles on the key, no sort) —
     * cheaper than a count-over-window, which forces a full sort of the
     * posting table within each key partition. */
-  private def dropFrequentKeys(posts: DataFrame, keyCol: String,
-                               cap: Int): DataFrame = {
+  private[ops] def dropFrequentKeys(posts: DataFrame, keyCol: String,
+                                    cap: Int): DataFrame = {
     val df = posts.groupBy(keyCol).agg(count(lit(1)).as("df"))
       .filter(col("df") <= cap)
       .select(keyCol)
@@ -105,8 +106,8 @@ object Dedup {
   }
 
   /** MinHash signature: numPerms permutation-mins over the shingle set —
-    * a native codegen expression (functions.MinHashExpr): ONE md5 per
-    * shingle, numPerms long multiply-adds per element in a tight JVM
+    * one static-helper call (SigHelper.minhash via TextSetExprs): ONE md5
+    * per shingle, numPerms long multiply-adds per element in a tight JVM
     * loop. The hash base is md5 (not xxhash64) BY CHOICE: the signature
     * is bit-reproducible in DuckDB SQL, so the LSH gate gets a full hash
     * oracle (the winnow precedent — see SigHelper). */
@@ -144,8 +145,9 @@ object Dedup {
   }
 
   /** 60-bit SimHash over token features: bit b of the signature is set iff
-    * a strict majority of token hashes have bit b set. Native codegen
-    * expression (functions.SimHashExpr): one md5 + 60 bit-adds per token.
+    * a strict majority of token hashes have bit b set. One static-helper
+    * call (SigHelper.simhash60 via TextSetExprs): one md5 + 60 bit-adds per
+    * token.
     * 60 bits (not 64) so the value stays positive in a signed BIGINT on
     * both engines — the signature, and therefore the near-dup pair set,
     * is reproducible in DuckDB SQL (full hash oracle). */

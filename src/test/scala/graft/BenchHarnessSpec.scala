@@ -137,4 +137,17 @@ class BenchHarnessSpec extends AnyFunSuite {
     // 4-thread aggregate 10x (~38) fails.
     assert(s4 / s1 <= 32, s"s4/s1 = ${s4 / s1} (single $s1, x4 $s4 GB/s)")
   }
+
+  test("memory probe: a worker that cannot allocate fails the probe, not hangs") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val interrupt: Signaler = ThreadSignaler // a hung probe waits interruptibly
+    // an array this size exceeds the VM limit: every allocation throws
+    // OutOfMemoryError at once, without touching the heap
+    val e = TimeLimits.failAfter(30.seconds) {
+      intercept[Exception](Bench.memProbe(size = Int.MaxValue))
+    }
+    assert(e.getCause.isInstanceOf[OutOfMemoryError], e)
+    assert(e.getMessage.contains("OutOfMemoryError"), e.getMessage)
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +36,37 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       appender.stop()
     }
     seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Asserts that `native`'s (key, value) rows equal `ref`'s on both
+    * expression-evaluation paths. As built, a projection over a
+    * `toDF`/`Seq` input is folded into a local relation by Spark's
+    * ConvertToLocalRelation rule, which evaluates it interpreted; with
+    * that rule excluded the projection runs in whole-stage generated
+    * code. `native` is re-evaluated per path (a Dataset caches its
+    * optimized plan) and each plan is checked to have taken its path.
+    * `ref` is collected once: reference formulations built from
+    * higher-order functions never run generated code. */
+  def assertSameOnBothPaths(ref: DataFrame, native: => DataFrame): Unit = {
+    def byKey(rows: Array[Row]): Map[Any, Any] = rows.map(r => r.get(0) -> r.get(1)).toMap
+    val want = byKey(ref.collect())
+    def check(codegen: Boolean): Unit = {
+      val df = native
+      val plan = df.queryExecution.executedPlan.toString
+      if (codegen) assert(plan.contains("*(1) Project"), plan)
+      else assert(!plan.contains("Project"), plan)
+      val got = byKey(df.collect())
+      val bad = want.filter { case (k, v) => !got.get(k).contains(v) }
+      assert(got.size == want.size && bad.isEmpty,
+        s"${if (codegen) "codegen" else "interpreted"}: " + bad.take(3).map { case (k, v) =>
+          s"key=$k native=${got.get(k)} ref=$v" }.mkString("; "))
+    }
+    check(codegen = false)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded,
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    try check(codegen = true)
+    finally spark.conf.unset(excluded)
   }
 }
 

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import graft.functions.TextSetExprs
 import org.apache.spark.sql.functions._
 
-/** Bit-equivalence of the native Catalyst text-set expressions vs the
-  * Column-expression definitions they replace, over adversarial input
+/** Bit-equivalence of the native text-set functions vs the
+  * Column-expression definitions they replace, on both the interpreted
+  * and the generated-code evaluation path, over adversarial input
   * (whitespace runs, case, CJK, combining marks, astral plane) plus a
   * seeded random corpus. */
 class TextSetExprsSpec extends SparkSpec {
@@ -52,11 +53,10 @@ class TextSetExprsSpec extends SparkSpec {
                     nat: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                     ref: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
     test(s"$name: native expression ≡ column expressions") {
-      val df = corpus.toDF("s")
-        .select(col("s"), nat(col("s")).as("a"), ref(col("s")).as("b"))
-      val bad = df.filter(not(col("a") === col("b"))).collect()
-      assert(bad.isEmpty, bad.take(3).map(r =>
-        s"input=${r.get(0)} native=${r.get(1)} ref=${r.get(2)}").mkString("; "))
+      // keyed by the input string: equal inputs give equal outputs
+      val input = corpus.toDF("s")
+      assertSameOnBothPaths(input.select(col("s"), ref(col("s"))),
+        input.select(col("s"), nat(col("s"))))
     }
 
   private def winnowCol(c: org.apache.spark.sql.Column, k: Int, w: Int) = {
@@ -92,17 +92,17 @@ class TextSetExprsSpec extends SparkSpec {
   test("sortedOverlapCount ≡ size(array_intersect) on sorted set pairs") {
     // pair every corpus string with its successor; compare on token sets,
     // 3-gram sets and 2-shingle sets (all sorted distinct by construction)
-    val pairs = corpus.zip(corpus.drop(1) :+ corpus.head).toDF("x", "y")
+    val pairs = corpus.zip(corpus.drop(1) :+ corpus.head).zipWithIndex
+      .map { case ((x, y), i) => (i, x, y) }.toDF("i", "x", "y")
     for ((name, f) <- Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
         ("tokenSet", TextSetExprs.tokenSet),
         ("ngramSet3", c => TextSetExprs.ngramSet(c, 3)),
-        ("shingles2", c => TextSetExprs.shingles(c, 2)))) {
-      val df = pairs.select(
-        TextSetExprs.sortedOverlapCount(f(col("x")), f(col("y"))).as("a"),
-        size(array_intersect(f(col("x")), f(col("y")))).as("b"))
-      val bad = df.filter(col("a") =!= col("b")).collect()
-      assert(bad.isEmpty, s"$name: ${bad.take(3).mkString("; ")}")
-    }
+        ("shingles2", c => TextSetExprs.shingles(c, 2))))
+      withClue(s"$name: ") {
+        assertSameOnBothPaths(
+          pairs.select(col("i"), size(array_intersect(f(col("x")), f(col("y"))))),
+          pairs.select(col("i"), TextSetExprs.sortedOverlapCount(f(col("x")), f(col("y")))))
+      }
   }
 
   test("whole-stage codegen keeps the span (no eval fallback in plan)") {

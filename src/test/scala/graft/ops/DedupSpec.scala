@@ -67,10 +67,8 @@ class DedupSpec extends SparkSpec {
           least(m, (element_at(aLit, i + 1) * h + element_at(bLit, i + 1))
             % lit(SigHelper.Mod40)))
       })
-    val out = docs.select(
-      Dedup.minhashSignature(sh, n).as("native"), colSig.as("cols"))
-      .filter(not(col("native") === col("cols")))
-    assert(out.isEmpty, s"diverging rows: ${out.collect().mkString(";")}")
+    assertSameOnBothPaths(docs.select(col("doc_id"), colSig),
+      docs.select(col("doc_id"), Dedup.minhashSignature(sh, n)))
   }
 
   test("SimHashExpr ≡ md5 column formulation (bit-exact)") {
@@ -87,9 +85,8 @@ class DedupSpec extends SparkSpec {
     val colSig = aggregate(
       zip_with(counts, masks, (c, m) => when(c * 2 > size(toks), m).otherwise(lit(0L))),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
-    val out = docs.select(Dedup.simhash(toks).as("native"), colSig.as("cols"))
-      .filter(col("native") =!= col("cols"))
-    assert(out.isEmpty, s"diverging rows: ${out.collect().mkString(";")}")
+    assertSameOnBothPaths(docs.select(col("doc_id"), colSig),
+      docs.select(col("doc_id"), Dedup.simhash(toks)))
   }
 
   test("jaccardPairs: stop-shingle cap keeps precision 1 (subset of uncapped)") {
