@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpressionBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{IntegerType, ObjectType}
 
 /** Row-local vector primitives for the ANN operators.
   *
@@ -24,8 +24,9 @@ object VectorHelper {
     * ordering (score desc, centroid_id asc). Dot products accumulate
     * left-to-right — the same FP order as the `aggregate` Column fold,
     * so scores are bit-identical to the join formulation. */
-  def nearestCentroid(v: Array[Double], cents: Array[Array[Double]],
+  def nearestCentroid(vec: ArrayData, cents: Array[Array[Double]],
                       ids: Array[Int]): Int = {
+    val v = vec.toDoubleArray()
     var bestScore = Double.NegativeInfinity
     var bestId = -1
     var i = 0
@@ -42,38 +43,16 @@ object VectorHelper {
   }
 }
 
-/** array<double> → int nearest-centroid id (see [[VectorHelper]]).
-  *
-  * Centroids/ids are held as immutable `IndexedSeq`s, NOT arrays: case-class
-  * equality on Array fields is reference-based, so two semantically
-  * identical expressions would never compare equal — defeating Catalyst
-  * plan canonicalization / common-subexpression elimination — and `copy`
-  * in withNewChildInternal would share mutable arrays across plan copies.
-  * The primitive arrays the tight loop needs are derived once, lazily. */
-case class NearestCentroidExpr(child: Expression,
-                               centroids: IndexedSeq[IndexedSeq[Double]],
-                               ids: IndexedSeq[Int]) extends UnaryExpression {
-  @transient private lazy val centArr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-  @transient private lazy val idArr: Array[Int] = ids.toArray
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    VectorHelper.nearestCentroid(
-      input.asInstanceOf[ArrayData].toDoubleArray(), centArr, idArr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cref = ctx.addReferenceObj("centroids", centArr, "double[][]")
-    val iref = ctx.addReferenceObj("centroidIds", idArr, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorHelper.nearestCentroid($c.toDoubleArray(), $cref, $iref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
-    copy(child = newChild)
-}
-
+/** array<double> → int nearest-centroid id: one `StaticInvoke` of
+  * [[VectorHelper.nearestCentroid]], like every `TextSetExprs` function.
+  * The centroid and id arrays are object literals, which generated code
+  * holds as reference objects, so no row decodes them. */
 object VectorExprs {
   def nearestCentroid(v: Column, centroids: Array[Array[Double]],
                       ids: Array[Int]): Column =
-    GraftExpressionBridge.column(
-      NearestCentroidExpr(GraftExpressionBridge.expression(v),
-        centroids.map(_.toIndexedSeq).toIndexedSeq, ids.toIndexedSeq))
+    GraftExpressionBridge.column(StaticInvoke(VectorHelper.getClass, IntegerType,
+      "nearestCentroid", Seq(GraftExpressionBridge.expression(v),
+        Literal(centroids, ObjectType(classOf[Array[Array[Double]]])),
+        Literal(ids, ObjectType(classOf[Array[Int]]))),
+      returnNullable = false))
 }

@@ -38,8 +38,7 @@ object Canonicalize {
     *        remains the path for large graphs and is what the size check
     *        costs one cheap count() to choose.
     * @return (node, component) — component = min node label reachable. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 24,
-                          maxDriverEdges: Long = 100000L): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxDriverEdges: Long = 100000L): DataFrame = {
     val sym0 = edges.select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v")))
       .distinct()
@@ -67,9 +66,9 @@ object Canonicalize {
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("component", col("node"))
       .localCheckpoint(eager = true)
-    var i = 0
     var converged = false
-    while (!converged && i < maxIters) {
+    // runs until no label changes, which always comes: labels only decrease
+    while (!converged) {
       // 1) neighbor-label min
       val nbrMin = sym
         .join(labels, sym("v") === labels("node"))
@@ -98,8 +97,7 @@ object Canonicalize {
       val row = updated.agg(sum(col("changed"))).first()
       val nChanged = if (row.isNullAt(0)) 0L else row.getLong(0)
       labels = updated.drop("changed")
-      if (nChanged == 0) converged = true
-      i += 1
+      converged = nChanged == 0
     }
     labels
   }

@@ -41,8 +41,7 @@ object TypeClosure {
     *        both paths.
     * @return closure (child, ancestor) — all pairs child →* ancestor,
     *         excluding the trivial (x, x) unless present as an edge. */
-  def closure(edges: DataFrame, maxIters: Int = 64,
-              maxDriverEdges: Long = 32768L): DataFrame = {
+  def closure(edges: DataFrame, maxDriverEdges: Long = 32768L): DataFrame = {
     val eDistinct = edges.select(col("child").as("e_child"), col("parent").as("e_parent"))
       .distinct()
     val inDriver = GraphDriverPath.solve(eDistinct, maxDriverEdges,
@@ -69,9 +68,9 @@ object TypeClosure {
     var acc = e.select(col("e_child").as("child"), col("e_parent").as("ancestor"))
       .localCheckpoint(eager = true)
     var frontier = acc
-    var i = 0
     var done = false
-    while (!done && i < maxIters) {
+    // runs to an empty delta, which always comes: the closure is finite
+    while (!done) {
       // TWO expansion levels per materialization: each iteration joins the
       // frontier one AND two edge-steps out before the distinct/anti-join,
       // halving the number of sequential materialization barriers (the
@@ -96,7 +95,6 @@ object TypeClosure {
       else {
         acc = acc.union(next).localCheckpoint(eager = false)
         frontier = next
-        i += 1
       }
     }
     acc

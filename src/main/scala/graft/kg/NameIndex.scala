@@ -135,10 +135,12 @@ object NameIndex {
   }
 
   /** Token posting list (token, name_row_id) — ES whitespace+lowercase
-    * analyzer realized as an exploded bucketable table. */
+    * analyzer realized as an exploded bucketable table, read from the
+    * stored `name_tokens` sets. Unique per (token, name_row_id): `Linker`
+    * relies on it. */
   def postings(namesDf: DataFrame): DataFrame =
     namesDf
-      .select(col("name_row_id"), explode(Text.tokenSet(col("name_clean"))).as("token"))
+      .select(col("name_row_id"), explode(col("name_tokens")).as("token"))
       .distinct()
 
   /** VOCABULARY-level char-3-gram table (gram, token) for the fuzzy path —
@@ -146,12 +148,13 @@ object NameIndex {
     * mention token to matching index TOKENS first (vocabulary scale), and
     * only the accepted tokens touch the posting lists. Carrying
     * name_row_id through the gram join instead would multiply the join by
-    * posting-list length — quadratic at corpus scale. */
-  def postings3g(namesDf: DataFrame, n: Int = 3): DataFrame =
+    * posting-list length — quadratic at corpus scale. Grams are 3 chars
+    * long, as `Linker`'s gram joins assume. */
+  def postings3g(namesDf: DataFrame): DataFrame =
     namesDf
-      .select(explode(Text.tokenSet(col("name_clean"))).as("token"))
+      .select(explode(col("name_tokens")).as("token"))
       .distinct()
-      .select(col("token"), explode(Text.tokenNgrams(col("token"), n)).as("gram"))
+      .select(col("token"), explode(Text.tokenNgrams(col("token"), 3)).as("gram"))
       .distinct()
 
   /** All sorted 2-subsets of a (sorted, distinct) token array, encoded

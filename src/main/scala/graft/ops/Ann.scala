@@ -15,9 +15,17 @@ import org.apache.spark.sql.functions._
   * n / 2^nBits. Size nBits to the corpus (≈ log2(n) − 10) and nTables to
   * the recall target.
   *
-  * All vectors are L2-normalized ONCE per side (`unitVector`), so every
-  * pairwise cosine is a single dot-product fold instead of dot + two norm
-  * traversals per pair.
+  * All vectors are L2-normalized ONCE per side ([[unitVectors]]), so
+  * every pairwise cosine is a single dot-product fold instead of dot + two
+  * norm traversals per pair.
+  *
+  * Shared tables (here and in [[Dedup]]): a table that more than one plan
+  * reads is checkpointed EAGERLY. AQE runs those plans' stages at once; a
+  * lazy checkpoint is materialized by whichever job ends first, which
+  * then drops the source plan. Tasks of the other stages were built from
+  * that plan and still report its SQL metrics, which a GC has by then
+  * removed — one DAGScheduler "non-existent accumulator" ERROR trace per
+  * metric per task.
   */
 object Ann {
 
@@ -51,20 +59,21 @@ object Ann {
     when(n === 0.0, v).otherwise(transform(v, x => x / n))
   }
 
+  /** The (id, u) table of `df`: u = the unit vector of `vecCol` as
+    * array<double>. Callers rename its columns with `toDF`. */
+  private[ops] def unitVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), unitVector(col(vecCol).cast("array<double>")).as("u"))
+
   /** Exact top-k cosine neighbors for each query vector.
     * queries is small (broadcast); corpus is arbitrarily large — the join
     * is a BroadcastNestedLoopJoin = one pass over the corpus, then a
     * per-query top-k window on (score, id). Deterministic: ranking key is
-    * (rounded score desc, id asc). */
+    * (rounded score desc, id asc). A query is never its own neighbor. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     excludeSelf: Boolean = true): DataFrame = {
-    val c = ensureParallelism(corpus).select(col(idCol).as("n_id"),
-      unitVector(col(vecCol).cast("array<double>")).as("n_u"))
-    val q = queries.select(col(idCol).as("q_id"),
-      unitVector(col(vecCol).cast("array<double>")).as("q_u"))
-    val joined = c.join(broadcast(q),
-      if (excludeSelf) col("n_id") =!= col("q_id") else lit(true))
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val c = unitVectors(ensureParallelism(corpus), idCol, vecCol).toDF("n_id", "n_u")
+    val q = unitVectors(queries, idCol, vecCol).toDF("q_id", "q_u")
+    val joined = c.join(broadcast(q), col("n_id") =!= col("q_id"))
       .withColumn("cos", round(dot(col("q_u"), col("n_u")), 6))
     topKPerQuery(joined, k)
   }
@@ -115,26 +124,14 @@ object Ann {
                      minCos: Double = 0.95, nBits: Int = 0, nTables: Int = 16,
                      maxBucket: Int = 100000): DataFrame = {
     val bits = if (nBits > 0) nBits else lshBitsFor(embs.count())
-    // Both checkpoints are EAGER: each table is read by several stages that
-    // AQE runs at once. A lazy checkpoint is materialized by whichever job
-    // ends first, which then drops the source plan; tasks of the other
-    // stages were built from that plan and still report its SQL metrics,
-    // which a GC has by then removed — one DAGScheduler "non-existent
-    // accumulator" ERROR trace per metric per task.
-    val e = ensureParallelism(embs)
-      .select(col(idCol).as("id"),
-        unitVector(col(vecCol).cast("array<double>")).as("u"))
-      .localCheckpoint(eager = true) // normalize once; reused by verify joins
+    val e = unitVectors(ensureParallelism(embs), idCol, vecCol)
+      .localCheckpoint() // normalize once; reused by verify joins
     val keyed = e.select(col("id"), explode(lshKeys(col("u"), nTables, bits)).as("bucket"))
-      .localCheckpoint(eager = true) // nTables×nBits projections computed once
+      .localCheckpoint() // nTables×nBits projections computed once
     val small = Dedup.dropFrequentKeys(keyed, "bucket", maxBucket)
-    val cands = small.as("x").join(small.as("y"), "bucket")
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    cands
-      .join(e.select(col("id").as("id_a"), col("u").as("u_a")), "id_a")
-      .join(e.select(col("id").as("id_b"), col("u").as("u_b")), "id_b")
+    Dedup.selfJoinPairs(small, "bucket")
+      .join(e.toDF("id_a", "u_a"), "id_a")
+      .join(e.toDF("id_b", "u_b"), "id_b")
       .withColumn("cos", dot(col("u_a"), col("u_b")))
       .filter(col("cos") >= minCos)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
@@ -144,17 +141,16 @@ object Ann {
     * drawn from the corpus itself (the nCentroids vectors with the
     * smallest xxhash64(id) — a uniform pseudo-random sample that needs no
     * RNG and is stable across runs and cluster sizes), refined with
-    * `iters` Lloyd steps. Returns (centroid_id, centroid) — small enough
-    * to broadcast; at 100 TB the assignment pass is one broadcast map
-    * stage over the corpus. */
+    * two Lloyd steps. Returns (centroid_id, centroid) — small enough to
+    * broadcast; at 100 TB the assignment pass is one broadcast map stage
+    * over the corpus. */
   def ivfCentroids(corpus: DataFrame, nCentroids: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   iters: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val e = ensureParallelism(corpus).select(col(idCol).as("id"),
-      unitVector(col(vecCol).cast("array<double>")).as("u"))
-      .localCheckpoint(eager = false)
+                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    centroidsOf(unitVectors(ensureParallelism(corpus), idCol, vecCol).localCheckpoint(),
+      nCentroids)
+
+  /** [[ivfCentroids]] over a checkpointed (id, u) table. */
+  private def centroidsOf(e: DataFrame, nCentroids: Int): DataFrame = {
     // orderBy+limit plans as a distributed TakeOrdered (no global
     // single-partition sort); the window numbering then runs over the
     // nCentroids-row result only
@@ -163,8 +159,8 @@ object Ann {
     val wSeed = Window.orderBy(col("h"), col("id"))
     var cents = seeds.withColumn("r", row_number().over(wSeed))
       .select((col("r") - 1).as("centroid_id"), col("u").as("centroid"))
-      .localCheckpoint(eager = false)
-    for (_ <- 1 to iters) {
+      .localCheckpoint()
+    for (_ <- 1 to 2) {
       val assigned = assignToCentroids(e, cents)
       // elementwise mean via dimension explode — partial aggregation keeps
       // the shuffle at (nCentroids × dim) rows regardless of corpus size
@@ -177,7 +173,7 @@ object Ann {
           array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
           e2 => e2.getField("m")).as("centroid"))
         .withColumn("centroid", unitVector(col("centroid")))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     cents
   }
@@ -210,16 +206,10 @@ object Ann {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",
               nCentroids: Int = 64, nProbe: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = ivfCentroids(corpus, nCentroids, idCol, vecCol)
-    val c = ensureParallelism(corpus).select(col(idCol).as("n_id"),
-      unitVector(col(vecCol).cast("array<double>")).as("n_u"))
-      .localCheckpoint(eager = false)
-    val cAssigned = assignToCentroids(
-      c.select(col("n_id").as("id"), col("n_u").as("u")), cents)
-      .select(col("id").as("n_id"), col("u").as("n_u"), col("centroid_id"))
-    val q = queries.select(col(idCol).as("q_id"),
-      unitVector(col(vecCol).cast("array<double>")).as("q_u"))
+    val e = unitVectors(ensureParallelism(corpus), idCol, vecCol).localCheckpoint()
+    val cents = centroidsOf(e, nCentroids)
+    val cAssigned = assignToCentroids(e, cents).toDF("n_id", "n_u", "centroid_id")
+    val q = unitVectors(queries, idCol, vecCol).toDF("q_id", "q_u")
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("cscore").desc, col("centroid_id"))
     val qProbes = q.crossJoin(broadcast(cents))
@@ -251,15 +241,12 @@ object Ann {
               nBits: Int = 0, nTables: Int = 4,
               maxBucket: Int = 100000): DataFrame = {
     val bits = if (nBits > 0) nBits else lshBitsFor(corpus.count())
-    def keyed(df: DataFrame, side: String) = {
-      val e = ensureParallelism(df).select(col(idCol).as(s"${side}_id"),
-        unitVector(col(vecCol).cast("array<double>")).as(s"${side}_u"))
-      e.select(col(s"${side}_id"), col(s"${side}_u"),
-        explode(lshKeys(col(s"${side}_u"), nTables, bits)).as("bucket"))
-    }
+    def keyed(df: DataFrame, side: String) =
+      unitVectors(ensureParallelism(df), idCol, vecCol).toDF(s"${side}_id", s"${side}_u")
+        .select(col("*"), explode(lshKeys(col(s"${side}_u"), nTables, bits)).as("bucket"))
     // checkpoint: the keyed corpus feeds both the bucket-df count and the
     // join — without it the nTables×nBits projections run twice
-    val c = keyed(corpus, "n").localCheckpoint(eager = false)
+    val c = keyed(corpus, "n").localCheckpoint()
     val cSmall = Dedup.dropFrequentKeys(c, "bucket", maxBucket)
     val q = keyed(queries, "q")
     val joined = cSmall.join(q, Seq("bucket")).filter(col("n_id") =!= col("q_id"))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * stay linear in corpus size + pair-candidate count, and skewed keys
   * (stop-shingles, giant buckets) are capped explicitly BEFORE the join.
   * All signatures are single-pass array folds (one traversal of the
-  * shingle/token array per row, one string hash per element).
+  * shingle/token array per row, one string hash per element). Shared
+  * tables are checkpointed eagerly, by the rule stated on [[Ann]].
   */
 object Dedup {
 
@@ -44,7 +45,7 @@ object Dedup {
     * the count is a free overlap lower bound for pruning). The caller must
     * checkpoint `posts` so the self-join's two sides share one
     * materialization instead of recomputing the signature lineage twice. */
-  private def selfJoinPairs(posts: DataFrame, keyCol: String): DataFrame =
+  private[ops] def selfJoinPairs(posts: DataFrame, keyCol: String): DataFrame =
     posts.as("x").join(posts.as("y"), keyCol)
       .filter(col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -78,10 +79,10 @@ object Dedup {
                    maxPostings: Int = 1000): DataFrame = {
     val sh = Ann.ensureParallelism(docs)
       .select(col(idCol).as("id"), TextStats.shingles(col(textCol), n).as("sh"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val posts = sh.select(col("id"), explode(col("sh")).as("shingle"))
     val rare = dropFrequentKeys(posts, "shingle", maxPostings)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // prune BEFORE touching shingle arrays: an upper bound on the true
     // Jaccard from (shared kept keys, per-doc sizes, per-doc dropped
     // postings) — true_shared ≤ shared_kept + min(drop_a, drop_b), and
@@ -131,7 +132,7 @@ object Dedup {
     val sh = Ann.ensureParallelism(docs)
       .select(col(idCol).as("id"), TextStats.shingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val sig = sh.withColumn("sig", minhashSignature(col("sh"), numPerms))
     val banded = sig.select(col("id"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
@@ -140,7 +141,7 @@ object Dedup {
             x => x.cast("string")), ","))))
         .as("bucket"))
     val small = dropFrequentKeys(banded, "bucket", maxBucket)
-      .localCheckpoint(eager = false) // signatures computed once, not per join side
+      .localCheckpoint() // signatures computed once, not per join side
     verifyJaccard(selfJoinPairs(small, "bucket").select("id_a", "id_b"), sh, minJaccard)
   }
 
@@ -153,6 +154,18 @@ object Dedup {
     * is reproducible in DuckDB SQL (full hash oracle). */
   def simhash(tokenSet: Column): Column =
     graft.functions.TextSetExprs.simhash60(tokenSet)
+
+  /** Auto-sizing of the Manku block count from the corpus size: effective
+    * key width is (nBlocks−3)·(60/nBlocks) bits at d=3, and candidate
+    * volume stays sub-quadratic while 2^width ≳ corpus size —
+    * 15-bit keys (nBlocks=4) hold to ~10⁷ docs, 24-bit (5) to ~10⁹,
+    * 30-bit (6) beyond. Chosen from ONE cheap count when the caller
+    * passes nBlocks=0 instead of silently keeping a default that stops
+    * holding past 10⁷ docs. */
+  def simhashBlocksFor(nDocs: Long): Int =
+    if (nDocs <= 10L * 1000 * 1000) 4
+    else if (nDocs <= 1000L * 1000 * 1000) 5
+    else 6
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, blocked
     * Manku-style (permuted-block tables, WWW'07 "Detecting Near-Duplicates
@@ -170,18 +183,6 @@ object Dedup {
     * Residual giant buckets (constant-ish signatures) are dropped via
     * maxBucket.
     */
-  /** Auto-sizing of the Manku block count from the corpus size: effective
-    * key width is (nBlocks−3)·(60/nBlocks) bits at d=3, and candidate
-    * volume stays sub-quadratic while 2^width ≳ corpus size —
-    * 15-bit keys (nBlocks=4) hold to ~10⁷ docs, 24-bit (5) to ~10⁹,
-    * 30-bit (6) beyond. Chosen from ONE cheap count when the caller
-    * passes nBlocks=0 instead of silently keeping a default that stops
-    * holding past 10⁷ docs. */
-  def simhashBlocksFor(nDocs: Long): Int =
-    if (nDocs <= 10L * 1000 * 1000) 4
-    else if (nDocs <= 1000L * 1000 * 1000) 5
-    else 6
-
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, nBlocks: Int = 0,
                    maxBucket: Int = 10000): DataFrame = {
@@ -202,7 +203,7 @@ object Dedup {
       simhash(graft.core.Text.tokenSet(col(textCol))).as("sig"))
     val keyed = sigs.select(col("id"), col("sig"), explode(keys).as("bucket"))
     val small = dropFrequentKeys(keyed, "bucket", maxBucket)
-      .localCheckpoint(eager = false) // signatures computed once, not per join side
+      .localCheckpoint() // signatures computed once, not per join side
     // Hamming filter INSIDE the join: bad pairs die during the bucket
     // probe instead of being shuffled into a distinct — the dedup shuffle
     // carries only true near-dup pairs (× #combos duplicates).
@@ -222,10 +223,8 @@ object Dedup {
     * single dot-product fold. */
   def embeddingPairs(embs: DataFrame, idCol: String, vecCol: String,
                      minCos: Double = 0.95): DataFrame = {
-    val e = Ann.ensureParallelism(embs)
-      .select(col(idCol).as("id"),
-        Ann.unitVector(col(vecCol).cast("array<double>")).as("u"))
-      .localCheckpoint(eager = false) // normalize once, not per join side
+    val e = Ann.unitVectors(Ann.ensureParallelism(embs), idCol, vecCol)
+      .localCheckpoint() // normalize once, not per join side
     e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
       .withColumn("cos", Ann.dot(col("a.u"), col("b.u")))
       .filter(col("cos") >= minCos)

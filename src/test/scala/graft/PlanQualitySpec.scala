@@ -51,7 +51,8 @@ class PlanQualitySpec extends SparkSpec {
   test("salted candidate join exchanges on (token, salt), not token alone") {
     val names = Seq(("Q1", "alpha beta", 1L), ("Q2", "alpha gamma", 2L))
       .toDF("id", "name_clean", "name_row_id")
-    val postings = NameIndex.postings(names.withColumn("name_clean", col("name_clean")))
+      .withColumn("name_tokens", graft.core.Text.tokenSet(col("name_clean")))
+    val postings = NameIndex.postings(names)
     val mentions = Seq("alpha beta").toDF("surface")
       .select(graft.core.Text.cleanStr(col("surface")).as("mention_norm"))
     val mentionsD = Linker.distinctMentions(mentions)
@@ -119,6 +120,7 @@ class PlanQualitySpec extends SparkSpec {
     // side — while the bucketed index side is scanned shuffle-free.
     val names = Seq(("Q1", "alpha beta", 1L), ("Q2", "gamma beta", 2L))
       .toDF("id", "name_clean", "name_row_id")
+      .withColumn("name_tokens", graft.core.Text.tokenSet(col("name_clean")))
     val dir = Files.createTempDirectory("plan-bucket").toString
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {

@@ -38,6 +38,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     seen.toArray(Array.empty[String]).toSeq
   }
 
+  /** DAGScheduler ERROR messages logged while `body` runs beside a GC
+    * loop. SQL metrics are weakly held accumulators: a task that reports
+    * one whose plan the driver no longer references makes DAGScheduler
+    * log "non-existent accumulator" with a stack trace, and the GC loop
+    * makes any such task show up. It idles 3× as long as each collection
+    * took, so a large heap cannot stall the run. */
+  def schedulerErrorsUnderGc(body: => Unit): Seq[String] = {
+    @volatile var running = true
+    val gc = new Thread(() => while (running) {
+      val t0 = System.nanoTime()
+      System.gc()
+      Thread.sleep(math.max(10L, 3 * (System.nanoTime() - t0) / 1000000L))
+    })
+    gc.setDaemon(true)
+    gc.start()
+    try capturedLogs("org.apache.spark.scheduler.DAGScheduler", Level.ERROR) {
+      body
+      Thread.sleep(1000) // task-end events reach the scheduler asynchronously
+    } finally running = false
+  }
+
   /** Asserts that `native`'s (key, value) rows equal `ref`'s on both
     * expression-evaluation paths. As built, a projection over a
     * `toDF`/`Seq` input is folded into a local relation by Spark's

@@ -21,6 +21,17 @@ class GraphPathsSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("closure: a 140-level chain closes fully on both paths") {
+    val edges = (1 to 140).map(i => (i.toLong, (i - 1).toLong)).toDF("child", "parent")
+    val want = (for (c <- 1 to 140; a <- 0 until c) yield (c.toLong, a.toLong)).toSet
+    Seq("driver" -> Long.MaxValue, "distributed" -> 0L).foreach { case (path, maxDriverEdges) =>
+      val got = TypeClosure.closure(edges, maxDriverEdges = maxDriverEdges)
+        .as[(Long, Long)].collect().toSet
+      val missing = (want -- got).size
+      assert(missing == 0 && got.subsetOf(want), s"$path path: ${got.size} of ${want.size} pairs")
+    }
+  }
+
   test("components: driver path picks NUMERIC min labels like the loop") {
     // component {9, 100}: numeric min = 9; lexicographic would pick "100"
     val edges = Seq((100L, 9L), (5L, 300L)).toDF("src", "dst")

@@ -126,32 +126,44 @@ class AnnSpec extends SparkSpec {
   }
 
   test("lshCosinePairs: no task reports a metric of a collected plan (DAGScheduler ERROR)") {
-    // SQL metrics are weakly held accumulators: a task that reports one
-    // whose plan the driver no longer references makes DAGScheduler log
-    // "non-existent accumulator" with a stack trace. A GC loop running
-    // alongside the query makes any such task show up; it idles 3× as
-    // long as each collection took, so a large heap cannot stall the run.
     val r = new scala.util.Random(7)
     val dir = java.nio.file.Files.createTempDirectory("lsh-acc").toString + "/embs"
     (0 until 500).map(i => (i.toLong, Array.fill(64)(r.nextDouble() * 2 - 1)))
       .toDF("vec_id", "embedding").coalesce(1).write.parquet(dir)
-    @volatile var running = true
-    val gc = new Thread(() => while (running) {
-      val t0 = System.nanoTime()
-      System.gc()
-      Thread.sleep(math.max(10L, 3 * (System.nanoTime() - t0) / 1000000L))
-    })
-    gc.setDaemon(true)
-    gc.start()
-    val errors = try capturedLogs("org.apache.spark.scheduler.DAGScheduler",
-        org.apache.logging.log4j.Level.ERROR) {
+    val errors = schedulerErrorsUnderGc {
       (1 to 2).foreach { _ =>
         Ann.lshCosinePairs(spark.read.parquet(dir), "vec_id", "embedding",
           minCos = 0.5, nBits = 1, nTables = 10)
           .orderBy(col("id_a"), col("id_b")).collect()
       }
-      Thread.sleep(1000) // task-end events reach the scheduler asynchronously
-    } finally running = false
+    }
     assert(errors.isEmpty, s"${errors.size} DAGScheduler errors, first: ${errors.take(1)}")
+  }
+
+  test("embeddingPairs, ivfTopK, lshTopK: no task reports a metric of a collected plan") {
+    val queries = embs.filter(col("vec_id") < 20)
+    val errors = schedulerErrorsUnderGc {
+      (1 to 3).foreach { _ =>
+        Dedup.embeddingPairs(embs, "vec_id", "embedding", minCos = 0.9).collect()
+        Ann.ivfTopK(embs, queries, k = 1, nCentroids = 8, nProbe = 3).collect()
+        Ann.lshTopK(embs, queries, k = 1, nBits = 3, nTables = 8).collect()
+      }
+    }.filter(_.contains("non-existent accumulator"))
+    assert(errors.isEmpty, s"${errors.size} accumulator errors, first: ${errors.take(1)}")
+  }
+
+  test("nearestCentroid ≡ Scala argmax on both paths") {
+    val r = new scala.util.Random(11)
+    val cents = Array.fill(6)(Array.fill(16)(r.nextDouble() * 2 - 1))
+    val ids = Array(3, 7, 10, 12, 20, 31)
+    def dotOf(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    val want = embs.as[(Long, Seq[Double])].collect().toSeq.map { case (id, v) =>
+      (id, ids(cents.indices.maxBy(i => dotOf(v, cents(i).toSeq))))
+    }
+    assert(want.map(_._2).distinct.size > 1, "the probe must reach several centroids")
+    assertSameOnBothPaths(want.toDF("vec_id", "centroid_id"),
+      embs.select(col("vec_id"),
+        graft.functions.VectorExprs.nearestCentroid(col("embedding"), cents, ids)))
   }
 }

@@ -89,6 +89,17 @@ class DedupSpec extends SparkSpec {
       docs.select(col("doc_id"), Dedup.simhash(toks)))
   }
 
+  test("jaccardPairs, minhashLshPairs, simhashPairs: no task reports a metric of a collected plan") {
+    val errors = schedulerErrorsUnderGc {
+      (1 to 3).foreach { _ =>
+        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.5).collect()
+        Dedup.minhashLshPairs(docs, "doc_id", "text", minJaccard = 0.5).collect()
+        Dedup.simhashPairs(docs, "doc_id", "text").collect()
+      }
+    }.filter(_.contains("non-existent accumulator"))
+    assert(errors.isEmpty, s"${errors.size} accumulator errors, first: ${errors.take(1)}")
+  }
+
   test("jaccardPairs: stop-shingle cap keeps precision 1 (subset of uncapped)") {
     val full = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxPostings = 1000)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
