@@ -640,7 +640,7 @@ object SparkEntry {
     val mentions = gateMentions(parts)
     val pairTable = graft.kg.NameIndex.postingsPair(
       parts.select(col("p_partkey").as("name_row_id"), col("name_tokens")))
-    val pairDf = pairTable.groupBy("pair").agg(count(lit(1)).as("df"))
+    val pairDf = graft.kg.NameIndex.pairStats(pairTable)
     // production blocking rule over PAIRS: a common pair generates no
     // candidates unless every pair of the mention is common
     val cands = graft.kg.Linker.blockedKeys(

@@ -87,14 +87,8 @@ object TextSetHelper {
     * re-evaluates the hash array per window (O(n²·k)). md5 hex matches
     * Spark's `md5` (and DuckDB's) byte-for-byte. */
   def winnow(s: UTF8String, k: Int, w: Int): ArrayData = {
-    val toks = splitTokens(cleanStr(s))
-    val space = UTF8String.fromString(" ")
-    val shingles: Array[UTF8String] =
-      if (toks.length < k) Array(UTF8String.concatWs(space, toks: _*))
-      else Array.tabulate(toks.length - k + 1)(i =>
-        UTF8String.concatWs(space, toks.slice(i, i + k): _*))
     val md = java.security.MessageDigest.getInstance("MD5")
-    val hs = shingles.map { sh =>
+    val hs = wordShingles(s, k).map { sh =>
       md.reset()
       val d = md.digest(sh.getBytes)
       val hex = new StringBuilder(32)
@@ -118,8 +112,24 @@ object TextSetHelper {
     sortedDistinct(set)
   }
 
-  /** TextStats.shingles: sorted distinct word n-shingles (fewer than n
+  /** Positional word k-shingles of clean_str, in order (fewer than k
     * tokens ⇒ one shingle = the whole cleaned string, even when empty). */
+  private def wordShingles(s: UTF8String, k: Int): Array[UTF8String] = {
+    val toks = splitTokens(cleanStr(s))
+    val space = UTF8String.fromString(" ")
+    if (toks.length < k) Array(UTF8String.concatWs(space, toks: _*))
+    else Array.tabulate(toks.length - k + 1)(i =>
+      UTF8String.concatWs(space, toks.slice(i, i + k): _*))
+  }
+
+  /** TextStats.shingles: sorted distinct word n-shingles (see
+    * [[wordShingles]]). */
+  def shingles(s: UTF8String, n: Int): ArrayData = {
+    val set = new java.util.TreeSet[UTF8String]()
+    wordShingles(s, n).foreach(set.add)
+    sortedDistinct(set)
+  }
+
   /** Merge-scan |A ∩ B| over two sorted distinct UTF8String arrays. */
   def sortedOverlapCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
@@ -133,19 +143,26 @@ object TextSetHelper {
     c
   }
 
-  def shingles(s: UTF8String, n: Int): ArrayData = {
-    val toks = splitTokens(cleanStr(s))
-    val set = new java.util.TreeSet[UTF8String]()
-    if (toks.length < n) {
-      set.add(UTF8String.concatWs(UTF8String.fromString(" "), toks: _*))
-    } else {
-      var i = 0
-      while (i + n <= toks.length) {
-        set.add(UTF8String.concatWs(UTF8String.fromString(" "),
-          toks.slice(i, i + n): _*))
-        i += 1
+  /** The SymSpell delete neighbourhood (public algorithm): `s` and every
+    * variant with up to `d` CODE POINTS deleted. Two strings within
+    * Levenshtein distance d share a key when one side holds deletes up to
+    * d and the other probes with deletes up to d. */
+  def deletes(s: String, d: Int): Set[String] = {
+    var cur = Set(s); var all = Set(s)
+    for (_ <- 1 to d) {
+      cur = cur.flatMap { x =>
+        val cps = x.codePoints().toArray
+        cps.indices.map(i => new String(cps, 0, i) + new String(cps, i + 1, cps.length - i - 1))
       }
+      all ++= cur
     }
+    all
+  }
+
+  /** [[deletes]] as a sorted distinct array. */
+  def deleteSet(s: UTF8String, d: Int): ArrayData = {
+    val set = new java.util.TreeSet[UTF8String]()
+    deletes(s.toString, d).foreach(x => set.add(UTF8String.fromString(x)))
     sortedDistinct(set)
   }
 }
@@ -251,13 +268,14 @@ object SigHelper {
   * derives both the generated code (a call to the object's static
   * forwarder, so the whole-stage-codegen span stays intact) and the
   * interpreted eval from the same declaration. Int parameters are
-  * literals; with `returnNullable = false` a result is null exactly when
-  * an input is null. */
+  * literals except `deleteSet`'s per-row edit budget; with
+  * `returnNullable = false` a result is null exactly when an input is
+  * null. */
 object TextSetExprs {
   private val StringSet = ArrayType(StringType, containsNull = false)
 
-  private def invoke(helper: Class[_], dataType: DataType, method: String,
-                     args: Column*): Column =
+  private[functions] def invoke(helper: Class[_], dataType: DataType, method: String,
+                                args: Column*): Column =
     GraftExpressionBridge.column(StaticInvoke(helper, dataType, method,
       args.map(GraftExpressionBridge.expression), returnNullable = false))
 
@@ -268,6 +286,9 @@ object TextSetExprs {
   def ngramSet(c: Column, n: Int): Column = textSet("ngramSet", c, lit(n))
   def shingles(c: Column, n: Int): Column = textSet("shingles", c, lit(n))
   def winnow(c: Column, k: Int, w: Int): Column = textSet("winnow", c, lit(k), lit(w))
+  /** Sorted distinct delete neighbourhood of `c` with up to `d` code points
+    * removed (see [[TextSetHelper.deletes]]); `d` may vary per row. */
+  def deleteSet(c: Column, d: Column): Column = textSet("deleteSet", c, d)
   /** array<string> → array<long> MinHash signature (see [[SigHelper]]). */
   def minhash(c: Column, numPerms: Int): Column =
     invoke(SigHelper.getClass, ArrayType(LongType, containsNull = false), "minhash",

@@ -31,12 +31,12 @@ case class Mention(surface: String, start: Int, end: Int)
   */
 object DetectMentions {
 
-  val Connectors: Set[String] = Set("of", "de", "la", "the", "and")
+  private val Connectors = Seq("of", "de", "la", "the", "and")
   val MaxTokens = 6
 
   private val CapToken = "[A-Z][A-Za-z0-9'.\\-]*"
   private val RunPattern = java.util.regex.Pattern.compile(
-    s"$CapToken(?:[ ](?:(?:of|de|la|the|and)[ ])?$CapToken)*")
+    s"$CapToken(?:[ ](?:(?:${Connectors.mkString("|")})[ ])?$CapToken)*")
 
   /** Pure scanner — also the single-threaded oracle used by the P/R
     * harness, so pipeline and oracle share one definition. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Similarity, Text}
+import graft.functions.{TextSetExprs, TextSetHelper}
 
 /** Lookup / linking configuration — the parameter surface of
   * `LookupRetriever.search` (`lamapi/retrievers/lookup_retriever.py:13-29`).
@@ -197,42 +198,11 @@ object Linker {
     }
   }
 
-  /** Delete-neighborhood keys of a token: the token itself plus every
-    * variant with up to `maxDeletes` (1 or 2) characters removed —
-    * SymSpell-style blocking (public algorithm): two strings within
-    * Levenshtein distance d share a key when both sides generate deletes
-    * up to d. Used as the short-token fallback where the 3-gram
-    * lower bound is vacuous. */
-  private def deleteKeys(t: Column, maxDeletes: Int): Column = {
-    def del1(s: Column): Column =
-      when(length(s) === 0, array().cast("array<string>")).otherwise(
-        transform(sequence(lit(1), length(s)),
-          i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, length(s)))))
-    val d1 = del1(t)
-    val keys =
-      if (maxDeletes <= 1) concat(array(t), d1)
-      else concat(array(t), d1, flatten(transform(d1, s => del1(s))))
-    array_distinct(keys)
-  }
-
   /** Levenshtein distance in code points, as Spark's `levenshtein`
     * (driver-side verification). */
   private def lev(a: String, b: String): Int = {
     import org.apache.spark.unsafe.types.UTF8String
     UTF8String.fromString(a).levenshteinDistance(UTF8String.fromString(b))
-  }
-
-  /** `s` and every variant with up to `d` code points deleted. */
-  private def deleteSet(s: String, d: Int): Set[String] = {
-    var cur = Set(s); var all = Set(s)
-    for (_ <- 1 to d) {
-      cur = cur.flatMap { x =>
-        val cps = x.codePoints().toArray
-        cps.indices.map(i => new String(cps, 0, i) + new String(cps, i + 1, cps.length - i - 1))
-      }
-      all ++= cur
-    }
-    all
   }
 
   /** Fuzzy token matches — ES's two-phase fuzzy-query model:
@@ -242,7 +212,8 @@ object Linker {
     *  distance, via two complementary blockings:
     *   (a) the 3-gram vocab join with the shared-gram lower-bound prune —
     *       complete whenever max(|a|,|b|) − 2 − 3·d ≥ 1;
-    *   (b) a SymSpell delete-neighborhood join for SHORT pairs
+    *   (b) a SymSpell delete-neighborhood join
+    *       ([[graft.functions.TextSetHelper.deletes]]) for SHORT pairs
     *       (max(|a|,|b|) ≤ 2+3·d, i.e. ≤5 chars at 1 edit / ≤8 at 2),
     *       where a legal fuzzy pair can share zero 3-grams ('abc'→'axc')
     *       and the gram join would silently drop it;
@@ -261,26 +232,25 @@ object Linker {
     *                   are blocked (same policy as the exact path) */
   private def fuzzyTokenMatches(mentionsD: DataFrame, postings: DataFrame,
                                 postings3g: DataFrame, tokenDf: DataFrame,
-                                commonDf: Long): DataFrame = {
-    // the driver-built expansion table is small, so phase 2 broadcasts it;
-    // the hint sits on the join that consumes it
-    val (exps, inDriver) = expandTokens(mentionsD, postings3g, tokenDf, VocabDriverMax)
+                                commonDf: Long): DataFrame =
     // distinct targets × postings unique per (token, name_row_id) ⇒
     // distinct triples
-    fuzzyTargets(mentionsD, if (inDriver) broadcast(exps) else exps, tokenDf, commonDf)
+    fuzzyTargets(mentionsD, postings3g, tokenDf, commonDf)
       .join(postings, Seq("token"))
       .select(col("mention_norm"), col("name_row_id"), col("token"))
-  }
 
   /** Phase 2's distinct (mention_norm, token) targets: every accepted
-    * expansion of each mention token, minus common targets (df > commonDf,
-    * the exact path's blocking policy). Deduplicated here, at the
-    * (mention, target-token) level — a table that is tiny BEFORE the
-    * posting join (tens of thousands of rows) — instead of on the
+    * phase-1 expansion of each mention token, minus common targets
+    * (df > commonDf, the exact path's blocking policy). Deduplicated here,
+    * at the (mention, target-token) level — a table that is tiny BEFORE
+    * the posting join (tens of thousands of rows) — instead of on the
     * millions of post-join triples. */
-  private def fuzzyTargets(mentionsD: DataFrame, expansions: DataFrame,
+  private def fuzzyTargets(mentionsD: DataFrame, postings3g: DataFrame,
                            tokenDf: DataFrame, commonDf: Long): DataFrame = {
-    val rareExpansions = expansions
+    // the driver-built expansion table is small, so it is broadcast; the
+    // hint sits on the join that consumes it
+    val (exps, inDriver) = expandTokens(mentionsD, postings3g, tokenDf, VocabDriverMax)
+    val rareExpansions = (if (inDriver) broadcast(exps) else exps)
       .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
     mentionsD
       .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
@@ -324,13 +294,13 @@ object Linker {
         .as[(String, Int)].collect()
       val dict = scala.collection.mutable.HashMap.empty[String, List[String]]
       vocabArr.foreach { t =>
-        deleteSet(t, 2).foreach(k => dict(k) = t :: dict.getOrElse(k, Nil))
+        TextSetHelper.deletes(t, 2).foreach(k => dict(k) = t :: dict.getOrElse(k, Nil))
       }
       val rows: Seq[(String, String)] = mtoks.toSeq.flatMap { case (m, d) =>
         if (d == 0) Seq.empty[(String, String)]
         else {
           val cands: Seq[String] =
-            deleteSet(m, d).flatMap(k => dict.getOrElse(k, Nil)).toSeq.distinct
+            TextSetHelper.deletes(m, d).flatMap(k => dict.getOrElse(k, Nil)).toSeq.distinct
           cands
             .map(t => (t, lev(m, t)))
             .filter { case (_, l) => l >= 1 && l <= d }
@@ -373,22 +343,19 @@ object Linker {
         greatest(length(col("mtok")), length(col("token"))) - lit(2) - lit(3) * d)
       .select("mtok", "token")
 
-    // (b) delete-neighborhood fallback for short pairs: mtok 3-5 (1 edit,
-    // deletes≤1) joined to vocab tokens ≤5; mtok 6-8 (2 edits, deletes≤2)
-    // to vocab tokens ≤8. Longer pairs are complete under (a).
-    val vocab = postings3g.select("token").distinct()
-    val mShort1 = mvocab.filter(length(col("mtok")) <= 5)
-      .select(col("mtok"), explode(deleteKeys(col("mtok"), 1)).as("k"))
-    val mShort2 = mvocab.filter(length(col("mtok")).between(6, 8))
-      .select(col("mtok"), explode(deleteKeys(col("mtok"), 2)).as("k"))
-    val vShort1 = vocab.filter(length(col("token")) <= 5)
-      .select(col("token"), explode(deleteKeys(col("token"), 1)).as("k"))
-    val vShort2 = vocab.filter(length(col("token")) <= 8)
-      .select(col("token"), explode(deleteKeys(col("token"), 2)).as("k"))
-    val deletePairs =
-      mShort1.join(vShort1, Seq("k")).select("mtok", "token")
-        .union(mShort2.join(vShort2, Seq("k")).select("mtok", "token"))
-        .distinct()
+    // (b) delete-neighborhood fallback for short pairs, by the in-driver
+    // rule: vocab tokens ≤8 keyed by deletes≤2, mention tokens ≤8 probing
+    // with deletes≤AUTO(d). Longer pairs are complete under (a); the extra
+    // candidates this rule reaches are dropped by the levenshtein check.
+    val vShort = postings3g.select("token").distinct()
+      .filter(length(col("token")) <= 8)
+      .select(col("token"), explode(TextSetExprs.deleteSet(col("token"), lit(2))).as("k"))
+    val deletePairs = mvocab.filter(length(col("mtok")) <= 8)
+      .select(col("mtok"), explode(TextSetExprs.deleteSet(col("mtok"),
+        autoFuzzEdits(length(col("mtok"))))).as("k"))
+      .join(vShort, Seq("k"))
+      .select("mtok", "token")
+      .distinct()
 
     val verified = gramPairs.union(deletePairs).distinct()
       .withColumn("lev", levenshtein(col("mtok"), col("token")))
@@ -408,14 +375,14 @@ object Linker {
   /** Fuzzy candidates of the minimum_should_match branch: the expansion →
     * posting join, aggregated to per-(mention, name row) stats (n_f, idf_f)
     * over the distinct fuzzy tokens not in the mention's own token set. */
-  private def fuzzyStats(mentionsD: DataFrame, expansions: DataFrame,
-                         postings: DataFrame, tokenDf: DataFrame,
+  private def fuzzyStats(mentionsD: DataFrame, postings: DataFrame,
+                         postings3g: DataFrame, tokenDf: DataFrame,
                          commonDf: Long, idf: DataFrame): DataFrame = {
     // Self-token filtering runs on the distinct (mention, target-token)
     // targets, before the posting join: postings are unique per (token,
     // name_row), so the (m, n, token) triples have NO duplicates and the
     // per-candidate stats reduce to a plain codegen count/sum.
-    val targets = fuzzyTargets(mentionsD, expansions, tokenDf, commonDf)
+    val targets = fuzzyTargets(mentionsD, postings3g, tokenDf, commonDf)
       .join(mentionsD.select(col("mention_norm"),
           explode(col("mention_tokens")).as("token")),
         Seq("mention_norm", "token"), "left_anti")
@@ -625,17 +592,19 @@ object Linker {
                        minScore: Double, memoDir: String): DataFrame = {
     val key = memoKey(cfg, minScore, indexFingerprint(index.names))
     val memoRaw = readMemo(spark, memoDir)
-    val mentionsD = mentions.select(col("mention_norm"))
-      .filter(col("mention_norm") =!= "").distinct()
+    val mentionsD = distinctMentions(mentions).select(col("mention_norm"))
+    // each table below is read by two plans, so each is checkpointed
+    // eagerly (a lazy checkpoint is materialized by whichever job ends
+    // first; see the `graft.ops.Ann` doc)
     val hits = memoRaw.filter(col("cfg_key") === key)
       .dropDuplicates("mention_norm")
       .join(mentionsD, Seq("mention_norm"), "left_semi")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val missMentions = mentionsD
       .join(hits.select("mention_norm"), Seq("mention_norm"), "left_anti")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val fresh = linkTop1(spark, missMentions, index, cfg, minScore)
-      .localCheckpoint(eager = false) // consumed by the append AND the union
+      .localCheckpoint() // consumed by the append AND the union
     // record no-link outcomes too (qid null) so they also memoize
     missMentions
       .join(fresh, Seq("mention_norm"), "left")
@@ -747,6 +716,23 @@ object Linker {
       if (nMentions <= BroadcastMentionsMaxRows) broadcast(df) else df
     val midMap = mentionsD.select(col("mention_norm"), col("mid"))
 
+    // ONE exchange for the entire scoring chain: `rows` (mention_norm,
+    // name_row_id, statCols…) map to `mid` map-side through the bounded
+    // mention broadcast, and the candidate stream is hash-partitioned by
+    // mid here and never moves again — the per-(mid, name row) aggregation,
+    // the mention joins, the top-limit cut window, the es normalization
+    // window and the final top-1 window all accept hashpartitioning(mid)
+    // (their grouping/partition keys contain it). Each extra exchange of
+    // the 4-5M-row candidate stream costs ~0.4 GB of shuffle write+read
+    // and a stage boundary at 384k pages.
+    def perCandidate(rows: DataFrame, statCols: Seq[String], aggs: Column*): DataFrame =
+      rows
+        .join(mentionsB(midMap), Seq("mention_norm")) // map-side: str → mid
+        .select((Seq("mid", "name_row_id") ++ statCols).map(col): _*)
+        .repartition(col("mid"))
+        .groupBy(col("mid"), col("name_row_id"))
+        .agg(aggs.head, aggs.tail: _*)
+
     // index-side stats, all built once by NameIndex.tables
     val nRows = required(index.nameRowCount, "nameRowCount")
     val tokenDf = required(index.tokenStats, "tokenStats")
@@ -767,13 +753,8 @@ object Linker {
           if (!cfg.fuzzy) exact
           else exact.union(fuzzyTokenMatches(mentionsD, index.postings,
             index.postings3g, tokenDf, commonDf).localCheckpoint(eager = false))
-        matches
-          .join(idf, Seq("token"), "left")
-          .join(mentionsB(midMap), Seq("mention_norm")) // map-side: str → mid
-          .select(col("mid"), col("name_row_id"), col("idf"))
-          .repartition(col("mid"))
-          .groupBy(col("mid"), col("name_row_id"))
-          .agg(count(lit(1)).as("matched_tokens"),
+        perCandidate(matches.join(idf, Seq("token"), "left"), Seq("idf"),
+            count(lit(1)).as("matched_tokens"),
             sum(coalesce(col("idf"), lit(0.0))).as("idf_sum"))
           .join(mentionsB(mentionsD.select(col("mid"), col("mention_norm"))),
             Seq("mid"))
@@ -798,47 +779,23 @@ object Linker {
           tokenDf, commonDf, cfg, index.hotTokens)
           .select(col("mention_norm"), col("name_row_id"))
 
-        val baseCands = pairCands.union(singleCands)
-        val emptyAgg = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "mention_norm string, name_row_id bigint, n_f bigint, idf_f double"))
-        val fuzzAgg =
-          (if (!cfg.fuzzy) emptyAgg
-           else {
-             val exps = fuzzyExpansions(mentionsD, index.postings3g, tokenDf, cfg)
-               .localCheckpoint(eager = false)
-             fuzzyStats(mentionsD, exps, index.postings, tokenDf, commonDf, idf)
-           }).localCheckpoint(eager = false) // overlaps the exact-gen chain
-
-        // ONE exchange for the entire scoring chain: the candidate stream
-        // is hash-partitioned by mention_norm here and never moves again —
-        // the dedup-merge agg below, the mention-tokens join, the
-        // top-limit cut window, the es normalization window, the grams
-        // join and the final top-1 window all accept
-        // hashpartitioning(mention_norm) (their grouping/partition keys
-        // contain it). The pre-r4 shape re-exchanged the 4-5M row
-        // candidate stream three more times — (m,n) for dedup, (m,n)
-        // again for the fuzzy-stats left-outer join, (m) again for the
-        // cut — ~1.1 GB of extra shuffle write+read and 3 extra stage
-        // boundaries at 384k pages.
-        //
-        // The fuzzy stats MERGE rides the dedup aggregation instead of a
-        // join: exact arms carry (n_f=0, idf_f=0), the fuzzy arm carries
-        // its aggregated stats, and max() per (m,n) reproduces the old
-        // left-outer-join-then-coalesce exactly (fuzzAgg is unique per
-        // (m,n), exact arms contribute zeros). Spark plans joins only on
-        // full key equality, so a (m,n) join could never stay in the (m)
-        // partitioning — an aggregation can.
-        val candStats = baseCands
+        // The fuzzy stats MERGE rides the per-candidate aggregation
+        // instead of a join: exact arms carry (n_f=0, idf_f=0), the fuzzy
+        // arm carries its aggregated stats, and max() per (m,n) reproduces
+        // a left-outer-join-then-coalesce exactly (the fuzzy stats are
+        // unique per (m,n), exact arms contribute zeros). Spark plans joins
+        // only on full key equality, so a (m,n) join could never stay in
+        // the (m) partitioning — an aggregation can.
+        val exactStats = pairCands.union(singleCands)
           .select(col("mention_norm"), col("name_row_id"),
             lit(0L).as("n_f"), lit(0.0).as("idf_f"))
-          .unionByName(fuzzAgg)
-          .join(mentionsB(midMap), Seq("mention_norm")) // map-side: str → mid
-          .select(col("mid"), col("name_row_id"), col("n_f"), col("idf_f"))
-          .repartition(col("mid"))
-          .groupBy(col("mid"), col("name_row_id"))
-          .agg(max(col("n_f")).as("n_f"), max(col("idf_f")).as("idf_f"))
+        val rows =
+          if (!cfg.fuzzy) exactStats
+          else exactStats.unionByName(fuzzyStats(mentionsD, index.postings,
+            index.postings3g, tokenDf, commonDf, idf)
+            .localCheckpoint(eager = false)) // overlaps the exact-gen chain
+        val candStats = perCandidate(rows, Seq("n_f", "idf_f"),
+          max(col("n_f")).as("n_f"), max(col("idf_f")).as("idf_f"))
 
         // stats from the token-set intersection (+ fuzzy-only tokens).
         // idf per matched token comes from a per-NAME-ROW token→idf map

@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Triples {
 
-  /** QID total order key: numeric order via (length, value). */
-  private val qidOrd = struct(length(col("qid")).as("l"), col("qid").as("q"))
-
   /** (node, canon) mapping from equivalence edges; nodes not in any edge
     * are implicitly their own canon (handle with left join + coalesce). */
   def canonMap(equivEdges: DataFrame): DataFrame = {

@@ -3,6 +3,7 @@ package graft.core
 import graft.SparkSpec
 import graft.functions.TextSetExprs
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bit-equivalence of the native text-set functions vs the
   * Column-expression definitions they replace, on both the interpreted
@@ -103,6 +104,30 @@ class TextSetExprsSpec extends SparkSpec {
           pairs.select(col("i"), size(array_intersect(f(col("x")), f(col("y"))))),
           pairs.select(col("i"), TextSetExprs.sortedOverlapCount(f(col("x")), f(col("y")))))
       }
+  }
+
+  test("deleteSet ≡ brute-force code-point deletions on both paths") {
+    // random strings over 1-, 2-, 3- and 4-byte characters (a non-BMP
+    // emoji and letter, a combining mark), the empty string included
+    val alphabet = Array("a", "b", " ", "ß", "\u0301", "中", "😀", "𝒳")
+    val rnd = new scala.util.Random(7)
+    val strs = ("" +: Seq.fill(150)(
+      Seq.fill(rnd.nextInt(7))(alphabet(rnd.nextInt(alphabet.length))).mkString)).distinct
+    // every way to drop ≤ d code-point positions, sorted in binary UTF-8
+    // order like array_sort
+    def brute(s: String, d: Int): Seq[String] = {
+      val cps = s.codePoints().toArray
+      (0 to math.min(d, cps.length)).flatMap(cps.indices.combinations).map { drop =>
+        val keep = cps.indices.filterNot(drop.contains).map(cps).toArray
+        new String(keep, 0, keep.length)
+      }.distinct.sortWith((x, y) =>
+        UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)) < 0)
+    }
+    val input = strs.toDF("s")
+    for (d <- 0 to 2) withClue(s"d=$d: ") {
+      assertSameOnBothPaths(strs.map(s => (s, brute(s, d))).toDF("s", "keys"),
+        input.select(col("s"), TextSetExprs.deleteSet(col("s"), lit(d))))
+    }
   }
 
   test("whole-stage codegen keeps the span (no eval fallback in plan)") {

@@ -24,6 +24,18 @@ class LinkerSpec extends SparkSpec {
   private lazy val items = world._1
   private lazy val index = world._2
 
+  /** `fuzzyExpansions` on both phase-1 venues, (in-driver, distributed):
+    * a vocab count > 0 forces the distributed gram + delete joins. */
+  private def expansionVenues(md: org.apache.spark.sql.DataFrame,
+                              p3: org.apache.spark.sql.DataFrame,
+                              tokenDf: org.apache.spark.sql.DataFrame) = {
+    def exps(driverMax: Long) =
+      Linker.fuzzyExpansions(md, p3, tokenDf, LinkerConfig(fuzzy = true),
+        vocabDriverMax = driverMax)
+        .select("mtok", "token").as[(String, String)].collect().toSet
+    (exps(20000L), exps(0L))
+  }
+
   private def mentionsOf(ms: String*) =
     ms.toSeq.toDF("surface")
       .select(graft.core.Text.cleanStr(col("surface")).as("mention_norm"))
@@ -285,6 +297,15 @@ class LinkerSpec extends SparkSpec {
     val found = out.select("mention_norm", "id").as[(String, String)].collect().toSet
     assert(found.contains(("oxk", "Q1")), s"got $found")
     assert(found.contains(("thxonx", "Q2")), s"got $found")
+    // both phase-1 venues: the in-driver SymSpell and the distributed
+    // delete join
+    val (driver, dist) = expansionVenues(
+      Linker.distinctMentions(mentionsOf("Oxk", "Thxonx")), idx2.postings3g, idx2.tokenStats.get)
+    for (pair <- Seq(("oxk", "oak"), ("thxonx", "throne"))) {
+      assert(driver.contains(pair), s"driver: $driver")
+      assert(dist.contains(pair), s"distributed: $dist")
+    }
+    assert(driver == dist, s"paths diverge: $driver vs $dist")
   }
 
   test("forced ids append in REQUESTED order, not id order") {
@@ -326,12 +347,7 @@ class LinkerSpec extends SparkSpec {
     val p3 = NameIndex.postings3g(nm)
     val tokenDf = NameIndex.tokenStats(NameIndex.postings(nm))
     val md = Linker.distinctMentions(mentionsOf("aaaaaaaaab", "bbbbbbccxc", "a𝒳bcd"))
-    val cfg = LinkerConfig(fuzzy = true)
-    def exps(driverMax: Long) =
-      Linker.fuzzyExpansions(md, p3, tokenDf, cfg, vocabDriverMax = driverMax)
-        .select("mtok", "token").as[(String, String)].collect().toSet
-    val driver = exps(20000L)
-    val dist = exps(0L) // vocab count > 0 forces the distributed path
+    val (driver, dist) = expansionVenues(md, p3, tokenDf)
     assert(driver.contains(("aaaaaaaaab", "aaaaaaaaaa")), s"driver: $driver")
     assert(dist.contains(("aaaaaaaaab", "aaaaaaaaaa")), s"distributed: $dist")
     assert(driver.contains(("a𝒳bcd", "abcd")), s"driver: $driver")
@@ -339,7 +355,44 @@ class LinkerSpec extends SparkSpec {
     assert(driver == dist, s"paths diverge: $driver vs $dist")
   }
 
-  test("persisted lookup memo: second run skips generation for memoized mentions") {
+  test("fuzzy expansions on a random vocabulary: driver ≡ distributed (non-BMP)") {
+    // 1,500 tokens of 3-12 code points over an alphabet with a 2-byte and
+    // a non-BMP character; mentions are vocab tokens with 1-2 random edits
+    // or random tokens, so every length class meets both blockings
+    val alphabet = "abcdeø𝒳".codePoints().toArray
+    val rnd = new scala.util.Random(1500)
+    def randomToken(len: Int): String =
+      new String(Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))), 0, len)
+    val vocab = Seq.fill(1500)(randomToken(3 + rnd.nextInt(10))).distinct
+    def mutate(t: String): String = {
+      val cps = t.codePoints().toArray.toBuffer
+      (0 to rnd.nextInt(2)).foreach { _ =>
+        val i = rnd.nextInt(cps.size)
+        rnd.nextInt(3) match {
+          case 0 => cps.remove(i)
+          case 1 => cps.insert(i, alphabet(rnd.nextInt(alphabet.length)))
+          case _ => cps(i) = alphabet(rnd.nextInt(alphabet.length))
+        }
+      }
+      new String(cps.toArray, 0, cps.size)
+    }
+    val mentions = Seq.fill(700)(
+      if (rnd.nextInt(4) == 0) randomToken(3 + rnd.nextInt(10))
+      else mutate(vocab(rnd.nextInt(vocab.size))))
+    val names = vocab.zipWithIndex.toDF("name_clean", "name_row_id")
+      .withColumn("name_tokens", graft.core.Text.tokenSet(col("name_clean")))
+    val p3 = NameIndex.postings3g(names).localCheckpoint()
+    val tokenDf = NameIndex.tokenStats(NameIndex.postings(names)).localCheckpoint()
+    val md = Linker.distinctMentions(mentions.toDF("mention_norm")).localCheckpoint()
+    val (driver, dist) = expansionVenues(md, p3, tokenDf)
+    assert(driver.size > 500, s"too few expansions to compare: ${driver.size}")
+    assert(driver.exists { case (m, t) => m.contains("𝒳") && t.contains("𝒳") })
+    assert(driver == dist,
+      s"driver-only ${(driver -- dist).take(5)}, distributed-only ${(dist -- driver).take(5)}")
+  }
+
+  /** Two memoized runs and one re-run, each under the same memo key. */
+  private def memoRoundTrip(): Unit = {
     val memoDir = java.nio.file.Files.createTempDirectory("linkmemo").toString + "/memo"
     val cfg = LinkerConfig(limit = 20, cutByRelevance = true, computeAmbiguity = false)
     val m1 = mentionsOf("Alderton", "Xqzj Vvkp")
@@ -365,6 +418,15 @@ class LinkerSpec extends SparkSpec {
     val third = Linker.linkTop1Memoized(spark, m2, index, cfg, 0.5, memoDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(third.get("alderton") == first.get("alderton"))
+  }
+
+  test("persisted lookup memo: second run skips generation for memoized mentions") {
+    // the memo tables are each read by two plans; beside a GC loop, a lazy
+    // checkpoint of one shows as "non-existent accumulator" errors (not on
+    // every run, hence 3 repetitions)
+    val errors = schedulerErrorsUnderGc((1 to 3).foreach(_ => memoRoundTrip()))
+      .filter(_.contains("non-existent accumulator"))
+    assert(errors.isEmpty, s"${errors.size} accumulator errors, first: ${errors.take(1)}")
   }
 
   test("memo auto-invalidates when the index content changes") {
