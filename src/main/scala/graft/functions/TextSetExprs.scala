@@ -274,8 +274,8 @@ object SigHelper {
 object TextSetExprs {
   private val StringSet = ArrayType(StringType, containsNull = false)
 
-  private[functions] def invoke(helper: Class[_], dataType: DataType, method: String,
-                                args: Column*): Column =
+  private def invoke(helper: Class[_], dataType: DataType, method: String,
+                     args: Column*): Column =
     GraftExpressionBridge.column(StaticInvoke(helper, dataType, method,
       args.map(GraftExpressionBridge.expression), returnNullable = false))
 

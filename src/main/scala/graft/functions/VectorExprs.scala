@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{IntegerType, ObjectType}
 
@@ -43,16 +44,15 @@ object VectorHelper {
 }
 
 /** array<double> → int nearest-centroid id: one `StaticInvoke` of
-  * [[VectorHelper.nearestCentroid]], declared by `TextSetExprs.invoke`
-  * like every `TextSetExprs` function.
+  * [[VectorHelper.nearestCentroid]], like every `TextSetExprs` function.
   * The centroid and id arrays are object literals, which generated code
   * holds as reference objects, so no row decodes them. */
 object VectorExprs {
   def nearestCentroid(v: Column, centroids: Array[Array[Double]],
-                      ids: Array[Int]): Column = {
-    def obj(value: AnyRef): Column = GraftExpressionBridge.column(
-      Literal(value, ObjectType(value.getClass)))
-    TextSetExprs.invoke(VectorHelper.getClass, IntegerType, "nearestCentroid",
-      v, obj(centroids), obj(ids))
-  }
+                      ids: Array[Int]): Column =
+    GraftExpressionBridge.column(StaticInvoke(VectorHelper.getClass, IntegerType,
+      "nearestCentroid", Seq(GraftExpressionBridge.expression(v),
+        Literal(centroids, ObjectType(classOf[Array[Array[Double]]])),
+        Literal(ids, ObjectType(classOf[Array[Int]]))),
+      returnNullable = false))
 }

@@ -277,24 +277,32 @@ object Linker {
       .select(explode(col("mention_tokens")).as("mtok")).distinct()
       .filter(length(col("mtok")) >= 3)
 
+    // Delete rule of both venues: every token, mention or index, is keyed
+    // by its deletes ≤ AUTO(its own length). Complete for lev(m, v) = e ≤
+    // AUTO(|m|): an alignment with s substitutions, i insertions and r
+    // removals meets at m minus s+r code points (s+r ≤ e) and v minus s+i
+    // (s+i ≤ e ≤ AUTO(|v|) when |v| ≥ |m|; when |v| < |m|, r ≥ 1, so
+    // s+i = 1 only at e = 2, where |v| ≥ |m| − 1 ≥ 5).
+    def autoDeletes(t: Column): Column =
+      TextSetExprs.deleteSet(t, autoFuzzEdits(length(t)))
+
     // ---- phase 1, SMALL-VOCAB fast path: when both vocabularies fit the
     // driver comfortably, the whole term-dictionary expansion runs as an
-    // in-driver SymSpell (delete-dictionary ≤2 over the index vocab,
-    // delete-probes ≤AUTO(d) per mention token — complete for lev ≤ d,
-    // same verified output and cap as the distributed path). This
-    // collapses ~14 vocabulary-scale exchanges into one broadcastable
-    // expansion table; the distributed gram+delete join path below is the
-    // 100 TB shape and takes over past the size guards. ----
+    // in-driver SymSpell (same delete rule, verified output and cap as the
+    // distributed path). This collapses ~14 vocabulary-scale exchanges
+    // into one broadcastable expansion table; the distributed gram+delete
+    // join path below is the 100 TB shape and takes over past the size
+    // guards. ----
     val nVocab = tokenDf.count()
     val nMvocab = if (nVocab <= vocabDriverMax) mvocab.count() else Long.MaxValue
     if (nVocab <= vocabDriverMax && nMvocab <= 10 * vocabDriverMax) {
       import spark.implicits._
-      val vocabArr = tokenDf.select("token").as[String].collect()
-      val mtoks = mvocab.select(col("mtok"), autoFuzzEdits(length(col("mtok"))))
-        .as[(String, Int)].collect()
+      def withEdits(df: DataFrame, c: String): Array[(String, Int)] =
+        df.select(col(c), autoFuzzEdits(length(col(c)))).as[(String, Int)].collect()
+      val mtoks = withEdits(mvocab, "mtok")
       val dict = scala.collection.mutable.HashMap.empty[String, List[String]]
-      vocabArr.foreach { t =>
-        TextSetHelper.deletes(t, 2).foreach(k => dict(k) = t :: dict.getOrElse(k, Nil))
+      withEdits(tokenDf, "token").foreach { case (t, d) =>
+        TextSetHelper.deletes(t, d).foreach(k => dict(k) = t :: dict.getOrElse(k, Nil))
       }
       val rows: Seq[(String, String)] = mtoks.toSeq.flatMap { case (m, d) =>
         if (d == 0) Seq.empty[(String, String)]
@@ -344,15 +352,13 @@ object Linker {
       .select("mtok", "token")
 
     // (b) delete-neighborhood fallback for short pairs, by the in-driver
-    // rule: vocab tokens ≤8 keyed by deletes≤2, mention tokens ≤8 probing
-    // with deletes≤AUTO(d). Longer pairs are complete under (a); the extra
-    // candidates this rule reaches are dropped by the levenshtein check.
+    // rule (`autoDeletes`) on tokens ≤8 of both sides. Longer pairs are
+    // complete under (a).
     val vShort = postings3g.select("token").distinct()
       .filter(length(col("token")) <= 8)
-      .select(col("token"), explode(TextSetExprs.deleteSet(col("token"), lit(2))).as("k"))
+      .select(col("token"), explode(autoDeletes(col("token"))).as("k"))
     val deletePairs = mvocab.filter(length(col("mtok")) <= 8)
-      .select(col("mtok"), explode(TextSetExprs.deleteSet(col("mtok"),
-        autoFuzzEdits(length(col("mtok"))))).as("k"))
+      .select(col("mtok"), explode(autoDeletes(col("mtok"))).as("k"))
       .join(vShort, Seq("k"))
       .select("mtok", "token")
       .distinct()
